@@ -2208,10 +2208,64 @@ def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
 
 
 def test_mor_fused_probe_matches_per_child(spark, tmp_path):
-    """The fused MOR table probe (_mor_probe_frames, r16) returns
-    exactly the per-child overlay probes' rows in every store state:
-    live deltas, post-compact deletion vectors, deltas layered over
-    the DV'd base, and key batches that miss partitions/keys."""
+    """The fused table probe returns exactly the per-child probes' rows
+    in every store state, for both child kinds: MOR children with live
+    deltas, post-compact deletion vectors and deltas layered over the
+    DV'd base; COW children with a deletion vector, an evolved schema
+    and a probe key whose bucket was never written. Every key batch
+    also misses a key and a whole partition."""
+    from parquet_demo_spark.sources.merge_store import ParquetMergeStore
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
+            key=repr,  # evolved rows carry typed NULLs
+        )
+
+    def slow_rows(st, keys):
+        seam = (
+            "_mor_probe_frames"
+            if st.child_store == "mor"
+            else "_cow_probe_frames"
+        )
+        orig = getattr(type(st), seam)
+        setattr(
+            type(st),
+            seam,
+            lambda self, sp, parts, pvb, hit, k: ([], list(hit)),
+        )
+        try:
+            return rows(st.probe(spark, keys))
+        finally:
+            setattr(type(st), seam, orig)
+
+    def check(st, keys, label):
+        fused = rows(st.probe(spark, keys))
+        assert fused == slow_rows(st, keys), label
+        return fused
+
+    def fused_plan(st, keys):
+        # the fused path actually engages: (eras, per-child stragglers)
+        v = st.current_version()
+        parts = st._parts(v)
+        tmap = dict(st._column_types_at(v))
+        cast_keys = keys.select(
+            *[F.col(c).cast(tmap[c]).alias(c) for c in st.keys]
+        ).distinct()
+        seam = (
+            st._mor_probe_frames
+            if st.child_store == "mor"
+            else st._cow_probe_frames
+        )
+        return seam(
+            spark,
+            parts,
+            {p: {0, 1} for p in parts},
+            sorted(parts),
+            cast_keys,
+        )
+
+    # -- MOR children ----------------------------------------------------
     st = _mor_store(tmp_path)
     st.merge(_batch(spark, [("d1", 1), ("d1", 2), ("d2", 1), ("d3", 5)]))
     st.merge(
@@ -2228,57 +2282,79 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
             Row(day="zz", k=1),   # absent partition
         ]
     )
-
-    def slow_rows():
-        orig = type(st)._mor_probe_frames
-        type(st)._mor_probe_frames = (
-            lambda self, sp, parts, pvb, hit, k: ([], list(hit))
-        )
-        try:
-            return _rows(st.probe(spark, keys))
-        finally:
-            type(st)._mor_probe_frames = orig
-
-    def check(label):
-        fused = _rows(st.probe(spark, keys))
-        assert fused == slow_rows(), label
-        return fused
-
-    assert check("live deltas") == [
-        ("d1", 1, 2, "d1/1b"),
-        ("d2", 1, 1, "d2/1"),
+    assert [r[:4] for r in check(st, keys, "live deltas")] == [
+        ("d1", 1, "d1/1b", 2),
+        ("d2", 1, "d2/1", 1),
     ]
-    # fused path actually engages (no child on the slow list)
-    v = st.current_version()
-    parts = {p: e for p, e in st._parts(v).items()}
-    tmap = dict(st._column_types_at(v))
-    cast_keys = keys.select(
-        *[F.col(c).cast(tmap[c]).alias(c) for c in st.keys]
-    ).distinct()
-    frames, slow = st._mor_probe_frames(
-        spark, parts, {p: {0, 1} for p in parts}, sorted(parts), cast_keys
-    )
+    frames, slow = fused_plan(st, keys)
     assert slow == [] and len(frames) == 1
 
     st.compact(spark)
-    check("post-compact (DV state)")
+    check(st, keys, "post-compact (DV state)")
 
     st.merge(
         spark.createDataFrame([Row(day="d2", k=7, v=1, payload="d2/7")])
     )
-    keys2 = keys.unionByName(
-        spark.createDataFrame([Row(day="d2", k=7)])
+    keys2 = keys.unionByName(spark.createDataFrame([Row(day="d2", k=7)]))
+    assert ("d2", 7, "d2/7", 1) in check(st, keys2, "deltas over DV base")
+
+    # -- COW children ----------------------------------------------------
+    st = _store(tmp_path)
+    st.merge(
+        _batch(
+            spark,
+            [("d1", 1), ("d1", 2), ("d2", 1), ("d3", 5), ("d4", 5)],
+        )
     )
-    fused = _rows(st.probe(spark, keys2))
-    orig = type(st)._mor_probe_frames
-    type(st)._mor_probe_frames = (
-        lambda self, sp, parts, pvb, hit, k: ([], list(hit))
+    # d1 carries a deletion vector; d2 alone evolves (gains 'extra')
+    st.delete_where(
+        spark,
+        (F.col("day") == "d1") & (F.col("k") == 2),
+        deletion_vectors=True,
     )
-    try:
-        assert fused == _rows(st.probe(spark, keys2))
-    finally:
-        type(st)._mor_probe_frames = orig
-    assert ("d2", 7, 1, "d2/7") in fused
+    st.merge(
+        spark.createDataFrame(
+            [Row(day="d2", k=9, v=1, payload="wide", extra=7)]
+        ),
+        allow_schema_evolution=True,
+    )
+    # d3 and d4 hold one key each, so one of their two buckets was
+    # never written: pick probe keys that route to the empty bucket
+    bucket = ParquetMergeStore.bucket_expr(st.keys, st.num_buckets)
+    bids = {
+        (r.day, r.k): r.b
+        for r in spark.createDataFrame(
+            [Row(day=d, k=k) for d in ("d3", "d4") for k in range(5, 40)]
+        )
+        .select("day", "k", bucket.alias("b"))
+        .collect()
+    }
+    unwritten = {
+        d: next(k for k in range(6, 40) if bids[(d, k)] != bids[(d, 5)])
+        for d in ("d3", "d4")
+    }
+    keys = spark.createDataFrame(
+        [
+            Row(day="d1", k=1),
+            Row(day="d1", k=2),   # DV-deleted
+            Row(day="d2", k=1),
+            Row(day="d2", k=9),   # evolved child's new row
+            Row(day="d3", k=5),
+            Row(day="d3", k=unwritten["d3"]),  # bucket never written
+            Row(day="d4", k=unwritten["d4"]),  # no hit bucket written
+            Row(day="zz", k=1),   # absent partition
+        ]
+    )
+    got = check(st, keys, "COW: DV, evolved, unwritten bucket")
+    # columns sort as (day, extra, k, payload, v)
+    assert set(got) == {
+        ("d1", None, 1, "d1/1", 1),
+        ("d2", None, 1, "d2/1", 1),
+        ("d2", 7, 9, "wide", 1),
+        ("d3", None, 5, "d3/5", 1),
+    }
+    frames, slow = fused_plan(st, keys)
+    assert slow == ["d2"] and len(frames) == 1
 
 
 def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
