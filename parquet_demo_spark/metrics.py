@@ -4,11 +4,8 @@ The reference prints per-batch conversion/write ms and rows/sec with a
 median/avg/peak summary (`ingest_parquet_to_mongo_bulk.py:36-42,183-209`
 — whose summary actually crashes on missing imports, `_bulk.py:204-209`;
 and `generate_big_parquet.py:88-98`). Here the same shape comes from the
-engine itself: a SparkListener accumulates per-stage task counts, records
-and bytes, and ``measure()`` wraps any action with wall-clock + rows/sec.
-
-On a cluster the same listener aggregates across executors for free —
-it observes the scheduler, not the workers.
+engine itself: ``measure()`` wraps any action with wall-clock +
+rows/sec, and :class:`RunMetrics` summarizes per-batch seconds.
 """
 
 from __future__ import annotations
@@ -17,8 +14,6 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from statistics import mean, median  # the import _bulk.py:204 forgot
-
-from pyspark.sql import SparkSession
 
 
 @dataclass
@@ -66,26 +61,3 @@ def measure(label: str, count_rows=None):
         m.wall_sec = time.perf_counter() - t0
         if count_rows is not None:
             m.rows = count_rows() if callable(count_rows) else int(count_rows)
-
-
-class StageMetricsCollector:
-    """Scheduler-side stage metrics via a py4j SparkListener bridge.
-
-    Collects (stage_id, num_tasks, records_read/written) per completed
-    stage — the distributed analogue of the reference's per-batch
-    prints. Uses the status tracker + stage info available through the
-    public REST/status API rather than a custom JVM listener class
-    (which would need a jar)."""
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._tracker = spark.sparkContext.statusTracker()
-        self._seen_before: set[int] = set(self._tracker.getActiveStageIds())
-
-    def snapshot(self) -> dict:
-        tracker = self._spark.sparkContext.statusTracker()
-        jobs = tracker.getJobIdsForGroup(None) or []
-        return {
-            "n_jobs_in_group": len(jobs),
-            "active_stages": list(tracker.getActiveStageIds()),
-        }

@@ -794,26 +794,12 @@ class ParquetMergeStore:
         entries = self._dv_entries(version)
         if buckets is not None:
             entries = {b: v for b, v in entries.items() if b in buckets}
-        if not entries:
-            return df
-        dv = (
-            spark.read.parquet(
-                *[
-                    os.path.join(self.root, rel)
-                    for rel in sorted(set(entries.values()))
-                ]
-            )
-            .select(
-                *[F.col(k).alias(f"__dv_{k}") for k in self.keys]
-            )
-            .dropDuplicates()
+        return anti_join_dv(
+            spark,
+            df,
+            self.keys,
+            [os.path.join(self.root, rel) for rel in entries.values()],
         )
-        cond = [
-            F.col(k).eqNullSafe(F.col(f"__dv_{k}")) for k in self.keys
-        ]
-        # vectors are small by design (deleted PKs, not rows):
-        # broadcast so the anti-join never shuffles the data side
-        return df.join(F.broadcast(dv), cond, "left_anti")
 
     def _dv_count(self, version: int) -> int:
         """Footer row count over the version's DV entries (each DV dir
@@ -2706,7 +2692,7 @@ class ParquetMergeStore:
                 )
                 for i, r in enumerate(rel)
             ]
-            # balanced fold (the _delta_frame law: O(n log n) driver
+            # balanced fold (the resolve_deltas law: O(n log n) driver
             # analysis, not a left-deep chain) with missing columns
             # null-filled — a branch evolution between feed-bearing
             # commits leaves earlier feeds narrower; the head commit's
@@ -3783,6 +3769,32 @@ class ParquetMergeStore:
                     shutil.rmtree(os.path.join(dv_root, d))
                     removed.append(rel)
         return removed
+
+
+def anti_join_dv(
+    spark: SparkSession,
+    df: DataFrame,
+    keys: tuple[str, ...] | list[str],
+    dv_dirs: list[str],
+    key_ddl: str | None = None,
+) -> DataFrame:
+    """Drop the rows of ``df`` whose PK appears in any deletion-vector
+    dir of ``dv_dirs`` (each holds deleted PKs). Null-safe on the PK,
+    matching the store's PK semantics everywhere else. ``key_ddl``
+    is an explicit schema for the DV scan, which skips its
+    footer-inference job."""
+    if not dv_dirs:
+        return df
+    reader = spark.read.schema(key_ddl) if key_ddl else spark.read
+    dv = (
+        reader.parquet(*sorted(set(dv_dirs)))
+        .select(*[F.col(k).alias(f"__dv_{k}") for k in keys])
+        .dropDuplicates()
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"__dv_{k}")) for k in keys]
+    # vectors are small by design (deleted PKs, not rows): broadcast
+    # so the anti-join never shuffles the data side
+    return df.join(F.broadcast(dv), cond, "left_anti")
 
 
 def admission_watermarks(

@@ -707,51 +707,19 @@ class MergeOnReadStore:
             [], ", ".join(f"`{c}` {types[c]}" for c in cols)
         )
 
-    def _delta_frame(
-        self, spark: SparkSession, dirs: list[str] | None = None
-    ) -> DataFrame | None:
-        """Live delta rows, each tagged with its commit's POSITION in
-        the log (``__seq``): the committed dirs order IS the total
-        write order, so sequence comes from the log — never from data
-        files (a CAS-losing rebased append would otherwise carry a
-        stale embedded number). ``dirs`` pins an explicit snapshot of
-        the log (compact() MUST pass the same list it later truncates
-        — a second read would race a concurrent append). The union is
-        a balanced tree (O(D log D) driver analysis, not the O(D²)
-        left-deep chain), bounded by compaction cadence either way."""
-        if dirs is None:
-            dirs = self._log()["dirs"]
-        if not dirs:
-            return None
-        frames = []
-        for i, d in enumerate(dirs):
-            df = spark.read.parquet(os.path.join(self._deltas_root, d))
-            if _SEQ in df.columns:  # legacy log: embedded commit seq
-                df = df.drop(_SEQ)
-            frames.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
-        while len(frames) > 1:
-            frames = [
-                frames[i].unionByName(frames[i + 1])
-                if i + 1 < len(frames)
-                else frames[i]
-                for i in range(0, len(frames), 2)
-            ]
-        return frames[0]
-
     def _resolved(
         self, spark: SparkSession, dirs: list[str] | None = None
     ) -> DataFrame | None:
-        """Latest delta action per PK: highest __seq wins (PKs are
-        unique within a batch after the commit-side collapse, so the
-        sequence alone is a total order per key)."""
-        dl = self._delta_frame(spark, dirs)
-        if dl is None:
-            return None
-        w = Window.partitionBy(*self.keys).orderBy(F.col(_SEQ).desc())
-        return (
-            dl.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", _SEQ)
+        """Latest delta action per PK over the live log, or over
+        ``dirs`` — an explicit snapshot of it (compact() MUST pass the
+        same list it later truncates: a second read would race a
+        concurrent append)."""
+        if dirs is None:
+            dirs = self._log()["dirs"]
+        return resolve_deltas(
+            spark,
+            self.keys,
+            [os.path.join(self._deltas_root, d) for d in dirs],
         )
 
     def _overlay(
@@ -1155,13 +1123,8 @@ class MergeOnReadStore:
             # touch resolves at e_to from these dirs (they carry the
             # highest log positions), so they are exactly the
             # candidate set and its post-state
-            dl = self._delta_frame(spark, new_dirs)
-            w = Window.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
-            latest = (
-                dl.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", _SEQ)
-                .localCheckpoint(eager=False)
+            latest = self._resolved(spark, new_dirs).localCheckpoint(
+                eager=False
             )
             pre = self.probe(spark, latest.select(*keys), version=e_from)
             types = self._null_fill_types(s_to, cols)
@@ -1445,6 +1408,53 @@ class MergeOnReadStore:
                 os.unlink(os.path.join(self._entries_root, name))
                 removed.append(os.path.join("_log", name))
         return removed
+
+
+def resolve_deltas(
+    spark: SparkSession,
+    keys: tuple[str, ...] | list[str],
+    paths: list[str],
+    ddl: str | None = None,
+) -> DataFrame | None:
+    """Last-write-wins fold of delta dirs: the newest action per PK,
+    ``None`` when ``paths`` is empty.
+
+    ``paths`` lists delta dirs in log order. Each row is tagged with
+    its dir's POSITION (``__seq``): the committed dirs order IS the
+    total write order, so sequence comes from the log — never from
+    data files (a CAS-losing rebased append would otherwise carry a
+    stale embedded number). PKs are unique within a batch after the
+    commit-side collapse, so the position alone is a total order per
+    key. Dirs of several stores may be folded at once when no PK
+    spans two of them (the partitioned table's children: partition
+    columns are PK columns); positions then only need to rise with
+    log order within each store. ``ddl`` is an explicit delta schema
+    (columns plus ``__op``), which skips each dir's footer-inference
+    job. The union is a balanced tree (O(D log D) driver analysis,
+    not the O(D²) left-deep chain)."""
+    if not paths:
+        return None
+    reader = spark.read.schema(ddl) if ddl else spark.read
+    frames = []
+    for i, p in enumerate(paths):
+        df = reader.parquet(p)
+        if _SEQ in df.columns:  # legacy log: embedded commit seq
+            df = df.drop(_SEQ)
+        frames.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
+    while len(frames) > 1:
+        frames = [
+            frames[i].unionByName(frames[i + 1])
+            if i + 1 < len(frames)
+            else frames[i]
+            for i in range(0, len(frames), 2)
+        ]
+    w = Window.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
+    return (
+        frames[0]
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", _SEQ)
+    )
 
 
 def commit_upserts_and_tombstones(

@@ -78,6 +78,8 @@ from pyspark.sql import functions as F
 from parquet_demo_spark.sources.merge_store import (
     ConcurrentWriteConflict,
     ParquetMergeStore,
+    _load_manifest,
+    anti_join_dv,
 )
 from parquet_demo_spark.tuning import scoped_store_op
 
@@ -277,8 +279,6 @@ class PartitionedParquetMergeStore:
         return os.path.join(self.root, f"v{version:05d}", "manifest.json")
 
     def _read_manifest(self, version: int) -> dict:
-        from parquet_demo_spark.sources.merge_store import _load_manifest
-
         try:
             # same immutable-manifest cache as the child store: global
             # manifests carry per-partition stats + bloom rollups (tens
@@ -1753,15 +1753,13 @@ class PartitionedParquetMergeStore:
                 spark, version=parts[any_p]["version"], where=where
             )
             return self._aligned_union(spark, [df], version).limit(0)
-        if where is None and self.child_store == "cow":
-            era_frames, slow = self._era_scan_frames(spark, parts, selected)
-        elif where is None and self.child_store == "mor":
-            era_frames, slow = self._mor_era_frames(spark, parts, selected)
+        if where is None:
+            eras, slow = self._era_plan(parts, selected)
         else:
             # value-pruned reads go through each child's own min/max/
             # bloom bucket pruning (and usually touch few children)
-            era_frames, slow = [], list(selected)
-        dfs = era_frames + [
+            eras, slow = [], list(selected)
+        dfs = [self._fused_frame(spark, era) for era in eras] + [
             self._child(parts[pval]["dir"]).read(
                 spark, version=parts[pval]["version"], where=where
             )
@@ -1769,282 +1767,181 @@ class PartitionedParquetMergeStore:
         ]
         return self._aligned_union(spark, dfs, version)
 
-    def _era_scan_frames(
-        self, spark: SparkSession, parts: dict, selected: list
-    ) -> tuple[list[DataFrame], list]:
-        """ONE multi-path parquet scan per common SCHEMA ERA instead of
-        one DataFrame per child (round-10 VERDICT #7: the per-child
-        plan build made a 1k-partition ``read()`` driver-bound).
+    def _child_layout(self, entry: dict, buckets=None) -> dict | None:
+        """What bare multi-dir scans need to reproduce one pinned
+        child's ``read()`` — or, with ``buckets``, its probe of those
+        buckets: ``{"cols", "types", "base", "dv", "deltas"}``, i.e.
+        the column order, the recorded {column: type} map (``None``
+        when incomplete: scans then infer their schema), the base
+        bucket dirs, the deletion-vector (DV) dirs, and the delta dirs
+        in log order. A COW child is a MOR child with no deltas whose
+        base is the child itself.
 
-        A child is era-eligible when its pinned manifest lets a bare
-        multi-dir scan reproduce its ``read()`` exactly: never evolved
-        (every referenced dir carries the declared schema — the same
-        condition the child's own no-mergeSchema fast path keys on),
-        no live deletion vectors (nothing to anti-join), and all its
-        dirs still on disk (a vacuumed child routes to the slow path
-        for the descriptive expired-version error). Eligible children
-        group by their manifest column tuple — the schema era — and
-        each era becomes one ``spark.read.parquet(*dirs)``; stragglers
-        return as the slow list for ordinary per-child reads. Driver
-        cost: one manifest JSON per child (metadata), one plan per ERA
-        (eras are ~1-2 in practice), instead of one analyzed plan per
-        child."""
-        from parquet_demo_spark.sources.merge_store import _load_manifest
-
-        eras: dict[tuple, list[str]] = {}
-        slow: list = []
-        for pval in selected:
-            e = parts[pval]
-            croot = os.path.join(self.root, e["dir"])
+        ``None`` marks a straggler, left to the per-child path: an
+        unreadable or vacuumed pin (the per-child path raises the
+        descriptive expired-version error), a missing column record,
+        an evolved base (its bucket dirs may lack columns — the
+        child's mergeSchema path), a base whose columns differ from
+        the log entry's, any referenced dir gone from disk, or nothing
+        to scan — an emptied child, or a probe none of whose buckets
+        was ever written, where the per-child path supplies the typed
+        empty frame."""
+        croot = os.path.join(self.root, entry["dir"])
+        cols = types = None
+        deltas: list[str] = []
+        base_root, bv = croot, int(entry["version"])
+        if self.child_store == "mor":
+            try:
+                state = self._child(entry["dir"])._entry_state(bv)
+            except (ValueError, KeyError, FileNotFoundError):
+                return None
+            cols, types = state.get("columns"), state.get("types")
+            if not cols:
+                return None
+            deltas = [
+                os.path.join(croot, "deltas", d)
+                for d in state.get("dirs") or []
+            ]
+            base_root = os.path.join(croot, "base")
+            bv = state.get("base_version")
+        base: list[str] = []
+        dv: list[str] = []
+        if bv is not None:
             try:
                 m = _load_manifest(
-                    os.path.join(
-                        croot,
-                        f"v{int(e['version']):05d}",
-                        "manifest.json",
-                    )
+                    os.path.join(base_root, f"v{int(bv):05d}", "manifest.json")
                 )
             except (FileNotFoundError, ValueError):
-                slow.append(pval)
-                continue
-            if m.get("evolved", True) or any(
-                v for v in m.get("dv", {}).values()
+                return None
+            mcols = list(m.get("columns") or [])
+            if (
+                m.get("evolved", True)
+                or not mcols
+                or (cols is not None and mcols != list(cols))
             ):
-                slow.append(pval)
-                continue
-            dirs = sorted(
-                {
-                    os.path.join(croot, p)
-                    for p in m["bucket_paths"].values()
-                }
-            )
-            if not all(os.path.isdir(d) for d in dirs):
-                slow.append(pval)
-                continue
-            eras.setdefault(tuple(m["columns"]), []).extend(dirs)
-        frames = [
-            spark.read.parquet(*sorted(dirs)).select(*cols)
-            for cols, dirs in sorted(eras.items())
-        ]
-        return frames, slow
+                return None
+            cols = mcols
 
-    def _mor_era_frames(
-        self, spark: SparkSession, parts: dict, selected: list
-    ) -> tuple[list[DataFrame], list]:
-        """ONE fused base-scan + delta-fold per common SCHEMA ERA for
-        MOR children (round 16, guide §2.4): the per-child ``read()``
-        plans one delta window + one anti-join PER CHILD, so a table
-        read over P partitions carries ~2P exchanges and AQE
-        materializes each as its own job (q201 census: 22-32 jobs per
-        table read at 13 children). When every selected child's pinned
-        state can be reproduced from bare scans, the whole table
-        resolves with ONE window + ONE anti-join instead.
+            def _dirs(rels: dict) -> list[str]:
+                return sorted(
+                    {
+                        os.path.join(base_root, rel)
+                        for b, rel in rels.items()
+                        if rel and (buckets is None or int(b) in buckets)
+                    }
+                )
 
-        Correctness rests on two store invariants: (a) every partition
-        column is a PK column (module docstring), so windowing /
-        anti-joining on the FULL PK never mixes rows across children —
-        in particular each child's delta ``__seq`` only ever orders
-        rows within that child's own key space; (b) commit_delta
-        validates every appended batch against the child's recorded
-        column/type map, so all live delta dirs of a child share the
-        entry's column set.
+            base, dv = _dirs(m["bucket_paths"]), _dirs(m.get("dv", {}))
+        if not (base or deltas) or not all(
+            os.path.isdir(d) for d in (*base, *dv, *deltas)
+        ):
+            return None
+        if types is not None and any(c not in types for c in cols):
+            types = None
+        return {
+            "cols": list(cols),
+            "types": types,
+            "base": base,
+            "dv": dv,
+            "deltas": deltas,
+        }
 
-        A child is fused-eligible when its entry state records a
-        column set, all its delta dirs are on disk, and its base (if
-        any) is reproducible by a bare multi-dir scan: manifest not
-        evolved, manifest columns equal to the entry's, bucket dirs on
-        disk. Live deletion vectors FUSE rather than disqualify (they
-        are the post-publish steady state here — a table compact folds
-        branch tombstones into base DVs on every child): DV dirs hold
-        deleted PKs, and because partition columns are PK columns, one
-        era-wide multi-dir DV scan anti-joined (null-safe, broadcast —
-        the per-child ``_apply_dv`` contract) against the era's base
-        scan is exactly the per-child filter. Anything else — including
-        a fully emptied child, whose slow read supplies the typed
-        empty frame — takes the ordinary per-child read via ``slow``.
-        Eligible children group by their column tuple; each era plans
-        one fused frame."""
-        from parquet_demo_spark.sources.merge_store import _load_manifest
-        from parquet_demo_spark.sources.mor_store import _OP, _SEQ
+    def _era_plan(
+        self, parts: dict, selected: list, buckets: dict | None = None
+    ) -> tuple[list[dict], list]:
+        """Group the fusable children among ``selected`` by SCHEMA ERA
+        (column order and recorded types) and return ``(eras,
+        stragglers)``. An era is ``{"cols", "types", "layouts": {pval:
+        layout}}`` (see :meth:`_child_layout`); stragglers take the
+        per-child path. ``buckets`` ({pval: bucket ids}) restricts each
+        child to a probe's routed buckets.
 
+        Driver cost is one manifest or log-entry JSON per child
+        (metadata) and, downstream, one plan per era — eras are ~1-2 in
+        practice — instead of one analyzed plan per child (round-10
+        VERDICT #7: the per-child plan build made a 1k-partition
+        ``read()`` driver-bound)."""
         eras: dict[tuple, dict] = {}
-        slow: list = []
+        stragglers: list = []
         for pval in selected:
-            e = parts[pval]
-            croot = os.path.join(self.root, e["dir"])
-            try:
-                child = self._child(e["dir"])
-                state = child._entry_state(int(e["version"]))
-            except (ValueError, KeyError, FileNotFoundError):
-                slow.append(pval)
+            lay = self._child_layout(
+                parts[pval], None if buckets is None else buckets[pval]
+            )
+            if lay is None:
+                stragglers.append(pval)
                 continue
-            cols = state.get("columns")
-            delta_dirs = list(state.get("dirs") or [])
-            if not cols:
-                slow.append(pval)
-                continue
-            delta_paths = [
-                os.path.join(croot, "deltas", d) for d in delta_dirs
-            ]
-            if not all(os.path.isdir(p) for p in delta_paths):
-                slow.append(pval)
-                continue
-            bv = state.get("base_version")
-            base_dirs: list[str] = []
-            if bv is not None:
-                try:
-                    m = _load_manifest(
-                        os.path.join(
-                            croot,
-                            "base",
-                            f"v{int(bv):05d}",
-                            "manifest.json",
-                        )
-                    )
-                except (FileNotFoundError, ValueError):
-                    slow.append(pval)
-                    continue
-                if (
-                    m.get("evolved", True)
-                    or list(m.get("columns") or []) != list(cols)
-                ):
-                    slow.append(pval)
-                    continue
-                base_dirs = sorted(
-                    {
-                        os.path.join(croot, "base", p)
-                        for p in m["bucket_paths"].values()
-                    }
-                )
-                dv_dirs = sorted(
-                    {
-                        os.path.join(croot, "base", rel)
-                        for rel in m.get("dv", {}).values()
-                        if rel
-                    }
-                )
-                if not all(
-                    os.path.isdir(d) for d in (*base_dirs, *dv_dirs)
-                ):
-                    slow.append(pval)
-                    continue
-            else:
-                dv_dirs = []
-            if not base_dirs and not delta_paths:
-                # emptied child: its slow read returns the typed empty
-                # frame (or raises for an unborn store) — preserve that
-                slow.append(pval)
-                continue
-            # the entry's recorded column/type map lets every scan of
-            # this era pass an explicit schema — skipping a
-            # footer-inference driver job PER read.parquet call (a
-            # multi-commit backfill pays dozens of them). A child
-            # without a usable type record downgrades the whole era to
-            # inferred reads (None), never to a wrong schema.
-            types = state.get("types")
-            if types is not None and (
-                any(c not in types for c in cols)
-                or any(k not in types for k in self.keys)
-            ):
-                types = None
-            era = eras.setdefault(
+            cols, types = lay["cols"], lay["types"]
+            era_key = (
                 tuple(cols),
-                {"base": [], "delta": [], "dv": [], "types": types},
+                None if types is None else tuple(types[c] for c in cols),
             )
-            era["base"].extend(base_dirs)
-            era["dv"].extend(dv_dirs)
-            era["delta"].extend(enumerate(delta_paths))
+            eras.setdefault(
+                era_key, {"cols": cols, "types": types, "layouts": {}}
+            )["layouts"][pval] = lay
+        return list(eras.values()), stragglers
+
+    def _fused_frame(
+        self, spark: SparkSession, era: dict, keys: DataFrame | None = None
+    ) -> DataFrame:
+        """One era's children as ONE plan: a multi-dir base scan minus
+        one broadcast DV anti-join, overlaid by one last-write-wins
+        delta fold; a probe's ``keys`` add semi-joins on the full PK.
+        The per-child plans carry one window and one anti-join PER
+        CHILD, and AQE materializes each exchange as its own job
+        (q201 census: 21 -> 5 jobs per table read at 13 children).
+
+        Sound because every partition column is a PK column (module
+        docstring): the fold's window, the DV anti-join and the
+        semi-joins are all keyed on the full PK, so they never match
+        rows across children, and each child's delta positions only
+        order rows within its own key space. ``commit_delta``
+        validates every appended batch against the child's recorded
+        column/type map, so a child's live delta dirs share its
+        columns. With a recorded type map every scan passes an
+        explicit schema, which skips one footer-inference driver job
+        per scanned path."""
+        from parquet_demo_spark.sources.mor_store import (
+            _OP,
+            resolve_deltas,
+        )
+
+        cols, types, pk = era["cols"], era["types"], list(self.keys)
+        lays = list(era["layouts"].values())
+
+        def ddl(names: list[str]) -> str | None:
             if types is None:
-                era["types"] = None
-        frames: list[DataFrame] = []
-        for cols_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
-            cols = list(cols_t)
-            types = grp["types"]
+                return None
+            return ", ".join(f"`{c}` {types[c]}" for c in names)
 
-            def _reader(ddl: str | None):
-                return spark.read.schema(ddl) if ddl else spark.read
-
-            row_ddl = (
-                ", ".join(f"`{c}` {types[c]}" for c in cols)
-                if types
-                else None
+        row_ddl = ddl(cols)
+        base = None
+        base_dirs = sorted({d for lay in lays for d in lay["base"]})
+        if base_dirs:
+            reader = spark.read.schema(row_ddl) if row_ddl else spark.read
+            base = anti_join_dv(
+                spark,
+                reader.parquet(*base_dirs).select(*cols),
+                pk,
+                [d for lay in lays for d in lay["dv"]],
+                ddl(pk),
             )
-            base = (
-                _reader(row_ddl)
-                .parquet(*sorted(grp["base"]))
-                .select(*cols)
-                if grp["base"]
-                else None
-            )
-            if base is not None and grp["dv"]:
-                key_ddl = (
-                    ", ".join(
-                        f"`{k}` {types[k]}" for k in self.keys
-                    )
-                    if types
-                    else None
-                )
-                dv = (
-                    _reader(key_ddl)
-                    .parquet(*sorted(set(grp["dv"])))
-                    .select(
-                        *[
-                            F.col(k).alias(f"__dv_{k}")
-                            for k in self.keys
-                        ]
-                    )
-                    .dropDuplicates()
-                )
-                cond = [
-                    F.col(k).eqNullSafe(F.col(f"__dv_{k}"))
-                    for k in self.keys
-                ]
-                base = base.join(F.broadcast(dv), cond, "left_anti")
-            if not grp["delta"]:
-                if base is not None:
-                    frames.append(base)
-                continue
-            # balanced union of per-dir frames, each tagged with its
-            # position in ITS OWN child's log (the LWW order within a
-            # key space — cross-child positions never compare because
-            # the window keys contain the partition columns). With a
-            # recorded type map the per-dir reads carry the explicit
-            # delta schema (cols + op), so a legacy embedded __seq is
-            # simply not read — same effect as the drop below.
-            delta_ddl = (
-                f"{row_ddl}, `{_OP}` string" if row_ddl else None
-            )
-            fr = []
-            for i, p in grp["delta"]:
-                df = _reader(delta_ddl).parquet(p)
-                if _SEQ in df.columns:  # legacy log: embedded seq
-                    df = df.drop(_SEQ)
-                fr.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
-            while len(fr) > 1:
-                fr = [
-                    fr[i].unionByName(fr[i + 1])
-                    if i + 1 < len(fr)
-                    else fr[i]
-                    for i in range(0, len(fr), 2)
-                ]
-            dl = fr[0]
-            from pyspark.sql import Window as _W
-
-            w = _W.partitionBy(*self.keys).orderBy(F.col(_SEQ).desc())
-            latest = (
-                dl.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", _SEQ)
-            )
-            ups = latest.filter(F.col(_OP) == "u").select(*cols)
-            if base is None:
-                frames.append(ups)
-            else:
-                keep = base.join(
-                    latest.select(*self.keys), list(self.keys), "left_anti"
-                )
-                frames.append(keep.select(*cols).unionByName(ups))
-        return frames, slow
+            if keys is not None:
+                base = base.join(keys, pk, "left_semi")
+        latest = resolve_deltas(
+            spark,
+            pk,
+            [p for lay in lays for p in lay["deltas"]],
+            None if row_ddl is None else f"{row_ddl}, `{_OP}` string",
+        )
+        if latest is None:
+            return base
+        if keys is not None:
+            latest = latest.join(keys, pk, "left_semi")
+        ups = latest.filter(F.col(_OP) == "u").select(*cols)
+        if base is None:
+            return ups
+        keep = base.join(latest.select(*pk), pk, "left_anti")
+        return keep.select(*cols).unionByName(ups)
 
     def _select(
         self, parts: dict[str, dict], partitions: tuple | dict | None
@@ -2214,9 +2111,11 @@ class PartitionedParquetMergeStore:
         within each child only the keys' buckets. ONE driver job
         computes the distinct (partition, bucket) pairs for the whole
         key batch (metadata-sized: <= touched partitions x num_buckets
-        rows); each touched child is then probed with its pre-computed
-        bucket slice, so a K-partition probe costs O(1) driver jobs
-        instead of K+1 sequential per-child collects (VERDICT r9 #5).
+        rows); the touched children's routed bucket dirs are then
+        scanned by one fused plan per schema era (a straggler child is
+        probed with its pre-computed bucket slice), so a K-partition
+        probe costs O(1) driver jobs instead of K+1 sequential
+        per-child collects (VERDICT r9 #5).
         Children absent from the manifest are no-ops; results align to
         the table schema (typed-null backfill across any evolution
         boundary). At 100 TB: a thousand-key probe touches a handful
@@ -2300,18 +2199,11 @@ class PartitionedParquetMergeStore:
         pcol = F.concat_ws(
             _SEP, *[F.col(c).cast("string") for c in self.partition_cols]
         )
-        if self.child_store == "mor":
-            # fused overlay probe (round 16): one base scan + one
-            # delta fold + one semi-join for ALL era-eligible hit
-            # children instead of a per-child overlay plan each
-            frames, slow = self._mor_probe_frames(
-                spark, parts, pv_buckets, hit, keys
-            )
-        else:
-            frames, slow = self._cow_probe_frames(
-                spark, parts, pv_buckets, hit, keys
-            )
-        dfs = frames + [
+        # one fused scan + semi-join per era over the routed
+        # (partition, bucket) dirs only: per-child bucket pruning is
+        # preserved exactly
+        eras, slow = self._era_plan(parts, hit, pv_buckets)
+        dfs = [self._fused_frame(spark, era, keys) for era in eras] + [
             self._child(parts[pv]["dir"]).probe(
                 spark,
                 keys.filter(pcol == pv),
@@ -2321,298 +2213,6 @@ class PartitionedParquetMergeStore:
             for pv in slow
         ]
         return self._aligned_union(spark, dfs, v)
-
-    def _cow_probe_frames(
-        self,
-        spark: SparkSession,
-        parts: dict,
-        pv_buckets: dict,
-        hit: list,
-        keys: DataFrame,
-    ) -> tuple[list[DataFrame], list]:
-        """ONE fused bucket scan + semi-join per schema era for COW
-        children (round 16 — the probe twin of :meth:`_era_scan_frames`
-        and :meth:`_mor_probe_frames`): the per-child probe plans a
-        scan + DV filter + semi-join PER HIT CHILD, so a key batch
-        touching P partitions carries ~P-2P exchanges (q174 census:
-        43 jobs per probe at 13 children). Fused, the hit children's
-        hit BUCKET dirs scan once per era, their hit buckets' deletion
-        vectors anti-join once, and one semi-join on the FULL PK —
-        which contains the partition columns, so keys route to their
-        own child's rows by construction — replaces the per-child
-        joins. Per-child bucket pruning is preserved exactly (only the
-        routed (partition, bucket) dirs are read). A child is
-        fuse-eligible when its pinned manifest is un-evolved with the
-        era's columns and its hit bucket/DV dirs are on disk; anything
-        else — including a child none of whose hit buckets was ever
-        written, whose per-child probe supplies the schema-only empty
-        frame — returns in ``slow`` for the ordinary per-child probe.
-        """
-        eras: dict[tuple, dict] = {}
-        slow: list = []
-        for pv in hit:
-            e = parts[pv]
-            croot = os.path.join(self.root, e["dir"])
-            child = self._child(e["dir"])
-            v_c = int(e["version"])
-            try:
-                m = child._read_manifest(v_c)
-            except (FileNotFoundError, ValueError):
-                slow.append(pv)
-                continue
-            cols = list(m.get("columns") or [])
-            if not cols or m.get("evolved", True):
-                slow.append(pv)
-                continue
-            bpaths = {int(k): p for k, p in m["bucket_paths"].items()}
-            wanted = set(pv_buckets[pv])
-            hit_b = sorted(b for b in wanted if b in bpaths)
-            if not hit_b:
-                # no hit bucket written in this child: the per-child
-                # probe supplies the schema-only empty frame
-                slow.append(pv)
-                continue
-            dirs = sorted(
-                {os.path.join(croot, bpaths[b]) for b in hit_b}
-            )
-            dv_dirs = sorted(
-                {
-                    os.path.join(croot, p)
-                    for k, p in m.get("dv", {}).items()
-                    if p and int(k) in wanted
-                }
-            )
-            if not all(os.path.isdir(d) for d in (*dirs, *dv_dirs)):
-                slow.append(pv)
-                continue
-            era = eras.setdefault(tuple(cols), {"dirs": [], "dv": []})
-            era["dirs"].extend(dirs)
-            era["dv"].extend(dv_dirs)
-        frames: list[DataFrame] = []
-        key_list = list(self.keys)
-        for cols_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
-            cols = list(cols_t)
-            df = spark.read.parquet(*sorted(set(grp["dirs"]))).select(
-                *cols
-            )
-            if grp["dv"]:
-                dv = (
-                    spark.read.parquet(*sorted(set(grp["dv"])))
-                    .select(
-                        *[
-                            F.col(k).alias(f"__dv_{k}")
-                            for k in key_list
-                        ]
-                    )
-                    .dropDuplicates()
-                )
-                cond = [
-                    F.col(k).eqNullSafe(F.col(f"__dv_{k}"))
-                    for k in key_list
-                ]
-                df = df.join(F.broadcast(dv), cond, "left_anti")
-            frames.append(df.join(keys, key_list, "left_semi"))
-        return frames, slow
-
-    def _mor_probe_frames(
-        self,
-        spark: SparkSession,
-        parts: dict,
-        pv_buckets: dict,
-        hit: list,
-        keys: DataFrame,
-    ) -> tuple[list[DataFrame], list]:
-        """ONE fused overlay probe per schema era for MOR children
-        (round 16 — the probe twin of :meth:`_mor_era_frames`): the
-        per-child :meth:`MergeOnReadStore.probe` plans a delta fold +
-        base probe + anti-join PER CHILD, so a table probe whose key
-        batch touches P partitions carries ~2P exchanges (q198's CDC
-        pre-state: 13 children ⇒ ~27 AQE stage jobs). Fused, the hit
-        children's pinned delta dirs fold in one window and their hit
-        BUCKET dirs scan once, with the probe's semi-join keyed on the
-        full PK — partition columns are PK columns, so keys route to
-        their own child's rows by construction and no per-child key
-        slicing is needed.
-
-        Per-child bucket pruning is preserved exactly: only the
-        (partition, bucket) pairs the table-level routing computed are
-        scanned, and only those buckets' deletion vectors anti-join
-        (extra DV keys would be harmless — a PK's bucket is a function
-        of the PK — but cost I/O). Every scan passes an explicit
-        schema built from the entry's recorded column/type map, so the
-        fused probe also skips the per-directory footer-inference
-        driver jobs the per-child plans paid. A child is fuse-eligible
-        when its entry records columns AND types, its delta dirs are
-        on disk, and its base (if any) is un-evolved with the entry's
-        columns and its hit bucket/DV dirs on disk; anything else —
-        including an emptied child, whose per-child probe supplies the
-        typed empty frame / descriptive error — returns in ``slow``.
-        """
-        from parquet_demo_spark.sources.merge_store import _load_manifest
-        from parquet_demo_spark.sources.mor_store import _OP, _SEQ
-
-        eras: dict[tuple, dict] = {}
-        slow: list = []
-        for pv in hit:
-            e = parts[pv]
-            croot = os.path.join(self.root, e["dir"])
-            child = self._child(e["dir"])
-            try:
-                state = child._entry_state(int(e["version"]))
-            except (ValueError, KeyError, FileNotFoundError):
-                slow.append(pv)
-                continue
-            cols = state.get("columns")
-            types = state.get("types")
-            if (
-                not cols
-                or not types
-                or any(c not in types for c in cols)
-                or any(k not in types for k in self.keys)
-            ):
-                slow.append(pv)
-                continue
-            delta_paths = [
-                os.path.join(croot, "deltas", d)
-                for d in (state.get("dirs") or [])
-            ]
-            if not all(os.path.isdir(p) for p in delta_paths):
-                slow.append(pv)
-                continue
-            bv = state.get("base_version")
-            base_dirs: list[str] = []
-            dv_dirs: list[str] = []
-            if bv is not None:
-                try:
-                    m = _load_manifest(
-                        os.path.join(
-                            croot,
-                            "base",
-                            f"v{int(bv):05d}",
-                            "manifest.json",
-                        )
-                    )
-                except (FileNotFoundError, ValueError):
-                    slow.append(pv)
-                    continue
-                if (
-                    m.get("evolved", True)
-                    or list(m.get("columns") or []) != list(cols)
-                ):
-                    slow.append(pv)
-                    continue
-                bpaths = {
-                    int(k): p for k, p in m["bucket_paths"].items()
-                }
-                wanted = set(pv_buckets[pv])
-                base_dirs = sorted(
-                    {
-                        os.path.join(croot, "base", bpaths[b])
-                        for b in wanted
-                        if b in bpaths
-                    }
-                )
-                dv_dirs = sorted(
-                    {
-                        os.path.join(croot, "base", p)
-                        for k, p in m.get("dv", {}).items()
-                        if p and int(k) in wanted
-                    }
-                )
-                if not all(
-                    os.path.isdir(d) for d in (*base_dirs, *dv_dirs)
-                ):
-                    slow.append(pv)
-                    continue
-            if not base_dirs and not delta_paths:
-                # emptied child (or no hit bucket written): the
-                # per-child probe supplies the typed empty frame
-                slow.append(pv)
-                continue
-            era = eras.setdefault(
-                (
-                    tuple(cols),
-                    tuple(sorted((c, types[c]) for c in cols)),
-                ),
-                {"base": [], "dv": [], "delta": [], "types": types},
-            )
-            era["base"].extend(base_dirs)
-            era["dv"].extend(dv_dirs)
-            era["delta"].extend(enumerate(delta_paths))
-        frames: list[DataFrame] = []
-        key_list = list(self.keys)
-        for (cols_t, _), grp in sorted(
-            eras.items(), key=lambda kv: kv[0]
-        ):
-            cols = list(cols_t)
-            types = grp["types"]
-            ddl = ", ".join(f"`{c}` {types[c]}" for c in cols)
-            base = (
-                spark.read.schema(ddl)
-                .parquet(*sorted(set(grp["base"])))
-                .select(*cols)
-                if grp["base"]
-                else None
-            )
-            if base is not None and grp["dv"]:
-                key_ddl = ", ".join(
-                    f"`{k}` {types[k]}" for k in key_list
-                )
-                dv = (
-                    spark.read.schema(key_ddl)
-                    .parquet(*sorted(set(grp["dv"])))
-                    .select(
-                        *[
-                            F.col(k).alias(f"__dv_{k}")
-                            for k in key_list
-                        ]
-                    )
-                    .dropDuplicates()
-                )
-                cond = [
-                    F.col(k).eqNullSafe(F.col(f"__dv_{k}"))
-                    for k in key_list
-                ]
-                base = base.join(F.broadcast(dv), cond, "left_anti")
-            if base is not None:
-                base = base.join(keys, key_list, "left_semi")
-            if not grp["delta"]:
-                if base is not None:
-                    frames.append(base)
-                continue
-            delta_ddl = f"{ddl}, `{_OP}` string"
-            fr = [
-                spark.read.schema(delta_ddl)
-                .parquet(p)
-                .withColumn(_SEQ, F.lit(i).cast("bigint"))
-                for i, p in grp["delta"]
-            ]
-            while len(fr) > 1:
-                fr = [
-                    fr[i].unionByName(fr[i + 1])
-                    if i + 1 < len(fr)
-                    else fr[i]
-                    for i in range(0, len(fr), 2)
-                ]
-            from pyspark.sql import Window as _W
-
-            w = _W.partitionBy(*key_list).orderBy(F.col(_SEQ).desc())
-            latest = (
-                fr[0]
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", _SEQ)
-                .join(keys, key_list, "left_semi")
-            )
-            ups = latest.filter(F.col(_OP) == "u").select(*cols)
-            if base is None:
-                frames.append(ups)
-            else:
-                keep = base.join(
-                    latest.select(*key_list), key_list, "left_anti"
-                )
-                frames.append(keep.select(*cols).unionByName(ups))
-        return frames, slow
 
     def count_rows(
         self,
@@ -2643,15 +2243,19 @@ class PartitionedParquetMergeStore:
         """Net row changes between two global versions, Delta-CDF-tagged.
 
         Per partition present in both AT THE SAME CHILD DIR: the
-        child's ``changes_between`` over its recorded versions
-        (O(changed buckets)). A partition only in ``v_to`` contributes
-        its full snapshot as inserts; one only in ``v_from`` — i.e.
-        dropped, the retention path — contributes its old snapshot as
-        deletes; present in both but at DIFFERENT dirs (dropped and
-        later re-created — a new epoch) nets the old snapshot as
-        deletes plus the new one as inserts. Downstream consumers see
-        retention as ordinary CDC delete rows without the drop itself
-        having touched any data file.
+        child's diff over its recorded versions (O(changed buckets) for
+        COW children, O(appended deltas) for MOR children). The
+        children whose diff can be fused — :meth:`_era_plan` at
+        ``v_to``, with the table's columns at both endpoints — diff in
+        ONE plan (:meth:`_snapshot_diff` / :meth:`_log_diff`); the rest
+        run the child's own ``changes_between``. A partition only in
+        ``v_to`` contributes its full snapshot as inserts; one only in
+        ``v_from`` — i.e. dropped, the retention path — contributes its
+        old snapshot as deletes; present in both but at DIFFERENT dirs
+        (dropped and later re-created — a new epoch) nets the old
+        snapshot as deletes plus the new one as inserts. Downstream
+        consumers see retention as ordinary CDC delete rows without the
+        drop itself having touched any data file.
         """
         from parquet_demo_spark.sources.merge_store import changes_between
 
@@ -2666,26 +2270,12 @@ class PartitionedParquetMergeStore:
             )
 
         outs = []
-        mor_candidates: list = []
-        cow_candidates: list = []
+        changed: list = []
         for pval in sorted(set(p_from) | set(p_to)):
             a, b = p_from.get(pval), p_to.get(pval)
             if a and b and a["dir"] == b["dir"]:
                 if a["version"] != b["version"]:
-                    child = self._child(a["dir"])
-                    if self.child_store == "mor":
-                        # the MOR child's own log-entry diff — O(Δ)
-                        # on the append-only spans every table
-                        # merge/delete commits (VERDICT r12 #2).
-                        # Candidates collect first: when every changed
-                        # child's span is fast-diffable in the same
-                        # schema era, ONE fused plan replaces the
-                        # per-child diffs (round 16 — see
-                        # _mor_fused_cdc); stragglers fall back to the
-                        # per-child diff below.
-                        mor_candidates.append((pval, child, a, b))
-                    else:
-                        cow_candidates.append((pval, child, a, b))
+                    changed.append(pval)
             elif a and b:  # drop + re-create: different epoch dirs
                 outs.append(_snap(a, "delete"))
                 outs.append(_snap(b, "insert"))
@@ -2693,18 +2283,42 @@ class PartitionedParquetMergeStore:
                 outs.append(_snap(b, "insert"))
             else:
                 outs.append(_snap(a, "delete"))
-        if mor_candidates:
-            outs.extend(
-                self._mor_fused_cdc(
-                    spark, mor_candidates, v_from, v_to, include_preimages
+        if changed:
+            cols = list(self._columns_at(v_to))
+            # an evolution inside the span leaves pre-states that need
+            # per-child null backfill: only same-schema children fuse
+            uniform = cols == list(self._columns_at(v_from))
+            eras, slow = self._era_plan(p_to, changed)
+            fusable: list = []
+            for era in eras:
+                (fusable if uniform and era["cols"] == cols else slow).extend(
+                    era["layouts"]
                 )
-            )
-        if cow_candidates:
-            outs.extend(
-                self._cow_fused_cdc(
-                    spark, cow_candidates, v_from, v_to, include_preimages
+            if self.child_store == "mor":
+                fused, rest = self._log_diff(
+                    spark, p_from, p_to, fusable, cols, v_from,
+                    include_preimages,
                 )
-            )
+            else:
+                fused, rest = self._snapshot_diff(
+                    spark, p_from, p_to, fusable, cols, include_preimages
+                )
+            if fused is not None:
+                outs.append(fused)
+            for pval in sorted(slow + rest):
+                child = self._child(p_from[pval]["dir"])
+                vf = int(p_from[pval]["version"])
+                vt = int(p_to[pval]["version"])
+                outs.append(
+                    child.changes_between(
+                        spark, vf, vt, include_preimages=include_preimages
+                    )
+                    if self.child_store == "mor"
+                    else changes_between(
+                        child, spark, vf, vt,
+                        include_preimages=include_preimages,
+                    )
+                )
         if not outs:
             any_p = sorted(p_from or p_to)[0]
             entry = (p_from or p_to)[any_p]
@@ -2725,345 +2339,188 @@ class PartitionedParquetMergeStore:
             spark, outs, wide, extra_cols=("_change_type",)
         )
 
-    def _cow_fused_cdc(
+    def _snapshot_diff(
         self,
         spark: SparkSession,
-        candidates: list,
-        v_from: int,
-        v_to: int,
+        p_from: dict,
+        p_to: dict,
+        pvals: list,
+        cols: list[str],
         include_preimages: bool,
-    ) -> list[DataFrame]:
-        """Fuse the changed COW children's manifest-pruned snapshot
-        diffs into ONE global plan (round 16, guide §2.4 — the COW
-        twin of :meth:`_mor_fused_cdc`): the per-child
-        :func:`~parquet_demo_spark.sources.merge_store.changes_between`
-        plans two changed-bucket scans, a presence read and a
-        classification join PER CHILD, so a table CDC over P changed
-        partitions carries ~2-3P exchanges (q159 census: 30 jobs at
-        13 children). Fused, the OLD sides, NEW sides and presence
-        reads of all eligible children each scan once, and one
-        shared-law classification emits the feed.
+    ) -> tuple[DataFrame | None, list]:
+        """The COW diff law for the fusable changed children, as ONE
+        plan; returns ``(frame or None, stragglers)``.
 
-        Sound for the same reason as every fusion here: partition
-        columns are PK columns, so the classification and
-        delete-presence joins — keyed on the full PK, null-safe —
-        never match rows across children. The per-child bucket
-        pruning is preserved exactly (only manifest-changed bucket
-        dirs are read, per side, per child). A child is fuse-eligible
-        when both endpoint manifests are un-evolved with the TABLE's
-        (uniform) columns, its bucket count is unchanged inside the
-        span (no rebucket — old keys then hash to their own
-        changed_old ids under v_to, so the presence read needs no
-        per-child collect), and the referenced dirs are on disk;
-        anything else falls back to the per-child diff. Deletion
-        vectors fuse: each side anti-joins the union of its
-        children's relevant DV dirs, the per-child ``_apply_dv``
-        contract era-wide.
+        The per-child :func:`~parquet_demo_spark.sources.merge_store.
+        changes_between` plans two changed-bucket scans, a presence
+        read and a classification join PER CHILD, so a table CDC over
+        P changed partitions carries ~2-3P exchanges (q159 census: 30
+        jobs at 13 children). Here the OLD sides, NEW sides and
+        presence reads of all the children each scan once, minus
+        their DV anti-join, and one shared-law classification emits
+        the feed. Only manifest-changed bucket dirs are read, per side,
+        per child. Sound for the :meth:`_fused_frame` reason: every
+        join is keyed on the full PK. A child additionally needs its
+        ``v_from`` layout in the table's columns and an unchanged
+        bucket count inside the span (no rebucket — old keys then hash
+        to their own changed bucket ids under ``v_to``, so the presence
+        read needs no per-child collect); otherwise it is a straggler.
         """
         from parquet_demo_spark.sources.cdc import classify_changes
-        from parquet_demo_spark.sources.merge_store import (
-            changes_between,
-        )
 
-        cols = list(self._columns_at(v_to))
-        keys = list(self.keys)
-        uniform = cols == list(self._columns_at(v_from))
-
-        grp = {
-            "new": [],
-            "old": [],
-            "pres": [],
-            "dv_new": [],
-            "dv_old": [],
-            "dv_pres": [],
+        pk = list(self.keys)
+        sides: dict[str, list[str]] = {
+            s: [] for s in ("new", "old", "pres", "dv_new", "dv_old", "dv_pres")
         }
-        fallback: list[DataFrame] = []
-        any_fused = False
-        for pval, child, a, b in candidates:
-            vf, vt = int(a["version"]), int(b["version"])
-            eligible = uniform
-            if eligible:
-                try:
-                    mf = child._read_manifest(vf)
-                    mt = child._read_manifest(vt)
-                except (FileNotFoundError, ValueError):
-                    eligible = False
-                else:
-                    eligible = (
-                        not mf.get("evolved", True)
-                        and not mt.get("evolved", True)
-                        and list(mf.get("columns") or []) == cols
-                        and list(mt.get("columns") or []) == cols
-                        and mf.get("num_buckets", child.num_buckets)
-                        == mt.get("num_buckets", child.num_buckets)
-                    )
-            if eligible:
-                old_paths = child._bucket_paths(vf)
-                new_paths = child._bucket_paths(vt)
-                dv_f = child._dv_entries(vf)
-                dv_t = child._dv_entries(vt)
-                changed = sorted(
-                    bid
-                    for bid, p in new_paths.items()
-                    if old_paths.get(bid) != p
-                    or dv_f.get(bid) != dv_t.get(bid)
-                )
-                changed_old = sorted(
-                    bid
-                    for bid, p in old_paths.items()
-                    if new_paths.get(bid) != p
-                    or dv_f.get(bid) != dv_t.get(bid)
-                )
-                croot = os.path.join(self.root, a["dir"])
+        slow: list = []
+        for pval in pvals:
+            child = self._child(p_from[pval]["dir"])
+            vf = int(p_from[pval]["version"])
+            vt = int(p_to[pval]["version"])
+            la = self._child_layout(p_from[pval])
+            if (
+                la is None
+                or la["cols"] != cols
+                or child._read_manifest(vf).get("num_buckets")
+                != child._read_manifest(vt).get("num_buckets")
+            ):
+                slow.append(pval)
+                continue
+            old_paths = child._bucket_paths(vf)
+            new_paths = child._bucket_paths(vt)
+            dv_f, dv_t = child._dv_entries(vf), child._dv_entries(vt)
+            changed = {
+                bid
+                for bid, p in new_paths.items()
+                if old_paths.get(bid) != p or dv_f.get(bid) != dv_t.get(bid)
+            }
+            changed_old = {
+                bid
+                for bid, p in old_paths.items()
+                if new_paths.get(bid) != p or dv_f.get(bid) != dv_t.get(bid)
+            }
+            for side, rels, bids in (
+                ("new", new_paths, changed),
+                ("old", old_paths, changed_old),
+                ("pres", new_paths, changed_old),
+                ("dv_new", dv_t, changed),
+                ("dv_old", dv_f, changed_old),
+                ("dv_pres", dv_t, changed_old),
+            ):
+                sides[side] += [
+                    os.path.join(child.root, rel)
+                    for bid, rel in rels.items()
+                    if rel and bid in bids
+                ]
+        if not (sides["new"] or sides["old"]):
+            # version bumps with no bucket/DV change emit nothing —
+            # the same rows as the per-child limit(0)
+            return None, slow
 
-                def _dirs(paths, bids):
-                    return [
-                        os.path.join(croot, paths[bid])
-                        for bid in bids
-                        if bid in paths
-                    ]
-
-                add = {
-                    "new": _dirs(new_paths, changed),
-                    "old": _dirs(old_paths, changed_old),
-                    "pres": _dirs(new_paths, changed_old),
-                    "dv_new": [
-                        os.path.join(croot, p)
-                        for bid, p in dv_t.items()
-                        if p and bid in set(changed)
-                    ],
-                    "dv_old": [
-                        os.path.join(croot, p)
-                        for bid, p in dv_f.items()
-                        if p and bid in set(changed_old)
-                    ],
-                    "dv_pres": [
-                        os.path.join(croot, p)
-                        for bid, p in dv_t.items()
-                        if p and bid in set(changed_old)
-                    ],
-                }
-                if all(
-                    os.path.isdir(d) for ds in add.values() for d in ds
-                ):
-                    if changed or changed_old:
-                        for k2, ds in add.items():
-                            grp[k2].extend(ds)
-                        any_fused = True
-                    # a version bump with no bucket/DV change emits
-                    # nothing — same rows as the per-child limit(0)
-                    continue
-                eligible = False
-            fallback.append(
-                changes_between(
-                    child,
-                    spark,
-                    vf,
-                    vt,
-                    include_preimages=include_preimages,
-                )
-            )
-        if not any_fused:
-            return fallback
-
-        key_list = keys
-
-        def _dv_filter(df: DataFrame, dv_dirs: list[str]) -> DataFrame:
-            if df is None or not dv_dirs:
-                return df
-            dv = (
-                spark.read.parquet(*sorted(set(dv_dirs)))
-                .select(
-                    *[F.col(k).alias(f"__dv_{k}") for k in key_list]
-                )
-                .dropDuplicates()
-            )
-            cond = [
-                F.col(k).eqNullSafe(F.col(f"__dv_{k}"))
-                for k in key_list
-            ]
-            return df.join(F.broadcast(dv), cond, "left_anti")
-
-        def _scan(dirs: list[str], dv_key: str) -> DataFrame | None:
-            if not dirs:
+        def _scan(side: str) -> DataFrame | None:
+            if not sides[side]:
                 return None
-            df = spark.read.parquet(*sorted(set(dirs))).select(*cols)
-            return _dv_filter(df, grp[dv_key])
+            df = spark.read.parquet(*sorted(set(sides[side]))).select(*cols)
+            return anti_join_dv(spark, df, pk, sides[f"dv_{side}"])
 
-        new = _scan(grp["new"], "dv_new")
-        old = _scan(grp["old"], "dv_old")
+        new, old = _scan("new"), _scan("old")
         if old is None:
-            fallback.append(
-                classify_changes(
-                    None, new, None, cols, key_list, include_preimages
-                )
+            return (
+                classify_changes(None, new, None, cols, pk, include_preimages),
+                slow,
             )
-            return fallback
-        presence = _scan(grp["pres"], "dv_pres")
+        presence = _scan("pres")
         if presence is None:
             gone = old
         else:
-            pres_keys = presence.select(
-                *[F.col(k).alias(f"__new_{k}") for k in key_list]
-            )
             gone = old.join(
-                pres_keys,
-                [
-                    F.col(k).eqNullSafe(F.col(f"__new_{k}"))
-                    for k in key_list
-                ],
+                presence.select(*[F.col(k).alias(f"__new_{k}") for k in pk]),
+                [F.col(k).eqNullSafe(F.col(f"__new_{k}")) for k in pk],
                 "left_anti",
             )
         if new is None:
-            fallback.append(
+            return (
                 classify_changes(
-                    None,
-                    old.limit(0),
-                    gone,
-                    cols,
-                    key_list,
-                    include_preimages,
-                )
+                    None, old.limit(0), gone, cols, pk, include_preimages
+                ),
+                slow,
             )
-        else:
-            fallback.append(
-                classify_changes(
-                    old, new, gone, cols, key_list, include_preimages
-                )
-            )
-        return fallback
+        return (
+            classify_changes(old, new, gone, cols, pk, include_preimages),
+            slow,
+        )
 
-    def _mor_fused_cdc(
+    def _log_diff(
         self,
         spark: SparkSession,
-        candidates: list,
+        p_from: dict,
+        p_to: dict,
+        pvals: list,
+        cols: list[str],
         v_from: int,
-        v_to: int,
         include_preimages: bool,
-    ) -> list[DataFrame]:
-        """Fuse the changed MOR children's O(Δ) log diffs into ONE
-        global plan (round 16, guide §2.4 — the CDC twin of
-        :meth:`_mor_era_frames`): the per-child diff plans one delta
-        fold + one bucket-probe + one classification join PER CHILD,
-        and the child-level probe additionally pays a bucket-id
-        collect job per child, so a table CDC read over P changed
-        partitions costs ~4-5P jobs (q198 census: 60 jobs at 13
-        children). Fused, the appended delta dirs of ALL eligible
-        children fold in one window, the pre-state resolves through
-        ONE table-level :meth:`probe` (single pair-collect for the
-        whole batch), and one shared-law classification emits the
-        feed.
+    ) -> tuple[DataFrame | None, list]:
+        """The MOR diff law for the fusable changed children, as ONE
+        plan; returns ``(frame or None, stragglers)``.
 
-        Correctness rests on the same two invariants as the fused
-        read: partition columns are PK columns, so the global delta
-        fold's window and the classification join — both keyed on the
-        FULL PK — never mix rows across children (each child's
-        ``__seq`` only orders rows within its own key space), and
-        ``commit_delta`` validates every appended batch against the
-        child's recorded column/type map. A child is fuse-eligible
-        when its span is fast-diffable (:meth:`MergeOnReadStore.
-        _span_append_dirs` — appends/compacts only), its entry records
-        the SAME column set as the table schema at both endpoints (no
-        evolution inside the span — the pre-state then needs no
-        per-child null backfill), and its appended dirs are on disk.
-        Ineligible children keep the per-child diff via the returned
-        fallback frames; children whose span appended nothing
-        contribute no rows either way and are skipped outright.
+        The per-child diff plans one delta fold, one bucket probe and
+        one classification join PER CHILD, and each child probe pays
+        its own bucket-id collect, so a table CDC over P changed
+        partitions costs ~4-5P jobs (q198 census: 60 jobs at 13
+        children). Here the span's appended delta dirs of all the
+        children fold at once, their pre-state resolves through ONE
+        table-level :meth:`probe` of ``v_from`` (a single pair collect
+        for the whole batch), and one shared-law classification emits
+        the feed. Sound for the :meth:`_fused_frame` reason: the fold
+        and the joins are keyed on the full PK. A child additionally
+        needs a fast-diffable span (:meth:`MergeOnReadStore.
+        _span_append_dirs` — appends and compacts only) whose appended
+        dirs are still on disk; otherwise it is a straggler. A span
+        that appended nothing contributes no rows either way.
         """
         from parquet_demo_spark.sources.mor_store import (
             _OP,
-            _SEQ,
             MergeOnReadStore,
+            resolve_deltas,
         )
 
-        cols = list(self._columns_at(v_to))
-        keys = list(self.keys)
-        uniform = cols == list(self._columns_at(v_from))
-
-        fused_paths: list[list[str]] = []
-        fallback: list[DataFrame] = []
-        for pval, child, a, b in candidates:
-            e_from, e_to = int(a["version"]), int(b["version"])
-            eligible = uniform
-            paths: list[str] = []
-            if eligible:
-                try:
-                    s_from = child._entry_state(e_from)
-                    s_to = child._entry_state(e_to)
-                except (ValueError, KeyError, FileNotFoundError):
-                    eligible = False
-                else:
-                    nd = child._span_append_dirs(e_from, e_to, s_from)
-                    c_cols = s_to.get("columns")
-                    if nd is None or list(c_cols or []) != cols:
-                        eligible = False
-                    else:
-                        paths = [
-                            os.path.join(child._deltas_root, d)
-                            for d in nd
-                        ]
-                        if not all(os.path.isdir(p) for p in paths):
-                            eligible = False
-            if not eligible:
-                fallback.append(
-                    child.changes_between(
-                        spark,
-                        e_from,
-                        e_to,
-                        include_preimages=include_preimages,
-                    )
+        pk = list(self.keys)
+        paths: list[str] = []
+        slow: list = []
+        for pval in pvals:
+            child = self._child(p_from[pval]["dir"])
+            try:
+                span = child._span_append_dirs(
+                    int(p_from[pval]["version"]), int(p_to[pval]["version"])
                 )
-            elif paths:
-                fused_paths.append(paths)
-        if not fused_paths:
-            return fallback
-        # one balanced union over every child's appended dirs, each
-        # tagged with its position in ITS OWN child's log (the same
-        # per-dir seq law as _mor_era_frames — cross-child positions
-        # never compare because the window keys contain the partition
-        # columns)
-        fr: list[DataFrame] = []
-        for paths in fused_paths:
-            for i, p in enumerate(paths):
-                df = spark.read.parquet(p)
-                if _SEQ in df.columns:  # legacy log: embedded seq
-                    df = df.drop(_SEQ)
-                fr.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
-        while len(fr) > 1:
-            fr = [
-                fr[i].unionByName(fr[i + 1])
-                if i + 1 < len(fr)
-                else fr[i]
-                for i in range(0, len(fr), 2)
+            except (ValueError, KeyError, FileNotFoundError):
+                span = None
+            span_paths = [
+                os.path.join(child._deltas_root, d) for d in span or []
             ]
-        from pyspark.sql import Window as _W
-
-        w = _W.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
-        latest = (
-            fr[0]
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", _SEQ)
-            # the table probe's pair collect materializes the fold
-            # once; classification reuses it (the child-level
-            # fast path's own lazy-checkpoint law)
-            .localCheckpoint(eager=False)
+            if span is None or not all(os.path.isdir(p) for p in span_paths):
+                slow.append(pval)
+            else:
+                paths += span_paths
+        if not paths:
+            return None, slow
+        # the table probe's pair collect materializes the fold once;
+        # classification reuses it (the child-level fast path's own
+        # lazy-checkpoint law)
+        latest = resolve_deltas(spark, pk, paths).localCheckpoint(
+            eager=False
         )
-        # pre-state: ONE bucket-pruned table probe of the v_from
-        # snapshot for every candidate key across all fused children —
-        # the per-child probes' bucket collects collapse into the
-        # table probe's single pair job
-        pre = self.probe(
-            spark, latest.select(*keys), version=v_from
-        ).select(*cols)
+        pre = self.probe(spark, latest.select(*pk), version=v_from).select(
+            *cols
+        )
         post_u = latest.filter(F.col(_OP) == "u").select(*cols)
-        post_d = latest.filter(F.col(_OP) == "d").select(*keys)
-        fallback.append(
+        post_d = latest.filter(F.col(_OP) == "d").select(*pk)
+        return (
             MergeOnReadStore._cdc_emit(
-                pre, post_u, post_d, cols, keys, include_preimages
-            )
+                pre, post_u, post_d, cols, pk, include_preimages
+            ),
+            slow,
         )
-        return fallback
 
     # -- maintenance --------------------------------------------------------
 

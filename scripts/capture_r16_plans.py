@@ -124,14 +124,14 @@ def main() -> None:
     from pyspark.sql import functions as FF
 
     store.merge(ev.filter(FF.col("event_id") % 11 == 0))
-    fused = PartitionedParquetMergeStore._mor_era_frames
-    PartitionedParquetMergeStore._mor_era_frames = (
-        lambda self, sp, parts, selected: ([], list(selected))
+    fused = PartitionedParquetMergeStore._era_plan
+    PartitionedParquetMergeStore._era_plan = (
+        lambda self, parts, selected, buckets=None: ([], list(selected))
     )
     try:
         write("q201_mor_table_read_before.txt", store.read(spark))
     finally:
-        PartitionedParquetMergeStore._mor_era_frames = fused
+        PartitionedParquetMergeStore._era_plan = fused
     write("q201_mor_table_read_after.txt", store.read(spark))
 
     # --- q126/q127 ANN: vectorized hyperplane bucket + norm-precomputed

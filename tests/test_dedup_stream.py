@@ -425,3 +425,76 @@ def test_stream_with_string_doc_ids_tombstones_correctly(spark, tmp_path):
         r.doc_id for r in snap.select("doc_id").distinct().collect()
     ) == ["doc-a"]
     assert snap.count() == 2  # both bands, string-keyed
+
+
+@pytest.mark.parametrize("applier", ["text", "dedup"])
+def test_empty_first_batch_matches_deferred_watermark_migration(
+    spark, tmp_path, applier
+):
+    """A pre-watermark index (built without the applier's side store)
+    seeds its watermarks from its own rows on the applier's first
+    batch. With no standalone emptiness probe, an EMPTY first batch
+    runs that migration one batch early: it must leave the index
+    untouched and end, after the next batch, in the same index and
+    watermarks as the deferred migration."""
+    from parquet_demo_spark.operators.search import index_batch_applier
+    from parquet_demo_spark.operators.dedup import dedup_index_batch_applier
+    from parquet_demo_spark.sources.merge_store import admission_watermarks
+
+    make_applier, keys = {
+        "text": (index_batch_applier, ("term", "doc_id")),
+        "dedup": (dedup_index_batch_applier, ("band", "doc_id")),
+    }[applier]
+
+    def open_store(tag):
+        return ParquetMergeStore(
+            os.path.join(str(tmp_path), tag),
+            keys=keys,
+            version_cols=("edit_ts",),
+            num_buckets=4,
+        )
+
+    def snapshot(store):
+        def rows(df):
+            return sorted(
+                tuple(sorted(v) if isinstance(v, list) else v for v in r)
+                for r in df.select(*sorted(df.columns)).collect()
+            )
+
+        wm = admission_watermarks(store, keys=("doc_id",))
+        return rows(store.read(spark)), rows(wm.read(spark))
+
+    # a batch-built index: one applied batch, its side store removed
+    built = open_store("built")
+    make_applier(spark, built)(
+        spark.createDataFrame([(1, _T0, 2), (2, _T1, 2)], _SCHEMA), 0
+    )
+    shutil.rmtree(built.root.rstrip("/") + "_wm")
+    for tag in ("early", "deferred"):
+        shutil.copytree(built.root, os.path.join(str(tmp_path), tag))
+    nxt = spark.createDataFrame(
+        [(1, _T1, 3), (2, _T0, 1), (3, _T2, 1)],  # newer, STALE, new doc
+        _SCHEMA,
+    )
+
+    early = open_store("early")
+    before = sorted(map(tuple, early.read(spark).collect()))
+    apply_early = make_applier(spark, early)
+    apply_early(spark.createDataFrame([], _SCHEMA), 0)
+    assert sorted(map(tuple, early.read(spark).collect())) == before
+    # the empty batch did run the migration
+    assert admission_watermarks(early, keys=("doc_id",)).has_data()
+    apply_early(nxt, 1)
+
+    deferred = open_store("deferred")
+    make_applier(spark, deferred)(nxt, 0)
+
+    assert snapshot(early) == snapshot(deferred)
+    # the migrated watermark rejected the stale edit of doc 2
+    wm_rows = dict(
+        admission_watermarks(early, keys=("doc_id",))
+        .read(spark)
+        .select("doc_id", "edit_ts")
+        .collect()
+    )
+    assert wm_rows == {1: 3, 2: 2, 3: 1}

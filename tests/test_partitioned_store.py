@@ -3,6 +3,7 @@ retention, CDC across drops, and global snapshot isolation."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -36,6 +37,21 @@ def _batch(spark, day_keys):
             for d, k in day_keys
         ]
     )
+
+
+@contextlib.contextmanager
+def _per_child_only(st):
+    """Send every child down the per-child path — the reference the
+    fused era plans are checked against."""
+    orig = type(st)._era_plan
+    type(st)._era_plan = lambda self, parts, selected, buckets=None: (
+        [],
+        list(selected),
+    )
+    try:
+        yield
+    finally:
+        type(st)._era_plan = orig
 
 
 def test_partition_col_must_be_key(tmp_path):
@@ -1183,18 +1199,18 @@ def test_partitioned_probe_opens_only_the_keys_partitions(
     calls = []
     orig = ParquetMergeStore.probe
     routed = []
-    orig_frames = type(st)._cow_probe_frames
+    orig_plan = type(st)._era_plan
 
     def counting(self, *a, **kw):
         calls.append(self.root)
         return orig(self, *a, **kw)
 
-    def recording(self, sp, parts, pvb, hit, k):
-        routed.append(list(hit))
-        return orig_frames(self, sp, parts, pvb, hit, k)
+    def recording(self, parts, selected, buckets=None):
+        routed.append(list(selected))
+        return orig_plan(self, parts, selected, buckets)
 
     monkeypatch.setattr(ParquetMergeStore, "probe", counting)
-    monkeypatch.setattr(type(st), "_cow_probe_frames", recording)
+    monkeypatch.setattr(type(st), "_era_plan", recording)
     keys = spark.createDataFrame(
         [Row(day="d2", k=1), Row(day="d2", k=999), Row(day="zz", k=1)]
     )
@@ -1407,12 +1423,13 @@ def test_partitioned_vacuum_older_than_keeps_legacy_undated(
         st.read(spark, version=1)
 
 
-def test_era_scan_matches_per_child_reads(spark, tmp_path, monkeypatch):
+def test_era_scan_matches_per_child_reads(spark, tmp_path):
     """read()'s era fast path (ONE multi-path scan per schema era,
     round-10 VERDICT #7) must return exactly what the per-child slow
     path returns, on a store mixing every eligibility class: plain
-    children (era-scanned), an evolved child and a DV-carrying child
-    (both routed to per-child reads), and a post-evolution era."""
+    children and a DV-carrying child (era-scanned, the DV anti-joined),
+    an evolved child (routed to a per-child read), and a
+    post-evolution era."""
     st = _store(tmp_path)
     st.merge(
         _batch(
@@ -1434,14 +1451,11 @@ def test_era_scan_matches_per_child_reads(spark, tmp_path, monkeypatch):
         deletion_vectors=True,
     )
     fast = st.read(spark)
-    import parquet_demo_spark.sources.partitioned_store as ps
-
-    monkeypatch.setattr(
-        ps.PartitionedParquetMergeStore,
-        "_era_scan_frames",
-        lambda self, spark_, parts, selected: ([], list(selected)),
-    )
-    slow = st.read(spark)
+    parts = st._parts(st.current_version())
+    eras, stragglers = st._era_plan(parts, sorted(parts))
+    assert stragglers == ["d2"] and len(eras) == 1
+    with _per_child_only(st):
+        slow = st.read(spark)
     key = lambda df: sorted(  # noqa: E731
         (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
         key=repr,  # rows carry typed NULLs (the evolved column)
@@ -2076,22 +2090,15 @@ def test_mor_table_write_change_feed(spark, tmp_path):
 
 def test_mor_fused_read_matches_per_child(spark, tmp_path):
     """The fused MOR table read (one base scan + one delta fold + one
-    DV anti-join per schema era — _mor_era_frames, r16) returns
+    DV anti-join per schema era — _fused_frame, r16) returns
     exactly the per-child slow read's rows in every store state:
     live upsert/delete deltas, post-compact deletion vectors, and a
     later delta layer on top of the DV'd base."""
     st = _mor_store(tmp_path)
 
     def slow_rows():
-        # force every child down the per-child path
-        orig = type(st)._mor_era_frames
-        type(st)._mor_era_frames = (
-            lambda self, sp, parts, selected: ([], list(selected))
-        )
-        try:
+        with _per_child_only(st):
             return _rows(st.read(spark))
-        finally:
-            type(st)._mor_era_frames = orig
 
     def check(state_label):
         fused = _rows(st.read(spark))
@@ -2110,8 +2117,8 @@ def test_mor_fused_read_matches_per_child(spark, tmp_path):
     assert rows == [("d1", 1, 2, "d1/1b"), ("d2", 1, 1, "d2/1")]
     # the fused path actually engages here (no child on the slow list)
     parts = st._parts(st.current_version())
-    frames, slow = st._mor_era_frames(spark, parts, sorted(parts))
-    assert slow == [] and len(frames) == 1
+    eras, slow = st._era_plan(parts, sorted(parts))
+    assert slow == [] and len(eras) == 1
 
     # post-compact: deltas fold into the base, deletes become DVs
     st.compact(spark)
@@ -2131,7 +2138,7 @@ def test_mor_fused_read_matches_per_child(spark, tmp_path):
 
 def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
     """The fused table-level MOR CDC (one delta fold + one table probe
-    + one classification — _mor_fused_cdc, r16) emits exactly the
+    + one classification — _log_diff, r16) emits exactly the
     per-child diffs' rows for every span shape: multi-commit spans,
     spans crossing a compact, preimages on and off, and a span that
     includes a partition drop (handled outside the fusion)."""
@@ -2148,19 +2155,8 @@ def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
         )
 
     def per_child_rows(v_from, v_to, pre):
-        # force every candidate down the per-child diff
-        orig = type(st)._mor_fused_cdc
-        type(st)._mor_fused_cdc = lambda self, sp, cands, vf, vt, p: [
-            c.changes_between(
-                sp, int(a["version"]), int(b["version"]),
-                include_preimages=p,
-            )
-            for _, c, a, b in cands
-        ]
-        try:
+        with _per_child_only(st):
             return cdc_rows(v_from, v_to, pre)
-        finally:
-            type(st)._mor_fused_cdc = orig
 
     def check(v_from, v_to, label):
         for pre in (False, True):
@@ -2223,46 +2219,19 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
         )
 
     def slow_rows(st, keys):
-        seam = (
-            "_mor_probe_frames"
-            if st.child_store == "mor"
-            else "_cow_probe_frames"
-        )
-        orig = getattr(type(st), seam)
-        setattr(
-            type(st),
-            seam,
-            lambda self, sp, parts, pvb, hit, k: ([], list(hit)),
-        )
-        try:
+        with _per_child_only(st):
             return rows(st.probe(spark, keys))
-        finally:
-            setattr(type(st), seam, orig)
 
     def check(st, keys, label):
         fused = rows(st.probe(spark, keys))
         assert fused == slow_rows(st, keys), label
         return fused
 
-    def fused_plan(st, keys):
+    def fused_plan(st):
         # the fused path actually engages: (eras, per-child stragglers)
-        v = st.current_version()
-        parts = st._parts(v)
-        tmap = dict(st._column_types_at(v))
-        cast_keys = keys.select(
-            *[F.col(c).cast(tmap[c]).alias(c) for c in st.keys]
-        ).distinct()
-        seam = (
-            st._mor_probe_frames
-            if st.child_store == "mor"
-            else st._cow_probe_frames
-        )
-        return seam(
-            spark,
-            parts,
-            {p: {0, 1} for p in parts},
-            sorted(parts),
-            cast_keys,
+        parts = st._parts(st.current_version())
+        return st._era_plan(
+            parts, sorted(parts), {p: {0, 1} for p in parts}
         )
 
     # -- MOR children ----------------------------------------------------
@@ -2286,8 +2255,8 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
         ("d1", 1, "d1/1b", 2),
         ("d2", 1, "d2/1", 1),
     ]
-    frames, slow = fused_plan(st, keys)
-    assert slow == [] and len(frames) == 1
+    eras, slow = fused_plan(st)
+    assert slow == [] and len(eras) == 1
 
     st.compact(spark)
     check(st, keys, "post-compact (DV state)")
@@ -2353,12 +2322,12 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
         ("d2", 7, 9, "wide", 1),
         ("d3", None, 5, "d3/5", 1),
     }
-    frames, slow = fused_plan(st, keys)
-    assert slow == ["d2"] and len(frames) == 1
+    eras, slow = fused_plan(st)
+    assert slow == ["d2"] and len(eras) == 1
 
 
 def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
-    """The fused COW table-level CDC (_cow_fused_cdc, r16) emits
+    """The fused COW table-level CDC (_snapshot_diff, r16) emits
     exactly the per-child snapshot diffs' rows for every span shape:
     merges, DV deletes, preimages on/off, and spans including a
     partition drop (handled outside the fusion)."""
@@ -2375,22 +2344,8 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
         )
 
     def per_child_rows(v_from, v_to, pre):
-        from parquet_demo_spark.sources.merge_store import (
-            changes_between,
-        )
-
-        orig = type(st)._cow_fused_cdc
-        type(st)._cow_fused_cdc = lambda self, sp, cands, vf, vt, p: [
-            changes_between(
-                c, sp, int(a["version"]), int(b["version"]),
-                include_preimages=p,
-            )
-            for _, c, a, b in cands
-        ]
-        try:
+        with _per_child_only(st):
             return cdc_rows(v_from, v_to, pre)
-        finally:
-            type(st)._cow_fused_cdc = orig
 
     def check(v_from, v_to, label):
         for pre in (False, True):
