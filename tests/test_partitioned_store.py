@@ -190,17 +190,40 @@ def test_reopen_config_mismatch_raises(spark, tmp_path):
         )
 
 
+def _child_commits(root) -> list[str]:
+    """Every child commit file under a table root: COW manifests and
+    MOR log entries."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f == "manifest.json" and os.path.dirname(d) != str(root)
+        or os.path.basename(d) == "_log"
+    )
+
+
 def test_null_partition_value_raises(spark, tmp_path):
-    st = _store(tmp_path)
-    with pytest.raises(ValueError, match="NULL"):
-        st.merge(
-            spark.createDataFrame(
-                [
-                    Row(day="d1", k=1, v=1, payload="x"),
-                    Row(day=None, k=2, v=1, payload="y"),
-                ]
-            )
+    """A NULL partition value raises before any child commits — for
+    either child store, whether the batch also carries rows for a
+    live partition or not."""
+    for child_store in ("cow", "mor"):
+        st = _store(tmp_path / child_store, child_store=child_store)
+        nulls = spark.createDataFrame(
+            [
+                Row(day="d1", k=1, v=2, payload="x"),
+                Row(day=None, k=2, v=1, payload="y"),
+            ]
         )
+        with pytest.raises(ValueError, match="NULL"):
+            st.merge(nulls)
+        assert st.current_version() is None
+        st.merge(_batch(spark, [("d1", 1)]))
+        before = _child_commits(st.root)
+        with pytest.raises(ValueError, match="NULL"):
+            st.merge(nulls)
+        assert _child_commits(st.root) == before
+        assert st.current_version() == 0
+        assert _rows(st.read(spark)) == [("d1", 1, 1, "d1/1")]
 
 
 def test_count_rows_scoped(spark, tmp_path):
@@ -416,10 +439,13 @@ def test_global_stats_rollup_prunes_children(spark, tmp_path):
 def test_concurrent_multipartition_model_equivalence(
     spark, tmp_path_factory
 ):
-    """Random op sequences — multi-partition merges (which fan out over
-    the thread pool), scoped deletes, drops — end in exactly the dict
-    model's state: the parallel write path is observationally identical
-    to the old serial one (VERDICT r7 #1)."""
+    """Random op sequences — multi-partition merges carrying duplicate
+    keys resolved by ``v``, scoped deletes, drops — end in exactly the
+    dict model's state, for copy-on-write children (whose merges fan
+    out over the thread pool) and for merge-on-read children (whose
+    merges and deletes stage every touched child's delta in one
+    write): the fused write paths are observationally identical to the
+    old serial one (VERDICT r7 #1)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as hs
 
@@ -455,6 +481,7 @@ def test_concurrent_multipartition_model_equivalence(
             version_cols=("v",),
             num_buckets=2,
             write_concurrency=4,
+            child_store=child_store,
         )
         model: dict[tuple, tuple] = {}
         seq = 0
@@ -496,7 +523,8 @@ def test_concurrent_multipartition_model_equivalence(
         }
         assert got == model
 
-    _run()
+    for child_store in ("cow", "mor"):
+        _run()
 
 
 # --- multi-column partitioning (VERDICT r7 #6) ---------------------------
