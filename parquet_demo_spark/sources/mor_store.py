@@ -401,49 +401,11 @@ class MergeOnReadStore:
         never as an unreadable mixed-type log discovered by a later
         read.
         """
-        missing = [
-            c
-            for c in (*self.keys, *self.version_cols)
-            if c not in batch.columns
-        ]
-        if missing:
-            raise ValueError(f"delta batch lacks key/version cols {missing}")
         if op_col is not None:
             batch = batch.withColumnRenamed(op_col, _OP)
         else:
             batch = batch.withColumn(_OP, F.lit("u"))
-        got = {
-            f.name: f.dataType.simpleString()
-            for f in batch.schema.fields
-            if f.name != _OP
-        }
-        rec = self._schema_record()
-        if rec is not None:
-            cols, types = rec
-            if set(got) != set(cols):
-                raise ValueError(
-                    "delta batch schema must match the store's "
-                    f"({sorted(set(got) ^ set(cols))} differ)"
-                )
-            drift = {
-                c: (got[c], types[c])
-                for c in cols
-                if c in types and got[c] != types[c]
-            }
-            if drift:
-                raise ValueError(
-                    "delta batch schema must match the store's: column "
-                    f"type drift {drift} (a mixed-type log would fail "
-                    "on every later read)"
-                )
-            # the batch's types equal the recorded ones wherever both
-            # exist (just validated); the union fills any column the
-            # record was missing (e.g. derived from a pre-evolution
-            # bucket footer that predates the column)
-            out_cols, out_types = list(cols), {**got, **types}
-        else:
-            out_cols = [c for c in batch.columns if c != _OP]
-            out_types = got
+        record = self._delta_schema(batch)
         batch = collapse_for_upsert(batch, self.keys, self.version_cols)
         if op_col is not None:
             # lazy checkpoint: the validation action below materializes
@@ -461,17 +423,88 @@ class MergeOnReadStore:
                 raise ValueError(
                     f"delta op must be 'u' or 'd', got {bad[0][_OP]!r}"
                 )
-        # unique suffix: a crashed writer's orphan dir can never
-        # collide with the retry (the merge store's artifact-dir law);
-        # the numeric prefix is informational only — the committed
-        # POSITION in the entry's dirs list is the LWW order, so a
-        # CAS-losing append rebases without rewriting its parquet
-        obs = self._log()
-        provisional = obs["seq"] + 1
-        d = tempfile.mkdtemp(
+        d = self._new_delta_dir()
+        batch.write.mode("overwrite").parquet(d)
+        return self._append_delta(
+            batch.sparkSession, d, record, write_change_feed
+        )["seq"]
+
+    def _delta_schema(
+        self, batch: DataFrame
+    ) -> tuple[list[str], dict[str, str]]:
+        """The delta schema law (see :meth:`commit_delta`): check the
+        batch's key/version columns, then its names and types (an
+        ``__op`` column is ignored) against :meth:`_schema_record`, and
+        return the ``(columns, types)`` record its log entry carries.
+        Raises ValueError on drift. The partitioned table runs it for
+        every touched child before staging a fused delta write, so a
+        drifted batch fails with nothing written."""
+        missing = [
+            c
+            for c in (*self.keys, *self.version_cols)
+            if c not in batch.columns
+        ]
+        if missing:
+            raise ValueError(f"delta batch lacks key/version cols {missing}")
+        got = {
+            f.name: f.dataType.simpleString()
+            for f in batch.schema.fields
+            if f.name != _OP
+        }
+        rec = self._schema_record()
+        if rec is None:
+            return [c for c in batch.columns if c != _OP], got
+        cols, types = rec
+        if set(got) != set(cols):
+            raise ValueError(
+                "delta batch schema must match the store's "
+                f"({sorted(set(got) ^ set(cols))} differ)"
+            )
+        drift = {
+            c: (got[c], types[c])
+            for c in cols
+            if c in types and got[c] != types[c]
+        }
+        if drift:
+            raise ValueError(
+                "delta batch schema must match the store's: column "
+                f"type drift {drift} (a mixed-type log would fail "
+                "on every later read)"
+            )
+        # the batch's types equal the recorded ones wherever both
+        # exist (just validated); the union fills any column the
+        # record was missing (e.g. derived from a pre-evolution
+        # bucket footer that predates the column)
+        return list(cols), {**got, **types}
+
+    def _new_delta_dir(self) -> str:
+        """A fresh, empty directory under ``deltas/`` for one batch.
+        The unique suffix means a crashed writer's orphan dir can never
+        collide with the retry (the merge store's artifact-dir law);
+        the numeric prefix is informational only — the committed
+        POSITION in the entry's dirs list is the LWW order, so a
+        CAS-losing append rebases without rewriting its parquet. The
+        dir stays invisible until :meth:`_append_delta` commits an
+        entry that references it."""
+        provisional = self._log()["seq"] + 1
+        return tempfile.mkdtemp(
             dir=self._deltas_root, prefix=f"d{provisional:05d}-"
         )
-        batch.write.mode("overwrite").parquet(d)
+
+    def _append_delta(
+        self,
+        spark: SparkSession,
+        d: str,
+        record: tuple[list[str], dict[str, str]],
+        write_change_feed: bool = False,
+    ) -> dict:
+        """Adopt the fully written delta dir ``d`` (one collapsed batch
+        with an ``__op`` column, under ``deltas/``): optionally
+        materialize its change feed, then commit the log entry that
+        appends it. Metadata-only without the feed. ``record`` is the
+        :meth:`_delta_schema` result. Returns the committed state."""
+        out_cols, out_types = record
+        obs = self._log()
         feed_rel = None
         if write_change_feed:
             # pre-images resolve against the head the writer observed;
@@ -486,12 +519,12 @@ class MergeOnReadStore:
             # a wrong-not-missing feed, and its in-place overwrite
             # raced concurrent readers).
             feed_rel = self._materialize_feed(
-                batch.sparkSession,
+                spark,
                 d,
                 out_cols,
                 obs["entry"] if obs["entry"] >= 0 else None,
             )
-        new = self._commit_log(
+        return self._commit_log(
             lambda cur: {
                 # carry a prior compact's base stamp forward: the
                 # entry state stays self-describing, so an entry-
@@ -518,7 +551,6 @@ class MergeOnReadStore:
                 ),
             }
         )
-        return new["seq"]
 
     def _materialize_feed(
         self,
@@ -708,30 +740,40 @@ class MergeOnReadStore:
         )
 
     def _resolved(
-        self, spark: SparkSession, dirs: list[str] | None = None
+        self,
+        spark: SparkSession,
+        state: dict | None = None,
+        dirs: list[str] | None = None,
     ) -> DataFrame | None:
-        """Latest delta action per PK over the live log, or over
-        ``dirs`` — an explicit snapshot of it (compact() MUST pass the
-        same list it later truncates: a second read would race a
-        concurrent append)."""
+        """Latest delta action per PK over the dirs of the log
+        ``state`` (default: the live log), or over ``dirs`` — delta
+        dirs appended up to that state. Callers pass one snapshot of
+        the log (compact() MUST fold the same list it later truncates:
+        a second read would race a concurrent append). When the
+        state's type map covers every recorded column, the scans take
+        it as their schema: ``commit_delta`` validated every appended
+        batch against that record, and a read then costs no
+        footer-inference job per delta dir."""
+        if state is None:
+            state = self._log()
         if dirs is None:
-            dirs = self._log()["dirs"]
+            dirs = state["dirs"]
         return resolve_deltas(
             spark,
             self.keys,
             [os.path.join(self._deltas_root, d) for d in dirs],
+            schema_ddl(state.get("columns"), state.get("types")),
         )
 
     def _overlay(
         self,
         spark: SparkSession,
         base_df: DataFrame | None,
-        dirs: list[str] | None = None,
-        cols: list[str] | None = None,
+        state: dict,
         where: dict | None = None,
     ) -> DataFrame:
-        latest = self._resolved(spark, dirs)
-        cols = self._columns() if cols is None else cols
+        latest = self._resolved(spark, state)
+        cols = state.get("columns") or self._columns()
         if latest is None:
             if base_df is None:
                 if self._schema_record() is not None:
@@ -786,13 +828,7 @@ class MergeOnReadStore:
             if bv is not None
             else None
         )
-        return self._overlay(
-            spark,
-            base_df,
-            dirs=list(state["dirs"]),
-            cols=state.get("columns") or self._columns(),
-            where=where,
-        )
+        return self._overlay(spark, base_df, state, where=where)
 
     def probe(
         self,
@@ -821,7 +857,7 @@ class MergeOnReadStore:
             if "base_version" in state
             else self.base.current_version()
         )
-        latest = self._resolved(spark, list(state["dirs"]))
+        latest = self._resolved(spark, state)
         keys = keys_df.select(*self.keys).dropDuplicates()
         base_hits = (
             self.base.probe(spark, keys, version=cur, buckets=buckets)
@@ -1123,7 +1159,7 @@ class MergeOnReadStore:
             # touch resolves at e_to from these dirs (they carry the
             # highest log positions), so they are exactly the
             # candidate set and its post-state
-            latest = self._resolved(spark, new_dirs).localCheckpoint(
+            latest = self._resolved(spark, s_to, new_dirs).localCheckpoint(
                 eager=False
             )
             pre = self.probe(spark, latest.select(*keys), version=e_from)
@@ -1220,7 +1256,7 @@ class MergeOnReadStore:
         # without ever reaching the base (round-11 review finding)
         snap = self._log()
         folded_dirs = list(snap["dirs"])
-        latest = self._resolved(spark, folded_dirs)
+        latest = self._resolved(spark, snap)
         if latest is None:
             return
         pinned_present = "base_version" in snap
@@ -1410,6 +1446,16 @@ class MergeOnReadStore:
         return removed
 
 
+def schema_ddl(names, types: dict[str, str] | None) -> str | None:
+    """Spark DDL for the columns ``names`` from a recorded {column:
+    type} map; ``None`` when there is no map or it misses one of them
+    (scans then infer their schema from the footers, one Spark job per
+    scanned path)."""
+    if not names or types is None or any(c not in types for c in names):
+        return None
+    return ", ".join(f"`{c}` {types[c]}" for c in names)
+
+
 def resolve_deltas(
     spark: SparkSession,
     keys: tuple[str, ...] | list[str],
@@ -1428,13 +1474,16 @@ def resolve_deltas(
     key. Dirs of several stores may be folded at once when no PK
     spans two of them (the partitioned table's children: partition
     columns are PK columns); positions then only need to rise with
-    log order within each store. ``ddl`` is an explicit delta schema
-    (columns plus ``__op``), which skips each dir's footer-inference
-    job. The union is a balanced tree (O(D log D) driver analysis,
-    not the O(D²) left-deep chain)."""
+    log order within each store. ``ddl`` is an explicit ROW schema
+    (:func:`schema_ddl` of the table columns; ``__op`` is appended),
+    which skips each dir's footer-inference job. The union is a
+    balanced tree (O(D log D) driver analysis, not the O(D²)
+    left-deep chain)."""
     if not paths:
         return None
-    reader = spark.read.schema(ddl) if ddl else spark.read
+    reader = (
+        spark.read.schema(f"{ddl}, `{_OP}` string") if ddl else spark.read
+    )
     frames = []
     for i, p in enumerate(paths):
         df = reader.parquet(p)

@@ -67,8 +67,10 @@ drop-partition retention, Iceberg partition pruning).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
@@ -161,11 +163,13 @@ class PartitionedParquetMergeStore:
         self.version_cols = tuple(version_cols)
         self.num_buckets = int(num_buckets)
         self.bloom_cols = tuple(bloom_cols)
-        # operational knob, not table schema: how many child stores a
-        # multi-partition batch writes CONCURRENTLY (each child is an
-        # independent directory + commit; Spark schedules the threads'
-        # jobs in parallel) — deliberately outside the config-mismatch
-        # validation below
+        # operational knob, not table schema: how many copy-on-write
+        # child stores a multi-partition merge, delete or compact
+        # writes CONCURRENTLY (each child is an independent directory +
+        # commit; Spark schedules the threads' jobs in parallel) —
+        # deliberately outside the config-mismatch validation below.
+        # Merge-on-read merges and deletes write every touched child in
+        # one Spark job and never use it.
         self.write_concurrency = max(1, int(write_concurrency))
         # CHECK constraints are TABLE properties (name -> SQL boolean),
         # persisted in the global manifest and forwarded to every child,
@@ -808,15 +812,27 @@ class PartitionedParquetMergeStore:
         order-independent and redelivery-idempotent per partition — the
         q135 exactly-once recipe, now date-partitioned.
 
-        Touched partitions write CONCURRENTLY (``write_concurrency``
-        threads; each child is an independent directory + commit, so a
-        backfill touching P partitions pays ~P/threads Spark-job
-        rounds, not P). Routing and the per-partition filters derive
-        from the SAME Spark-side ``cast('string')`` expression, so a
-        partition value whose Python ``str()`` rendering differs from
-        Spark's (doubles, fractional timestamps) can never route to a
-        filter that matches nothing — and the NULL guard rides the same
-        single distinct-collect job instead of paying its own.
+        Copy-on-write children: touched partitions write CONCURRENTLY
+        (``write_concurrency`` threads; each child is an independent
+        directory + commit, so a backfill touching P partitions pays
+        ~P/threads Spark-job rounds, not P).
+
+        Merge-on-read children stage once and adopt per child: the
+        whole batch, collapsed last-write-wins with ``__op = 'u'``, is
+        written in ONE Spark job ``partitionBy`` partition value into a
+        staging dir under the table root; each staged dir is renamed
+        into its child's ``deltas/`` and adopted with a metadata-only
+        log-entry commit. A merge costs the routing collect plus that
+        write — two jobs at any number of touched partitions. Every
+        live touched child is fenced to the global pin and checks the
+        batch against its schema record before anything is written.
+
+        Routing and the staged partition dirs derive from the SAME
+        Spark-side ``cast('string')`` expression, so a partition value
+        whose Python ``str()`` rendering differs from Spark's (doubles,
+        fractional timestamps) can never route to a slice that matches
+        nothing — and the NULL guard rides the same single
+        distinct-collect job instead of paying its own.
         """
         lacking = [
             c for c in self.partition_cols if c not in upserts.columns
@@ -931,7 +947,7 @@ class PartitionedParquetMergeStore:
             return cur
         parts = {} if cur is None else self._parts(cur)
         # dir assignment stays serial (cheap, and epoch probing must not
-        # race itself); the data writes below fan out
+        # race itself)
         dirnames = {}
         for pval in pvals:
             # a partition with no LIVE entry gets a FRESH epoch dir even
@@ -944,7 +960,31 @@ class PartitionedParquetMergeStore:
             )
 
         spark = upserts.sparkSession
-        if len(pvals) == 1:
+        if self.child_store == "mor":
+            from parquet_demo_spark.sources.mongo import collapse_for_upsert
+            from parquet_demo_spark.sources.mor_store import _OP
+
+            # the staged write IS the delta write: 'u' ops, collapsed
+            # last-write-wins on (__pval, *keys) — the PK collapse, as
+            # every partition column is a PK column — so the __pval
+            # shuffle already satisfies the window: one shuffle
+            staged = collapse_for_upsert(
+                self._by_pval(
+                    upserts.withColumn(_OP, F.lit("u")), len(pvals)
+                ),
+                ("__pval", *self.keys),
+                self.version_cols,
+            )
+            results = self._stage_and_adopt(
+                staged,
+                upserts,
+                pvals,
+                parts,
+                dirnames,
+                write_change_feed,
+                fence_routed=True,
+            )
+        elif len(pvals) == 1:
             # single-partition batch (the streaming-ingest common case):
             # the whole batch IS the slice — no routing write needed
             [only] = pvals
@@ -953,67 +993,86 @@ class PartitionedParquetMergeStore:
                 if only in parts
                 else self._child(dirnames[only])
             )
-            if self.child_store == "mor":
-                # O(batch) delta append — no bucket read or rewrite at
-                # any child size (the scatter-write backfill trade)
-                child.commit_delta(
-                    upserts, write_change_feed=write_change_feed
-                )
-                v = child.current_version()
-                rollup_stats, rollup_blooms = {}, {}
-            else:
-                pend = child._merge_prepare(
-                    upserts,
-                    write_change_feed=write_change_feed,
-                    conditional=conditional,
-                    allow_schema_evolution=allow_schema_evolution,
-                    touched=sorted(touched_buckets[only]),
-                )
-                v = child._merge_commit(
-                    pend, child._out_dir_blooms(spark, pend["out_dir"])
-                )
-                rollup_stats = self._child_stats_rollup(child, v)
-                rollup_blooms = self._child_blooms_rollup(child, v)
-            parts[only] = {
-                "dir": dirnames[only],
-                "version": v,
-                "stats": rollup_stats,
-                "blooms": rollup_blooms,
-            }
-            new_version = 0 if cur is None else cur + 1
-            return self._commit(
-                new_version,
-                parts,
-                "merge",
-                {"touched_partitions": pvals},
-                columns=g_cols,
-                column_types=g_types,
+            pend = child._merge_prepare(
+                upserts,
+                write_change_feed=write_change_feed,
+                conditional=conditional,
+                allow_schema_evolution=allow_schema_evolution,
+                touched=sorted(touched_buckets[only]),
             )
-
-        # ONE Spark job routes the whole batch (VERDICT r7 #1's
-        # composite-write design): shuffle on the composite value and
-        # write the batch partitionBy(__pval) into a staging dir, so
-        # each child's merge then reads ITS one-or-two-file slice — a
-        # 1-task scan — instead of re-filtering the full batch. Without
-        # this, a 50-partition backfill pays 50 x (batch partitions)
-        # tasks per stage; with it, the batch is scanned once.
-        staging = tempfile.mkdtemp(
-            dir=self.root, prefix="_staging."
+            v = child._merge_commit(
+                pend, child._out_dir_blooms(spark, pend["out_dir"])
+            )
+            results = {
+                only: {
+                    "dir": dirnames[only],
+                    "version": v,
+                    "stats": self._child_stats_rollup(child, v),
+                    "blooms": self._child_blooms_rollup(child, v),
+                }
+            }
+        else:
+            results = self._cow_merge(
+                upserts,
+                pvals,
+                parts,
+                dirnames,
+                touched_buckets,
+                write_change_feed=write_change_feed,
+                conditional=conditional,
+                allow_schema_evolution=allow_schema_evolution,
+            )
+        parts.update(results)
+        new_version = 0 if cur is None else cur + 1
+        return self._commit(
+            new_version,
+            parts,
+            "merge",
+            {"touched_partitions": pvals},
+            columns=g_cols,
+            column_types=g_types,
         )
+
+    def _by_pval(self, df: DataFrame, n: int) -> DataFrame:
+        """``df`` plus its composite partition value ``__pval``,
+        shuffled on it into at most ``n`` (capped at 64) partitions.
+
+        The value is the routing collect's own Spark-side rendering.
+        concat_ws never returns NULL, and merge's routing collect has
+        already rejected NULL components, so every row lands in a real
+        ``__pval`` dir."""
         pval_col = F.concat_ws(
             _SEP, *[F.col(c).cast("string") for c in self.partition_cols]
         )
-        # concat_ws never returns NULL and the distinct-collect above
-        # already rejected NULL components, so every row lands in a real
-        # __pval dir. Spark Hive-escapes special chars in dir names;
-        # unescaping the listing back to the collected pvals keeps the
-        # mapping exact without replicating the escape table.
+        return df.withColumn("__pval", pval_col).repartition(
+            max(1, min(n, 64)), F.col("__pval")
+        )
+
+    @contextlib.contextmanager
+    def _staging(self):
+        """A fresh staging dir under the table root (the same
+        filesystem as every child, so staged dirs rename into place),
+        removed on exit whatever happened."""
+        staging = tempfile.mkdtemp(dir=self.root, prefix="_staging.")
+        try:
+            yield staging
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    @staticmethod
+    def _stage(
+        df: DataFrame, staging: str, routed, complete: bool = False
+    ) -> dict[str, str]:
+        """Write ``df`` (shaped by :meth:`_by_pval`) ``partitionBy
+        ("__pval")`` into ``staging`` in ONE Spark job and return
+        {partition value: its staged dir}. Only partitions that
+        received rows get a dir; ``complete`` requires one for every
+        ``routed`` value. Spark Hive-escapes special chars in dir
+        names; unescaping the listing back to the ``routed`` values
+        keeps the mapping exact without replicating the escape
+        table."""
         (
-            upserts.withColumn("__pval", pval_col)
-            .repartition(
-                max(1, min(len(pvals), 64)), F.col("__pval")
-            )
-            .write.mode("overwrite")  # mkdtemp pre-created the dir
+            df.write.mode("overwrite")  # mkdtemp pre-created the dir
             .partitionBy("__pval")
             .parquet(staging)
         )
@@ -1022,85 +1081,73 @@ class PartitionedParquetMergeStore:
             if not d.startswith("__pval="):
                 continue
             pval = _unescape(d.split("=", 1)[1])
-            if pval not in dirnames:
+            if pval not in routed:
                 raise ValueError(
                     f"staged partition {pval!r} not in the routed set "
-                    f"{pvals} — partition-value rendering drifted"
+                    f"{sorted(routed)} — partition-value rendering "
+                    "drifted"
                 )
             slices[pval] = os.path.join(staging, d)
-        unstaged = sorted(set(pvals) - set(slices))
+        unstaged = sorted(set(routed) - set(slices)) if complete else []
         if unstaged:
             raise ValueError(
                 f"routed partitions never staged: {unstaged} — "
                 "partition-value rendering drifted"
             )
+        return slices
 
-        def _prepare_one(pval: str):
-            dirname = dirnames[pval]
-            child = (
-                self._pinned_child(parts[pval])
-                if pval in parts
-                else self._child(dirname)
-            )
-            pend = child._merge_prepare(
-                spark.read.parquet(slices[pval]).select(*upserts.columns),
-                write_change_feed=write_change_feed,
-                conditional=conditional,
-                allow_schema_evolution=allow_schema_evolution,
-                touched=sorted(touched_buckets[pval]),
-            )
-            return child, pend
+    def _cow_merge(
+        self,
+        upserts: DataFrame,
+        pvals: list,
+        parts: dict,
+        dirnames: dict,
+        touched_buckets: dict,
+        **merge_kw,
+    ) -> dict[str, dict]:
+        """Copy-on-write children of a multi-partition merge.
 
-        # prepare ALL children first (data writes fan out across the
-        # pool), then build EVERY child's touched-bucket blooms in ONE
-        # Spark job over the just-written output dirs, then commit —
-        # the per-child `_out_dir_blooms` job was a FIXED ~0.3–1 s cost
-        # paid once per child commit, which a W-week backfill paid W
-        # times (VERDICT r11 #1, the q164 2.9× regression). A failure
-        # before the commit loop leaves only unreferenced data dirs
-        # (child vacuum reclaims them); a child that commits before a
-        # sibling fails leaves its versions ABOVE this table's pin —
-        # invisible to readers, restored-over by the next write through
-        # _pinned_child — so propagating the first error is
-        # crash-consistent either way.
-        def _mor_merge_one(pval: str) -> dict:
-            child = (
-                self._pinned_child(parts[pval])
-                if pval in parts
-                else self._child(dirnames[pval])
+        ONE Spark job routes the whole batch (VERDICT r7 #1's
+        composite-write design): the batch is staged ``partitionBy
+        (__pval)``, so each child's merge then reads ITS one-or-two-
+        file slice — a 1-task scan — instead of re-filtering the full
+        batch. Without this, a 50-partition backfill pays 50 x (batch
+        partitions) tasks per stage; with it, the batch is scanned
+        once. Returns the new manifest entry per touched partition."""
+        spark = upserts.sparkSession
+        with self._staging() as staging:
+            slices = self._stage(
+                self._by_pval(upserts, len(pvals)), staging, pvals, True
             )
-            child.commit_delta(
-                spark.read.parquet(slices[pval]).select(*upserts.columns),
-                write_change_feed=write_change_feed,
-            )
-            return {
-                "dir": dirnames[pval],
-                "version": child.current_version(),
-                "stats": {},
-                "blooms": {},
-            }
 
-        try:
-            if self.child_store == "mor":
-                # each child is one O(slice) delta append — no prepare/
-                # bloom/commit phases (nothing to build blooms over)
-                with ThreadPoolExecutor(
-                    max_workers=min(self.write_concurrency, len(pvals))
-                ) as pool:
-                    futs = {
-                        p: pool.submit(_mor_merge_one, p) for p in pvals
-                    }
-                    results = {p: f.result() for p, f in futs.items()}
-                parts.update(results)
-                new_version = 0 if cur is None else cur + 1
-                return self._commit(
-                    new_version,
-                    parts,
-                    "merge",
-                    {"touched_partitions": pvals},
-                    columns=g_cols,
-                    column_types=g_types,
+            def _prepare_one(pval: str):
+                child = (
+                    self._pinned_child(parts[pval])
+                    if pval in parts
+                    else self._child(dirnames[pval])
                 )
+                pend = child._merge_prepare(
+                    spark.read.parquet(slices[pval]).select(
+                        *upserts.columns
+                    ),
+                    touched=sorted(touched_buckets[pval]),
+                    **merge_kw,
+                )
+                return child, pend
+
+            # prepare ALL children first (data writes fan out across
+            # the pool), then build EVERY child's touched-bucket blooms
+            # in ONE Spark job over the just-written output dirs, then
+            # commit — the per-child `_out_dir_blooms` job was a FIXED
+            # ~0.3–1 s cost paid once per child commit, which a W-week
+            # backfill paid W times (VERDICT r11 #1, the q164 2.9×
+            # regression). A failure before the commit loop leaves only
+            # unreferenced data dirs (child vacuum reclaims them); a
+            # child that commits before a sibling fails leaves its
+            # versions ABOVE this table's pin — invisible to readers,
+            # restored-over by the next write through _pinned_child —
+            # so propagating the first error is crash-consistent either
+            # way.
             with ThreadPoolExecutor(
                 max_workers=min(self.write_concurrency, len(pvals))
             ) as pool:
@@ -1135,21 +1182,70 @@ class PartitionedParquetMergeStore:
                 max_workers=min(self.write_concurrency, len(pvals))
             ) as pool:
                 futs = {p: pool.submit(_commit_one, p) for p in pvals}
-                results = {p: f.result() for p, f in futs.items()}
-        finally:
-            import shutil
+                return {p: f.result() for p, f in futs.items()}
 
-            shutil.rmtree(staging, ignore_errors=True)
-        parts.update(results)
-        new_version = 0 if cur is None else cur + 1
-        return self._commit(
-            new_version,
-            parts,
-            "merge",
-            {"touched_partitions": pvals},
-            columns=g_cols,
-            column_types=g_types,
-        )
+    def _stage_and_adopt(
+        self,
+        staged: DataFrame,
+        batch: DataFrame,
+        routed: list,
+        parts: dict,
+        dirnames: dict,
+        write_change_feed: bool,
+        fence_routed: bool,
+    ) -> dict[str, dict]:
+        """The merge-on-read stage-and-adopt law. ONE Spark job writes
+        ``staged`` (collapsed rows of ``batch`` with ``__op``, shaped
+        by :meth:`_by_pval`) into a staging dir. Each staged
+        ``__pval=`` dir is one child's whole delta: it is renamed into
+        that child's ``deltas/`` under a fresh unique name (same
+        filesystem, so the rename is atomic) and adopted with a
+        metadata-only log-entry commit.
+
+        Every child is fenced to the global pin (``_pinned_child``)
+        and checks ``batch`` against its delta schema record before
+        any child adopts. ``fence_routed`` (a merge) does that for
+        every live ``routed`` child before anything is written, and
+        requires a staged dir for every routed value; otherwise (a
+        delete) the staged dirs pick the children.
+
+        Crash law: a staged or renamed dir is invisible until a child
+        log entry references it (the child's vacuum reclaims an
+        unadopted one); a failure before the caller's global commit
+        leaves child entries above the pin, which ``_pinned_child``
+        restores over on the next write; the staging dir is removed
+        either way. Returns the new manifest entry per adopted
+        partition."""
+        children = {
+            p: self._pinned_child(parts[p])
+            for p in (routed if fence_routed else ())
+            if p in parts
+        }
+        records = {p: c._delta_schema(batch) for p, c in children.items()}
+        with self._staging() as staging:
+            slices = self._stage(staged, staging, routed, fence_routed)
+            for p in sorted(set(slices) - set(children)):
+                children[p] = (
+                    self._pinned_child(parts[p])
+                    if p in parts
+                    else self._child(dirnames[p])
+                )
+                records[p] = children[p]._delta_schema(batch)
+            out = {}
+            for pval in sorted(slices):
+                child = children[pval]
+                d = child._new_delta_dir()
+                os.rename(slices[pval], d)
+                state = child._append_delta(
+                    batch.sparkSession, d, records[pval], write_change_feed
+                )
+                out[pval] = {
+                    "dir": dirnames[pval],
+                    "version": state["entry"],
+                    "stats": {},
+                    "blooms": {},
+                }
+            return out
 
     @scoped_store_op(None, "spark")
     def delete_where(
@@ -1164,9 +1260,18 @@ class PartitionedParquetMergeStore:
 
         ``partitions=(lo, hi)`` (closed, on the stringified value —
         ISO dates sort correctly) restricts which CHILD STORES even run
-        the delete; within each, the child's two-phase bucket-pruned
-        delete applies. A delete scoped to one day of a 100 TB table
-        opens one partition directory.
+        the delete. A delete scoped to one day of a 100 TB table opens
+        one partition directory.
+
+        Copy-on-write children run the child's two-phase bucket-pruned
+        delete, CONCURRENTLY (``write_concurrency`` threads).
+        Merge-on-read children tombstone the matching rows' PKs as
+        ``__op = 'd'`` deltas — O(matching) appended, no bucket rewrite
+        at any child size; the next compact materializes them. One
+        fused read of the scoped table at the current version, filtered
+        by ``condition``, is staged and adopted per child like a merge
+        (see :meth:`merge`): ONE Spark job, and the staged dirs that
+        exist are exactly the children that matched.
         """
         if self.child_store == "mor" and deletion_vectors:
             # write_change_feed is allowed since round 14 (the MOR
@@ -1179,54 +1284,45 @@ class PartitionedParquetMergeStore:
         cur = self.current_version()
         parts = self._parts(cur)
         in_scope = self._select(parts, partitions)
+        touched = []
+        if in_scope and self.child_store == "mor":
+            from parquet_demo_spark.sources.mor_store import _OP
 
-        def _delete_one(pval: str) -> dict | None:
-            child = self._pinned_child(parts[pval])
-            if self.child_store == "mor":
-                # MOR DELETE WHERE: tombstone the matching rows' PKs as
-                # a 'd' delta — O(matching) appended, no bucket rewrite
-                # at any child size; the next compact materializes
-                # them. The overlay-resolved read is pinned so the
-                # emptiness probe and the commit's write consume ONE
-                # materialization, not two full child reads.
-                matching = (
-                    child.read(spark, version=int(parts[pval]["version"]))
-                    .filter(condition)
-                    .persist()
+            matching = self.read(
+                spark, version=cur, partitions=partitions
+            ).filter(condition)
+            results = self._stage_and_adopt(
+                self._by_pval(
+                    matching.withColumn(_OP, F.lit("d")), len(in_scope)
+                ),
+                matching,
+                in_scope,
+                parts,
+                {p: parts[p]["dir"] for p in in_scope},
+                write_change_feed,
+                fence_routed=False,
+            )
+            parts.update(results)
+            touched = sorted(results)
+        elif in_scope:
+
+            def _delete_one(pval: str) -> dict | None:
+                child = self._pinned_child(parts[pval])
+                v = child.delete(
+                    spark,
+                    condition,
+                    write_change_feed=write_change_feed,
+                    deletion_vectors=deletion_vectors,
                 )
-                try:
-                    if matching.isEmpty():
-                        return None  # no match, no child commit burned
-                    child.commit_delta(
-                        matching.withColumn("__del_op", F.lit("d")),
-                        op_col="__del_op",
-                        write_change_feed=write_change_feed,
-                    )
-                finally:
-                    matching.unpersist()
+                if v is None:  # no match, no child commit burned
+                    return None
                 return {
                     "dir": parts[pval]["dir"],
-                    "version": child.current_version(),
-                    "stats": {},
-                    "blooms": {},
+                    "version": v,
+                    "stats": self._child_stats_rollup(child, v),
+                    "blooms": self._child_blooms_rollup(child, v),
                 }
-            v = child.delete(
-                spark,
-                condition,
-                write_change_feed=write_change_feed,
-                deletion_vectors=deletion_vectors,
-            )
-            if v is None:  # no match, no child commit burned
-                return None
-            return {
-                "dir": parts[pval]["dir"],
-                "version": v,
-                "stats": self._child_stats_rollup(child, v),
-                "blooms": self._child_blooms_rollup(child, v),
-            }
 
-        touched = []
-        if in_scope:
             with ThreadPoolExecutor(
                 max_workers=min(self.write_concurrency, len(in_scope))
             ) as pool:
@@ -1903,17 +1999,12 @@ class PartitionedParquetMergeStore:
         from parquet_demo_spark.sources.mor_store import (
             _OP,
             resolve_deltas,
+            schema_ddl,
         )
 
         cols, types, pk = era["cols"], era["types"], list(self.keys)
         lays = list(era["layouts"].values())
-
-        def ddl(names: list[str]) -> str | None:
-            if types is None:
-                return None
-            return ", ".join(f"`{c}` {types[c]}" for c in names)
-
-        row_ddl = ddl(cols)
+        row_ddl = schema_ddl(cols, types)
         base = None
         base_dirs = sorted({d for lay in lays for d in lay["base"]})
         if base_dirs:
@@ -1923,7 +2014,7 @@ class PartitionedParquetMergeStore:
                 reader.parquet(*base_dirs).select(*cols),
                 pk,
                 [d for lay in lays for d in lay["dv"]],
-                ddl(pk),
+                schema_ddl(pk, types),
             )
             if keys is not None:
                 base = base.join(keys, pk, "left_semi")
@@ -1931,7 +2022,7 @@ class PartitionedParquetMergeStore:
             spark,
             pk,
             [p for lay in lays for p in lay["deltas"]],
-            None if row_ddl is None else f"{row_ddl}, `{_OP}` string",
+            row_ddl,
         )
         if latest is None:
             return base
@@ -2580,8 +2671,9 @@ class PartitionedParquetMergeStore:
             }
 
         # children are independent directories + commit domains: fan
-        # the per-child compactions across the write pool exactly like
-        # merge()/delete_where() — the serial loop paid each child's
+        # the per-child compactions across the write pool, as merge()/
+        # delete_where() do for copy-on-write children — the serial
+        # loop paid each child's
         # fold/rewrite jobs back-to-back (round-12 store-suite
         # overhead audit, VERDICT r11 #7)
         touched = []

@@ -27,3 +27,37 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def assert_flat_output():
+    """The driver-canon output law, as one check every test that builds
+    a registry query applies to its DataFrame: no array/map/struct/date
+    column in the final projection.
+
+    The driver canonicalizes every query result with pandas
+    ``sort_values`` before hashing; list/dict-typed cells are unhashable
+    there, so a query whose FINAL projection contains an
+    array/map/struct column can never get a green CORRECTNESS row
+    (round-1 q21/q59b ERR). Complex types are fine mid-plan. Raw DATE
+    columns canonicalize differently per engine (object datetime.date
+    from Spark vs datetime64 from DuckDB) — cast to TIMESTAMP at the
+    query edge.
+    """
+    from pyspark.sql.types import ArrayType, DateType, MapType, StructType
+
+    def check(name, df):
+        bad = [
+            f.name
+            for f in df.schema.fields
+            if isinstance(
+                f.dataType, (ArrayType, MapType, StructType, DateType)
+            )
+        ]
+        assert not bad, (
+            f"{name} exposes complex- or date-typed output columns {bad}; "
+            "project them to scalars/strings/timestamps at the query edge "
+            "(driver canon requirement)"
+        )
+
+    return check

@@ -1781,21 +1781,31 @@ def test_mor_children_delete_compact_restore(spark, tmp_path):
     ]
 
 
-def test_mor_children_fence_crashed_writer(spark, tmp_path):
+def test_mor_children_fence_crashed_writer(spark, tmp_path, monkeypatch):
     """Child log entries above the global pin (a crashed global
     writer) must not fold into the next successful commit: the next
-    write restores the child to the pin first."""
+    write restores the child to the pin first — whether it is a one-
+    or two-partition merge or a two-partition delete_where, and
+    whether the crash came from another writer or from this table's
+    own fused write failing between two children's adoptions."""
+    from parquet_demo_spark.sources.mor_store import MergeOnReadStore
+
     st = _mor_store(tmp_path)
-    st.merge(_batch(spark, [("d1", 1)]))
-    pin = st._parts(st.current_version())["d1"]["version"]
-    # simulate the crash: a child delta committed, global commit lost
-    orphan_child = st._child(st._parts(st.current_version())["d1"]["dir"])
-    orphan_child.commit_delta(
-        spark.createDataFrame(
-            [Row(day="d1", k=1, v=9, payload="ABORTED")]
-        )
-    )
-    assert orphan_child.current_version() > pin
+    st.merge(_batch(spark, [("d1", 1), ("d2", 1)]))
+
+    def crash(days):
+        # a child delta committed, the global commit lost
+        for day in days:
+            entry = st._parts(st.current_version())[day]
+            orphan_child = st._child(entry["dir"])
+            orphan_child.commit_delta(
+                spark.createDataFrame(
+                    [Row(day=day, k=1, v=9, payload="ABORTED")]
+                )
+            )
+            assert orphan_child.current_version() > entry["version"]
+
+    crash(["d1"])
     # next table write builds on the PIN: the aborted row never lands
     st.merge(
         spark.createDataFrame([Row(day="d1", k=2, v=1, payload="d1/2")])
@@ -1803,7 +1813,57 @@ def test_mor_children_fence_crashed_writer(spark, tmp_path):
     assert _rows(st.read(spark)) == [
         ("d1", 1, 1, "d1/1"),
         ("d1", 2, 1, "d1/2"),
+        ("d2", 1, 1, "d2/1"),
     ]
+    crash(["d1", "d2"])
+    st.merge(_batch(spark, [("d1", 3), ("d2", 3)]))
+    assert _rows(st.read(spark)) == [
+        ("d1", 1, 1, "d1/1"),
+        ("d1", 2, 1, "d1/2"),
+        ("d1", 3, 1, "d1/3"),
+        ("d2", 1, 1, "d2/1"),
+        ("d2", 3, 1, "d2/3"),
+    ]
+    crash(["d1", "d2"])
+    st.delete_where(spark, F.col("k") == 3)
+    expected = [
+        ("d1", 1, 1, "d1/1"),
+        ("d1", 2, 1, "d1/2"),
+        ("d2", 1, 1, "d2/1"),
+    ]
+    assert _rows(st.read(spark)) == expected
+
+    # this table's own fused write fails after the first child adopted
+    # its staged delta: nothing becomes visible, nothing is left staged
+    real_append = MergeOnReadStore._append_delta
+    calls = []
+
+    def failing_append(self, *args, **kwargs):
+        calls.append(self.root)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash between adoptions")
+        return real_append(self, *args, **kwargs)
+
+    v = st.current_version()
+    monkeypatch.setattr(MergeOnReadStore, "_append_delta", failing_append)
+    with pytest.raises(RuntimeError, match="between adoptions"):
+        st.merge(
+            spark.createDataFrame(
+                [
+                    Row(day="d1", k=1, v=7, payload="ABORTED"),
+                    Row(day="d2", k=1, v=7, payload="ABORTED"),
+                ]
+            )
+        )
+    monkeypatch.setattr(MergeOnReadStore, "_append_delta", real_append)
+    assert len(calls) == 2
+    assert st.current_version() == v
+    assert _rows(st.read(spark)) == expected
+    assert not [n for n in os.listdir(st.root) if n.startswith("_staging.")]
+    st.merge(_batch(spark, [("d1", 4), ("d2", 4)]))
+    assert _rows(st.read(spark)) == sorted(
+        expected + [("d1", 4, 1, "d1/4"), ("d2", 4, 1, "d2/4")]
+    )
 
 
 def test_mor_children_cow_only_surfaces_raise(spark, tmp_path):

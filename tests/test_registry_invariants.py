@@ -10,7 +10,6 @@ mid-plan — the invariant applies only to the output schema.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql.types import ArrayType, DateType, MapType, StructType
 
 from parquet_demo_spark.registry import all_queries
 
@@ -18,24 +17,10 @@ QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_output_schema_is_flat(spark, sf_smoke, name):
-    """No array/map/struct/date column in any query's final projection.
-
-    Complex types are unhashable in pandas sort_values; raw DATE columns
-    canonicalize differently per engine (object datetime.date from Spark
-    vs datetime64 from DuckDB) — cast to TIMESTAMP at the query edge.
-    """
-    df = QUERIES[name].spark(spark, sf_smoke)
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType, DateType))
-    ]
-    assert not bad, (
-        f"{name} exposes complex- or date-typed output columns {bad}; "
-        "project them to scalars/strings/timestamps at the query edge "
-        "(driver canon requirement)"
-    )
+def test_output_schema_is_flat(spark, sf_smoke, name, assert_flat_output):
+    """No array/map/struct/date column in any query's final projection
+    (the ``assert_flat_output`` law, on the smoke-scale build)."""
+    assert_flat_output(name, QUERIES[name].spark(spark, sf_smoke))
 
 
 def test_driver_ordering_puts_unsettled_first(tmp_path, monkeypatch):
