@@ -1035,12 +1035,13 @@ class PartitionedParquetMergeStore:
 
     def _by_pval(self, df: DataFrame, n: int) -> DataFrame:
         """``df`` plus its composite partition value ``__pval``,
-        shuffled on it into at most ``n`` (capped at 64) partitions.
+        shuffled on it into ``n`` partitions (at most 64).
 
         The value is the routing collect's own Spark-side rendering.
-        concat_ws never returns NULL, and merge's routing collect has
-        already rejected NULL components, so every row lands in a real
-        ``__pval`` dir."""
+        concat_ws never returns NULL, and no row reaching here has a
+        NULL component (merge's routing collect rejects them; table
+        rows never carry one), so every row lands in a real ``__pval``
+        dir."""
         pval_col = F.concat_ws(
             _SEP, *[F.col(c).cast("string") for c in self.partition_cols]
         )
@@ -1117,7 +1118,10 @@ class PartitionedParquetMergeStore:
         spark = upserts.sparkSession
         with self._staging() as staging:
             slices = self._stage(
-                self._by_pval(upserts, len(pvals)), staging, pvals, True
+                self._by_pval(upserts, len(pvals)),
+                staging,
+                pvals,
+                complete=True,
             )
 
             def _prepare_one(pval: str):
@@ -1223,7 +1227,9 @@ class PartitionedParquetMergeStore:
         }
         records = {p: c._delta_schema(batch) for p, c in children.items()}
         with self._staging() as staging:
-            slices = self._stage(staged, staging, routed, fence_routed)
+            slices = self._stage(
+                staged, staging, routed, complete=fence_routed
+            )
             for p in sorted(set(slices) - set(children)):
                 children[p] = (
                     self._pinned_child(parts[p])

@@ -31,12 +31,12 @@ def sf_smoke():
 
 @pytest.fixture(scope="session")
 def assert_flat_output():
-    """The driver-canon output law, as one check every test that builds
-    a registry query applies to its DataFrame: no array/map/struct/date
+    """The output-canon law, as one check every test that builds a
+    registry query applies to its DataFrame: no array/map/struct/date
     column in the final projection.
 
-    The driver canonicalizes every query result with pandas
-    ``sort_values`` before hashing; list/dict-typed cells are unhashable
+    The result hash canonicalizes every query result with pandas
+    ``sort_values`` first; list/dict-typed cells are unhashable
     there, so a query whose FINAL projection contains an
     array/map/struct column can never get a green CORRECTNESS row
     (round-1 q21/q59b ERR). Complex types are fine mid-plan. Raw DATE

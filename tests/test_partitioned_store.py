@@ -190,15 +190,15 @@ def test_reopen_config_mismatch_raises(spark, tmp_path):
         )
 
 
-def _child_commits(root) -> list[str]:
-    """Every child commit file under a table root: COW manifests and
-    MOR log entries."""
+def _child_files(root) -> list[str]:
+    """Every file under a table root except those directly inside its
+    top-level dirs (global manifests, child pointers): the child
+    stores' manifests, log entries and data files."""
     return sorted(
         os.path.relpath(os.path.join(d, f), root)
         for d, _, files in os.walk(root)
+        if os.path.dirname(d) != str(root)
         for f in files
-        if f == "manifest.json" and os.path.dirname(d) != str(root)
-        or os.path.basename(d) == "_log"
     )
 
 
@@ -218,10 +218,10 @@ def test_null_partition_value_raises(spark, tmp_path):
             st.merge(nulls)
         assert st.current_version() is None
         st.merge(_batch(spark, [("d1", 1)]))
-        before = _child_commits(st.root)
+        before = _child_files(st.root)
         with pytest.raises(ValueError, match="NULL"):
             st.merge(nulls)
-        assert _child_commits(st.root) == before
+        assert _child_files(st.root) == before
         assert st.current_version() == 0
         assert _rows(st.read(spark)) == [("d1", 1, 1, "d1/1")]
 
