@@ -2692,11 +2692,12 @@ class ParquetMergeStore:
                 )
                 for i, r in enumerate(rel)
             ]
-            # balanced fold (the resolve_deltas law: O(n log n) driver
-            # analysis, not a left-deep chain) with missing columns
-            # null-filled — a branch evolution between feed-bearing
-            # commits leaves earlier feeds narrower; the head commit's
-            # feed always carries the published column set
+            # one relation per feed, in a balanced union (O(n log n)
+            # driver analysis, not a left-deep chain) with missing
+            # columns null-filled: a branch evolution between
+            # feed-bearing commits leaves earlier feeds narrower, so
+            # one scan over every feed could not type them; the head
+            # commit's feed always carries the published column set
             while len(parts) > 1:
                 parts = [
                     parts[i].unionByName(

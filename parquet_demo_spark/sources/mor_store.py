@@ -62,6 +62,7 @@ import json
 import os
 import shutil
 import tempfile
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -73,7 +74,7 @@ from parquet_demo_spark.sources.merge_store import (
     apply_where_ranges,
 )
 from parquet_demo_spark.sources.mongo import collapse_for_upsert
-from parquet_demo_spark.tuning import scoped_store_op
+from parquet_demo_spark.tuning import plan_scope, scoped_store_op
 
 _OP = "__op"
 _SEQ = "__seq"
@@ -750,10 +751,10 @@ class MergeOnReadStore:
         dirs appended up to that state. Callers pass one snapshot of
         the log (compact() MUST fold the same list it later truncates:
         a second read would race a concurrent append). When the
-        state's type map covers every recorded column, the scans take
-        it as their schema: ``commit_delta`` validated every appended
-        batch against that record, and a read then costs no
-        footer-inference job per delta dir."""
+        state's type map covers every recorded column, the fold's one
+        scan takes it as its schema: ``commit_delta`` validated every
+        appended batch against that record, and a read then costs no
+        footer-inference job."""
         if state is None:
             state = self._log()
         if dirs is None:
@@ -771,7 +772,11 @@ class MergeOnReadStore:
         base_df: DataFrame | None,
         state: dict,
         where: dict | None = None,
+        keys: DataFrame | None = None,
     ) -> DataFrame:
+        """``base_df`` (a base read, or a probe's base hits) minus
+        every PK the fold of ``state``'s delta dirs names, plus the
+        fold's upserts; a probe's ``keys`` restrict the fold first."""
         latest = self._resolved(spark, state)
         cols = state.get("columns") or self._columns()
         if latest is None:
@@ -780,6 +785,8 @@ class MergeOnReadStore:
                     return self._empty_frame(spark)  # emptied, not unborn
                 raise ValueError(f"empty merge-on-read store: {self.root}")
             return base_df
+        if keys is not None:
+            latest = latest.join(keys, list(self.keys), "left_semi")
         ups = latest.filter(F.col(_OP) == "u").select(*cols)
         if where:
             # the base side arrives already where-filtered (exact, via
@@ -857,28 +864,13 @@ class MergeOnReadStore:
             if "base_version" in state
             else self.base.current_version()
         )
-        latest = self._resolved(spark, state)
         keys = keys_df.select(*self.keys).dropDuplicates()
         base_hits = (
             self.base.probe(spark, keys, version=cur, buckets=buckets)
             if cur is not None
             else None
         )
-        if latest is None:
-            if base_hits is None:
-                if self._schema_record() is not None:
-                    return self._empty_frame(spark)  # emptied, not unborn
-                raise ValueError(f"empty merge-on-read store: {self.root}")
-            return base_hits
-        cols = state.get("columns") or self._columns()
-        latest = latest.join(keys, list(self.keys), "left_semi")
-        ups = latest.filter(F.col(_OP) == "u").select(*cols)
-        if base_hits is None:
-            return ups
-        keep = base_hits.join(
-            latest.select(*self.keys), list(self.keys), "left_anti"
-        )
-        return keep.select(*cols).unionByName(ups)
+        return self._overlay(spark, base_hits, state, keys=keys)
 
     # --- inspection ---
 
@@ -1449,8 +1441,8 @@ class MergeOnReadStore:
 def schema_ddl(names, types: dict[str, str] | None) -> str | None:
     """Spark DDL for the columns ``names`` from a recorded {column:
     type} map; ``None`` when there is no map or it misses one of them
-    (scans then infer their schema from the footers, one Spark job per
-    scanned path)."""
+    (a scan then infers its schema from a footer, one Spark job per
+    scan)."""
     if not names or types is None or any(c not in types for c in names):
         return None
     return ", ".join(f"`{c}` {types[c]}" for c in names)
@@ -1465,41 +1457,49 @@ def resolve_deltas(
     """Last-write-wins fold of delta dirs: the newest action per PK,
     ``None`` when ``paths`` is empty.
 
-    ``paths`` lists delta dirs in log order. Each row is tagged with
-    its dir's POSITION (``__seq``): the committed dirs order IS the
-    total write order, so sequence comes from the log — never from
-    data files (a CAS-losing rebased append would otherwise carry a
-    stale embedded number). PKs are unique within a batch after the
+    ``paths`` lists delta dirs in log order, and all of them are read
+    as ONE parquet scan, so planning and task count do not grow with
+    the number of dirs. Each row is tagged with the log POSITION of
+    the dir its file lives in (``__seq``), looked up by the file's
+    exact path in a map built on the driver from the scan's own file
+    listing: the committed dirs order IS the total write order, so
+    sequence comes from the log — never from data files (a CAS-losing
+    rebased append would otherwise carry a stale embedded number,
+    which this tag replaces). PKs are unique within a batch after the
     commit-side collapse, so the position alone is a total order per
     key. Dirs of several stores may be folded at once when no PK
     spans two of them (the partitioned table's children: partition
     columns are PK columns); positions then only need to rise with
     log order within each store. ``ddl`` is an explicit ROW schema
-    (:func:`schema_ddl` of the table columns; ``__op`` is appended),
-    which skips each dir's footer-inference job. The union is a
-    balanced tree (O(D log D) driver analysis, not the O(D²)
-    left-deep chain)."""
+    (:func:`schema_ddl` of the table columns; ``__op`` is appended);
+    without it the scan infers its schema, one footer job per fold.
+    The dirs are listed on the driver, under a pinned small-plan
+    scope: past Spark's parallel-discovery threshold (32 paths) the
+    listing would otherwise be a job of its own."""
     if not paths:
         return None
     reader = (
         spark.read.schema(f"{ddl}, `{_OP}` string") if ddl else spark.read
     )
-    frames = []
-    for i, p in enumerate(paths):
-        df = reader.parquet(p)
-        if _SEQ in df.columns:  # legacy log: embedded commit seq
-            df = df.drop(_SEQ)
-        frames.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
-    while len(frames) > 1:
-        frames = [
-            frames[i].unionByName(frames[i + 1])
-            if i + 1 < len(frames)
-            else frames[i]
-            for i in range(0, len(frames), 2)
+    # 0 bytes: the scope holds only while the relation is built (its
+    # listing, plus one footer job when untyped), not while it is read
+    with plan_scope(spark, 0):
+        df = reader.parquet(*paths)
+    pos = {os.path.abspath(p): i for i, p in enumerate(paths)}
+    seq = []
+    for f in df.inputFiles():
+        # the scan reports a file as a URI; ``_metadata.file_path``
+        # renders the same URI without an empty authority
+        u = urlsplit(f)
+        auth = f"//{u.netloc}" if u.netloc else ""
+        seq += [
+            F.lit(f"{u.scheme}:{auth}{u.path}"),
+            F.lit(pos[os.path.dirname(unquote(u.path))]),
         ]
+    log_pos = F.create_map(*seq).cast("map<string, bigint>")
     w = Window.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
     return (
-        frames[0]
+        df.withColumn(_SEQ, log_pos[F.col("_metadata.file_path")])
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", _SEQ)

@@ -1986,11 +1986,14 @@ class PartitionedParquetMergeStore:
         self, spark: SparkSession, era: dict, keys: DataFrame | None = None
     ) -> DataFrame:
         """One era's children as ONE plan: a multi-dir base scan minus
-        one broadcast DV anti-join, overlaid by one last-write-wins
-        delta fold; a probe's ``keys`` add semi-joins on the full PK.
-        The per-child plans carry one window and one anti-join PER
-        CHILD, and AQE materializes each exchange as its own job
-        (q201 census: 21 -> 5 jobs per table read at 13 children).
+        one broadcast DV anti-join, overlaid by the last-write-wins
+        fold of every child's delta dirs, itself one parquet scan and
+        one window however many dirs the era's logs hold
+        (:func:`~parquet_demo_spark.sources.mor_store.resolve_deltas`);
+        a probe's ``keys`` add semi-joins on the full PK. The
+        per-child plans carry one window and one anti-join PER CHILD,
+        and AQE materializes each exchange as its own job (q201
+        census: 21 -> 5 jobs per table read at 13 children).
 
         Sound because every partition column is a PK column (module
         docstring): the fold's window, the DV anti-join and the
@@ -2000,8 +2003,7 @@ class PartitionedParquetMergeStore:
         validates every appended batch against the child's recorded
         column/type map, so a child's live delta dirs share its
         columns. With a recorded type map every scan passes an
-        explicit schema, which skips one footer-inference driver job
-        per scanned path."""
+        explicit schema, which skips its footer-inference job."""
         from parquet_demo_spark.sources.mor_store import (
             _OP,
             resolve_deltas,
@@ -2391,14 +2393,19 @@ class PartitionedParquetMergeStore:
                 (fusable if uniform and era["cols"] == cols else slow).extend(
                     era["layouts"]
                 )
+            # the table's type record holds for every child's files (a
+            # merge never retypes a column), so the fused scans take it
+            # as their schema
+            types = self._column_types_at(v_to)
             if self.child_store == "mor":
                 fused, rest = self._log_diff(
-                    spark, p_from, p_to, fusable, cols, v_from,
+                    spark, p_from, p_to, fusable, cols, types, v_from,
                     include_preimages,
                 )
             else:
                 fused, rest = self._snapshot_diff(
-                    spark, p_from, p_to, fusable, cols, include_preimages
+                    spark, p_from, p_to, fusable, cols, types,
+                    include_preimages,
                 )
             if fused is not None:
                 outs.append(fused)
@@ -2443,6 +2450,7 @@ class PartitionedParquetMergeStore:
         p_to: dict,
         pvals: list,
         cols: list[str],
+        types: dict[str, str] | None,
         include_preimages: bool,
     ) -> tuple[DataFrame | None, list]:
         """The COW diff law for the fusable changed children, as ONE
@@ -2462,8 +2470,12 @@ class PartitionedParquetMergeStore:
         bucket count inside the span (no rebucket — old keys then hash
         to their own changed bucket ids under ``v_to``, so the presence
         read needs no per-child collect); otherwise it is a straggler.
+        ``types`` (the table's {column: type} record) gives every scan
+        an explicit schema, which skips its footer-inference job; COW
+        children record no type map of their own.
         """
         from parquet_demo_spark.sources.cdc import classify_changes
+        from parquet_demo_spark.sources.mor_store import schema_ddl
 
         pk = list(self.keys)
         sides: dict[str, list[str]] = {
@@ -2514,11 +2526,16 @@ class PartitionedParquetMergeStore:
             # the same rows as the per-child limit(0)
             return None, slow
 
+        row_ddl = schema_ddl(cols, types)
+        reader = spark.read.schema(row_ddl) if row_ddl else spark.read
+
         def _scan(side: str) -> DataFrame | None:
             if not sides[side]:
                 return None
-            df = spark.read.parquet(*sorted(set(sides[side]))).select(*cols)
-            return anti_join_dv(spark, df, pk, sides[f"dv_{side}"])
+            df = reader.parquet(*sorted(set(sides[side]))).select(*cols)
+            return anti_join_dv(
+                spark, df, pk, sides[f"dv_{side}"], schema_ddl(pk, types)
+            )
 
         new, old = _scan("new"), _scan("old")
         if old is None:
@@ -2554,6 +2571,7 @@ class PartitionedParquetMergeStore:
         p_to: dict,
         pvals: list,
         cols: list[str],
+        types: dict[str, str] | None,
         v_from: int,
         include_preimages: bool,
     ) -> tuple[DataFrame | None, list]:
@@ -2574,11 +2592,14 @@ class PartitionedParquetMergeStore:
         _span_append_dirs` — appends and compacts only) whose appended
         dirs are still on disk; otherwise it is a straggler. A span
         that appended nothing contributes no rows either way.
+        ``types`` (the table's {column: type} record) types the delta
+        scan, which skips its footer-inference job.
         """
         from parquet_demo_spark.sources.mor_store import (
             _OP,
             MergeOnReadStore,
             resolve_deltas,
+            schema_ddl,
         )
 
         pk = list(self.keys)
@@ -2604,9 +2625,9 @@ class PartitionedParquetMergeStore:
         # the table probe's pair collect materializes the fold once;
         # classification reuses it (the child-level fast path's own
         # lazy-checkpoint law)
-        latest = resolve_deltas(spark, pk, paths).localCheckpoint(
-            eager=False
-        )
+        latest = resolve_deltas(
+            spark, pk, paths, schema_ddl(cols, types)
+        ).localCheckpoint(eager=False)
         pre = self.probe(spark, latest.select(*pk), version=v_from).select(
             *cols
         )

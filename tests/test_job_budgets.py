@@ -99,12 +99,57 @@ def test_mor_partitioned_delete_where_is_one_job(
     assert live.count() == 0
 
 
-def test_mor_read_jobs_flat_in_delta_count(spark, tmp_path):
-    """A read with a recorded type map takes it as the delta scans'
-    schema: no footer-inference job per delta dir, so one and six live
-    delta dirs cost the same."""
+def _live_deltas(table) -> int:
+    if table.current_version() is None:
+        return 0
+    return sum(
+        table._child(e["dir"]).delta_count() for e in table._parts().values()
+    )
+
+
+def _scan_relations(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count(
+        "Relation ["
+    )
+
+
+def test_mor_partitioned_read_jobs_flat_in_delta_count(spark, tmp_path):
+    """The fused read folds every child's delta dirs in ONE scan, so
+    1, 6 and 40 live delta dirs cost the same jobs. 40 is above
+    Spark's 32-path parallel-listing threshold: the fold lists its
+    dirs on the driver, with no listing job."""
     counts = {}
-    for n_deltas in (1, 6):
+    for n_deltas in (1, 6, 40):
+        table = PartitionedParquetMergeStore(
+            str(tmp_path / f"pmor{n_deltas}"),
+            keys=("day", "k"),
+            partition_col="day",
+            version_cols=("v",),
+            num_buckets=2,
+            child_store="mor",
+        )
+        expect, v = {}, 0
+        while _live_deltas(table) < n_deltas:
+            v += 1
+            days = DAYS[: n_deltas - _live_deltas(table)]
+            table.merge(_batch(spark, days, v))
+            expect.update({(d, k): v for d in days for k in range(5)})
+        assert _live_deltas(table) == n_deltas
+        counts[n_deltas] = _jobs(spark, lambda: table.read(spark).collect())
+        assert _scan_relations(table.read(spark)) == 1
+        assert sorted(
+            ((r.day, r.k), r.v) for r in table.read(spark).collect()
+        ) == sorted(expect.items())
+    assert counts == {1: 2, 6: 2, 40: 2}, counts
+
+
+def test_mor_read_jobs_flat_in_delta_count(spark, tmp_path):
+    """A read with a recorded type map takes it as the delta scan's
+    schema and folds every delta dir in ONE scan relation: 1, 6 and 40
+    live delta dirs cost the same jobs (no footer-inference job, and
+    no listing job past the 32-path threshold)."""
+    counts = {}
+    for n_deltas in (1, 6, 40):
         store = MergeOnReadStore(
             str(tmp_path / f"mor{n_deltas}"),
             keys=("k",),
@@ -121,7 +166,27 @@ def test_mor_read_jobs_flat_in_delta_count(spark, tmp_path):
             )
         assert store.delta_count() == n_deltas
         counts[n_deltas] = _jobs(spark, lambda: store.read(spark).collect())
+        assert _scan_relations(store._resolved(spark)) == 1
         assert sorted((r.k, r.v) for r in store.read(spark).collect()) == [
             (k, n_deltas - 1) for k in range(3)
         ]
     assert counts[6] == counts[1], counts
+    assert counts[40] == counts[1], counts
+
+
+def test_mor_partitioned_changes_between_jobs(spark, mor_table):
+    """A two-version CDC read over two changed MOR children: the
+    appended dirs fold in one typed scan (no footer job), and the
+    pre-state comes from one table probe."""
+    v1 = mor_table.current_version()
+    mor_table.merge(_batch(spark, DAYS[:2], 2))
+    v2 = mor_table.current_version()
+    assert (
+        _jobs(spark, lambda: mor_table.changes_between(spark, v1, v2).collect())
+        == 9
+    )
+    rows = mor_table.changes_between(spark, v1, v2).collect()
+    assert {r._change_type for r in rows} == {"update_postimage"}
+    assert sorted((r.day, r.k) for r in rows) == [
+        (d, k) for d in DAYS[:2] for k in range(5)
+    ]

@@ -4,14 +4,18 @@ orphan handling, schema/op validation."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
-from parquet_demo_spark.sources.mor_store import MergeOnReadStore
+from parquet_demo_spark.sources.mor_store import (
+    MergeOnReadStore,
+    resolve_deltas,
+)
 
 
 def _store(tmp_path, **kw):
@@ -176,6 +180,96 @@ def test_orphan_delta_dir_ignored_and_vacuumed(spark, tmp_path):
     assert any("d00099-orphan" in r for r in removed)
     assert _rows(st.probe(spark, spark.createDataFrame([Row(k=1)]))) == [
         (1, 2, "edit")
+    ]
+
+
+_FOLD_DDL = "`p` string, `k` bigint, `v` bigint, `payload` string"
+
+
+def _per_dir_fold(spark, keys, paths, ddl=None):
+    """Reference last-write-wins fold: one relation per delta dir,
+    tagged with the dir's log position, unioned in log order."""
+    reader = spark.read.schema(f"{ddl}, `__op` string") if ddl else spark.read
+    frames = []
+    for i, p in enumerate(paths):
+        df = reader.parquet(p)
+        if "__seq" in df.columns:
+            df = df.drop("__seq")
+        frames.append(df.withColumn("__seq", F.lit(i).cast("bigint")))
+    w = Window.partitionBy(*keys).orderBy(F.col("__seq").desc())
+    return (
+        functools.reduce(DataFrame.unionByName, frames)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__seq")
+    )
+
+
+@pytest.mark.parametrize("typed", [True, False], ids=["ddl", "inferred"])
+def test_resolve_deltas_matches_per_dir_fold(spark, tmp_path, typed):
+    """The one-scan fold equals the per-dir fold over two children's
+    interleaved logs: PKs rewritten across dirs (a delete after an
+    upsert and an upsert after a delete), two dirs of the same name
+    whose part files share names (one staged write split by child), a
+    dir of several files, a zero-row dir, dir names that prefix one
+    another, and a legacy dir whose embedded ``__seq`` would reverse
+    the order if it were read. The root's space and ``%20`` are
+    URI-encoded in the scan's file paths."""
+    schema = f"{_FOLD_DDL}, `__op` string"
+    root = tmp_path / "log 100%20"
+    a, b = root / "a" / "deltas", root / "b" / "deltas"
+    a.mkdir(parents=True)
+    b.mkdir(parents=True)
+    # one staged write, split into each child's deltas/ab
+    stage = str(root / "stage")
+    spark.createDataFrame(
+        [
+            ("a", 1, 1, "a1", "u", "a"),
+            ("a", 2, 1, None, "d", "a"),
+            ("a", 3, 1, "a3", "u", "a"),
+            ("b", 1, 1, "b1", "u", "b"),
+            ("b", 2, 1, "b2", "u", "b"),
+        ],
+        f"{schema}, `__pval` string",
+    ).coalesce(1).write.partitionBy("__pval").parquet(stage)
+    os.rename(os.path.join(stage, "__pval=a"), a / "ab")
+    os.rename(os.path.join(stage, "__pval=b"), b / "ab")
+    assert sorted(os.listdir(a / "ab")) == sorted(os.listdir(b / "ab"))
+    spark.createDataFrame([], schema).write.parquet(str(a / "a"))
+    spark.createDataFrame(
+        [
+            ("a", 1, 2, None, "d"),
+            ("a", 2, 2, "a2", "u"),
+            ("a", 4, 2, "a4", "u"),
+            ("a", 5, 2, "a5", "u"),
+        ],
+        schema,
+    ).repartition(3).write.parquet(str(a / "abc"))
+    assert sum(f.endswith(".parquet") for f in os.listdir(a / "abc")) > 1
+    # a legacy dir: its embedded seq (0) would lose to b/ab's upsert
+    spark.createDataFrame(
+        [("b", 1, 2, None, "d", 0)], f"{schema}, `__seq` bigint"
+    ).write.parquet(str(b / "abcd"))
+    paths = [str(p) for p in (a / "ab", b / "ab", a / "a", a / "abc")]
+    paths.append(str(b / "abcd"))
+    ddl = _FOLD_DDL if typed else None
+
+    def _fold_rows(df):
+        return sorted(
+            tuple(r) for r in df.select("p", "k", "v", "payload", "__op")
+            .collect()
+        )
+
+    got = _fold_rows(resolve_deltas(spark, ("p", "k"), paths, ddl))
+    assert got == _fold_rows(_per_dir_fold(spark, ("p", "k"), paths, ddl))
+    assert got == [
+        ("a", 1, 2, None, "d"),
+        ("a", 2, 2, "a2", "u"),
+        ("a", 3, 1, "a3", "u"),
+        ("a", 4, 2, "a4", "u"),
+        ("a", 5, 2, "a5", "u"),
+        ("b", 1, 2, None, "d"),
+        ("b", 2, 1, "b2", "u"),
     ]
 
 
