@@ -36,29 +36,18 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_demo_spark.sources import commit_log
 from parquet_demo_spark.sources.cdc import classify_changes
+from parquet_demo_spark.sources.commit_log import ConcurrentWriteConflict
 from parquet_demo_spark.tuning import scoped_store_op
 
 _BUCKET = "__bucket"
 _FROM_UPSERT = "__from_upsert"
-
-
-class ConcurrentWriteConflict(RuntimeError):
-    """Another writer claimed the version this commit targeted.
-
-    Delta-style optimistic concurrency: the exclusive creation of
-    ``v{N}/manifest.json`` is the compare-and-swap. The loser's data
-    dirs are unreferenced (vacuum reclaims them); the caller should
-    re-read the table and retry its merge on top of the winner. If NO
-    other writer is active, the blocking manifest is a crashed commit's
-    orphan — remove it with :meth:`ParquetMergeStore.clean_orphans`.
-    """
 
 
 # -- per-bucket bloom filters (point-lookup data skipping) --------------
@@ -332,6 +321,17 @@ class ParquetMergeStore:
         # appliers — without the cache every batch re-reads a bucket
         # footer just to learn types that can never change
         self._pk_types_by_version: dict[int, dict] = {}
+        self._chain = commit_log.manifest_log(
+            root,
+            "version",
+            self._read_manifest,
+            commit_log.Rebase(
+                self._REBASE_SAFE_OPS,
+                self._footprint,
+                self._compatible,
+                self._overlay,
+            ),
+        )
         os.makedirs(root, exist_ok=True)
         # reopening an existing store with different bucketing/key config
         # would silently route the same PK to a different bucket: the old
@@ -377,22 +377,14 @@ class ParquetMergeStore:
                     "value); pass the manifest's values to reopen it"
                 )
 
-    # -- pointer / manifest plumbing -----------------------------------
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "_latest")
+    # -- pointer / manifest plumbing (sources/commit_log.py) -----------
 
     def current_version(self) -> int | None:
         """Committed version, or None for an empty store."""
-        try:
-            with open(self._pointer) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return self._chain.head()
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version:05d}", "manifest.json")
+        return self._chain.path(version)
 
     def _read_manifest(self, version: int) -> dict:
         return _load_manifest(self._manifest_path(version))
@@ -428,8 +420,6 @@ class ParquetMergeStore:
         dv: dict[int, str] | None = None,
         evolved: bool | None = None,
     ) -> int:
-        vdir = os.path.join(self.root, f"v{version:05d}")
-        os.makedirs(vdir, exist_ok=True)
         manifest = {
             "version": version,
             "keys": list(self.keys),
@@ -490,59 +480,11 @@ class ParquetMergeStore:
             "op_params": op_params or {},
             "committed_at": __import__("time").time(),
         }
-        # optimistic concurrency: O_EXCL manifest creation is the CAS.
-        # Two writers that both read version N-1 both target N; exactly
-        # one creates N's manifest. The loser REBASES when its write is
-        # provably disjoint from everything committed since its base
-        # (Delta-style conflict resolution — see _try_rebase), else
-        # gets a clean conflict instead of silently stealing the
-        # pointer (lost update).
-        try:
-            fh = open(self._manifest_path(version), "x")
-        except FileExistsError:
-            committed = self.current_version()
-            if committed is not None and committed >= version:
-                # a successful rebase commits at a HIGHER version — the
-                # caller must return THAT number, not its stale
-                # pre-race target (which now names the competitor's
-                # commit; pinning or reading it would lose this write)
-                rebased_to = self._try_rebase(version, manifest)
-                if rebased_to is not None:
-                    return rebased_to
-            raise ConcurrentWriteConflict(
-                f"version {version} already has a manifest (committed "
-                f"pointer: {committed}): "
-                + (
-                    "another writer won this commit with an OVERLAPPING "
-                    "footprint — re-read and retry"
-                    if committed is not None and committed >= version
-                    else "a concurrent writer is mid-commit, or a "
-                    "crashed commit left an orphan (clean_orphans() "
-                    "removes it if no writer is active)"
-                )
-            ) from None
-        with fh:
-            json.dump(manifest, fh, indent=1)
-            fh.flush()
-            os.fsync(fh.fileno())
-        self._swap_pointer(version)
-        return version
-
-    def _swap_pointer(self, version: int) -> None:
-        # the commit point: readers see the new version only after this
-        # atomic replace succeeds — with a monotonic fix-up: two racing
-        # replaces can land out of order, and a pointer REGRESSION
-        # would make the newer committed version look like an orphan
-        while True:
-            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_latest.")
-            with os.fdopen(fd, "w") as fh:
-                fh.write(str(version))
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, self._pointer)
-            cur = self.current_version()
-            if cur is not None and cur >= version:
-                break
+        # optimistic concurrency (commit_log): the O_EXCL manifest
+        # create is the CAS; a loser to a committed writer rebases when
+        # its write is provably disjoint from everything committed since
+        # its base, and returns the HIGHER version it landed at
+        return self._chain.commit(version, manifest)
 
     # rebase-safe commits: effects confined to their touched buckets.
     # restore re-pins the WHOLE table (semantic conflict with any
@@ -552,118 +494,53 @@ class ParquetMergeStore:
         {"merge", "merge_into", "delete", "delete_keys", "compact"}
     )
 
-    def _touched_between(self, older: dict, newer: dict) -> set[int]:
+    @staticmethod
+    def _footprint(older: dict, newer: dict) -> set[int]:
         """Bucket ids whose data dir OR deletion vector differs between
         two manifests — the commit's footprint."""
-        a_paths = {int(k): v for k, v in older.get("bucket_paths", {}).items()}
-        b_paths = {int(k): v for k, v in newer.get("bucket_paths", {}).items()}
-        a_dv = {int(k): v for k, v in older.get("dv", {}).items()}
-        b_dv = {int(k): v for k, v in newer.get("dv", {}).items()}
-        return {
-            b
-            for b in set(a_paths) | set(b_paths)
-            if a_paths.get(b) != b_paths.get(b) or a_dv.get(b) != b_dv.get(b)
-        }
+        def entry(m: dict, b: str) -> tuple:
+            return m.get("bucket_paths", {}).get(b), m.get("dv", {}).get(b)
 
-    def _try_rebase(self, version: int, manifest: dict) -> int | None:
-        """Delta-style rebase of a CAS-losing commit (VERDICT r8 #6).
-        Returns the version the rebased commit landed at, or None when
-        the conflict is real (the caller raises).
+        buckets = {*older.get("bucket_paths", {}), *newer.get("bucket_paths", {})}
+        return {int(b) for b in buckets if entry(older, b) != entry(newer, b)}
 
-        The loser's write is replayable on the new head iff (a) its own
-        footprint — buckets whose dir or DV it changed vs its BASE
-        (version-1) — is disjoint from every bucket any intervening
-        commit touched, (b) nobody changed the schema, bucket count, or
-        constraints underneath it, and (c) both sides ran rebase-safe
-        operations. Then the loser's touched buckets overlay the head's
-        manifest verbatim (its rewrites were computed from base state
-        those commits provably didn't touch — unique artifact-dir names
-        mean the winner's files were never clobbered), and the commit
-        retries at head+1. Anything else stays a
-        ConcurrentWriteConflict.
-        """
-        if manifest["operation"] not in self._REBASE_SAFE_OPS:
-            return None
-        head = self.current_version()
-        if head is None or head < version:
-            return None
-        base_m = (
-            {"bucket_paths": {}, "dv": {}}
-            if version == 0
-            else self._read_manifest(version - 1)
+    @staticmethod
+    def _compatible(head: dict, ours: dict) -> bool:
+        """Nobody changed the schema, bucket count or constraints
+        underneath a rebasing commit."""
+        return (
+            head["num_buckets"] == ours["num_buckets"]
+            and list(head["columns"]) == list(ours["columns"])
+            and head.get("constraints", {}) == ours["constraints"]
         )
-        ours = self._touched_between(base_m, manifest)
-        prev = base_m
-        for v in range(version, head + 1):
-            try:
-                m = self._read_manifest(v)
-            except (FileNotFoundError, ValueError):
-                return None
-            if m.get("operation", "merge") not in self._REBASE_SAFE_OPS:
-                return None
-            if self._touched_between(prev, m) & ours:
-                return None
-            prev = m
-        head_m = prev
-        if (
-            head_m["num_buckets"] != manifest["num_buckets"]
-            or list(head_m["columns"]) != list(manifest["columns"])
-            or head_m.get("constraints", {}) != manifest["constraints"]
-        ):
-            return None
-        # overlay OUR footprint onto the head's maps (string keys)
-        ours_s = {str(b) for b in ours}
-        rebased = dict(head_m)
-        for field in ("bucket_paths", "stats", "blooms", "file_stats", "dv"):
-            merged = {
-                k: v
-                for k, v in head_m.get(field, {}).items()
-                if k not in ours_s
+
+    @staticmethod
+    def _overlay(head: dict, ours: dict, footprint: set) -> dict:
+        """A rebasing commit's touched buckets, overlaid verbatim on the
+        head's maps: its rewrites were computed from base state the
+        intervening commits provably didn't touch (unique artifact-dir
+        names mean the winner's files were never clobbered)."""
+        keys = {str(b) for b in footprint}
+        out: dict = {
+            field: {
+                **{k: v for k, v in head.get(field, {}).items() if k not in keys},
+                **{k: v for k, v in ours.get(field, {}).items() if k in keys},
             }
-            merged.update(
-                {
-                    k: v
-                    for k, v in manifest.get(field, {}).items()
-                    if k in ours_s
-                }
-            )
-            rebased[field] = merged
-        for field in (
-            "change_feed",
-            "operation",
-            "op_params",
-            "committed_at",
-        ):
-            rebased[field] = manifest[field]
+            for field in ("bucket_paths", "stats", "blooms", "file_stats", "dv")
+        }
+        out["change_feed"] = ours["change_feed"]
         # sticky evolution marker: conservative OR of both lineages
         # (columns are equal, but the flag may be True from history)
-        rebased["evolved"] = bool(manifest["evolved"]) or bool(
-            head_m.get("evolved", True)
+        out["evolved"] = bool(ours["evolved"]) or bool(
+            head.get("evolved", True)
         )
-        rebased["op_params"] = {
-            **manifest["op_params"],
-            # multi-level recursion must keep the ORIGINAL pre-race
-            # base in the lineage record, not the intermediate retry's
-            # version (ADVICE r9)
-            "rebased_from": manifest["op_params"].get(
-                "rebased_from", version
-            ),
-        }
-        rebased["version"] = head + 1
-        os.makedirs(
-            os.path.join(self.root, f"v{head + 1:05d}"), exist_ok=True
-        )
-        try:
-            fh = open(self._manifest_path(head + 1), "x")
-        except FileExistsError:
-            # someone landed head+1 meanwhile: recurse one level up
-            return self._try_rebase(head + 1, rebased)
-        with fh:
-            json.dump(rebased, fh, indent=1)
-            fh.flush()
-            os.fsync(fh.fileno())
-        self._swap_pointer(head + 1)
-        return head + 1
+        return out
+
+    def _try_rebase(self, version: int, manifest: dict) -> int:
+        """Delta-style rebase of a commit that lost ``version``
+        (VERDICT r8 #6; see commit_log): returns the version it landed
+        at, or raises :class:`ConcurrentWriteConflict`."""
+        return self._chain.rebase(version, manifest)
 
     def _bucket_paths(self, version: int) -> dict[int, str]:
         m = self._read_manifest(version)
@@ -1439,12 +1316,7 @@ class ParquetMergeStore:
         return df.join(keys, list(self.keys), "left_semi")
 
     def history(self) -> list[int]:
-        vs = []
-        for d in os.listdir(self.root):
-            if d.startswith("v") and d[1:].isdigit():
-                if os.path.exists(self._manifest_path(int(d[1:]))):
-                    vs.append(int(d[1:]))
-        return sorted(vs)
+        return self._chain.slots()
 
     # -- write side -----------------------------------------------------
 
@@ -3553,26 +3425,12 @@ class ParquetMergeStore:
         bpfx = os.path.abspath(branch.root) + os.sep
         cur = self.current_version()
         if cur is not None:
-            committed = [v for v in self.history() if v <= cur]
-            if keep_last is None and older_than is None:
-                retained = list(committed)
-            else:
-                # mirror vacuum's slicing EXACTLY (committed[-kl:],
-                # where kl=0 retains everything) so "pass the same
-                # keep_last you vacuum with" holds at every value —
-                # max(1, ...) used to map 0 to 1 and could drop a
-                # branch that vacuum(keep_last=0)'s retained versions
-                # still reference (ADVICE r11)
-                kl = 1 if keep_last is None else int(keep_last)
-                retained = committed[-kl:]
-                if older_than is not None:
-                    for v in committed:
-                        if v in retained:
-                            continue
-                        at = self._read_manifest(v).get("committed_at")
-                        if at is None or at >= older_than:
-                            retained.append(v)
-            for v in sorted(set(retained) | {cur}):
+            # vacuum's own retention law, so "pass the same keep_last
+            # you vacuum with" holds at every value (keep_last=0 keeps
+            # everything — ADVICE r11); no arguments keep every version
+            if keep_last is None:
+                keep_last = 0 if older_than is None else 1
+            for v in self._chain.retained(keep_last, older_than):
                 m = self._read_manifest(v)
                 refs = list(m.get("bucket_paths", {}).values()) + list(
                     m.get("dv", {}).values()
@@ -3614,41 +3472,19 @@ class ParquetMergeStore:
         commit time, bucket/feed footprint. Orphan manifests (above the
         pointer) are excluded; pre-provenance manifests report
         operation 'unknown'."""
-        current = self.current_version()
-        if current is None:
-            return []
-        out = []
-        for v in self.history():
-            if v > current:
-                continue
-            m = self._read_manifest(v)
-            out.append(
-                {
-                    "version": v,
-                    "operation": m.get("operation", "unknown"),
-                    "op_params": m.get("op_params", {}),
-                    "committed_at": m.get("committed_at"),
-                    "n_buckets": len(m.get("bucket_paths", {})),
-                    "change_feed": m.get("change_feed"),
-                }
-            )
-        return out
+        return self._chain.describe(
+            lambda m: {
+                "n_buckets": len(m.get("bucket_paths", {})),
+                "change_feed": m.get("change_feed"),
+            },
+        )
 
     def version_at(self, timestamp: float) -> int:
         """Largest committed version with committed_at <= ``timestamp``
         (epoch seconds) — timestamp-based time travel:
         ``store.read(spark, version=store.version_at(ts))``. Raises if
         the store has no commit at or before the timestamp."""
-        best = None
-        for row in self.describe_history():
-            at = row["committed_at"]
-            if at is not None and at <= timestamp:
-                best = row["version"]
-        if best is None:
-            raise ValueError(
-                f"no commit at or before {timestamp} in {self.root}"
-            )
-        return best
+        return self._chain.version_at(timestamp)
 
     def clean_orphans(self) -> list[int]:
         """Remove crashed commits' manifests (versions above the
@@ -3663,13 +3499,7 @@ class ParquetMergeStore:
         reclaims them); only the unreferenced manifests go. Returns the
         removed version numbers.
         """
-        committed = self.current_version()
-        removed = []
-        for v in self.history():
-            if committed is None or v > committed:
-                os.remove(self._manifest_path(v))
-                removed.append(v)
-        return removed
+        return self._chain.clean_orphans()
 
     def vacuum(
         self, keep_last: int = 1, older_than: float | None = None
@@ -3703,34 +3533,19 @@ class ParquetMergeStore:
         """
         import shutil
 
-        current = self.current_version()
-        if current is None:
+        keep_versions = self._chain.retained(keep_last, older_than)
+        if not keep_versions:
             # nothing committed: any on-disk state is a crashed first
             # merge; removing it could race that merge's commit, and
             # keeping it costs only uncommitted scratch
             return []
-        committed = [v for v in self.history() if v <= current]
-        keep_versions = committed[-keep_last:]
-        if older_than is not None:
-            for v in committed:
-                if v in keep_versions:
-                    continue
-                at = self._read_manifest(v).get("committed_at")
-                if at is None or at >= older_than:
-                    keep_versions.append(v)
-        if current not in keep_versions:
-            keep_versions.append(current)
-        keep_versions = sorted(set(keep_versions))
         live: set[str] = set()
         for v in keep_versions:
             for rel in self._bucket_paths(v).values():
                 # a referenced bucket dir keeps its parent data/vN dir
                 live.add(rel.split(os.sep + _BUCKET + "=")[0])
-        removed = []
-        for v in self.history():
-            if v > current:  # orphan manifest from a crashed merge
-                shutil.rmtree(os.path.join(self.root, f"v{v:05d}"))
-                removed.append(f"v{v:05d}")
+        # orphan manifests from crashed commits
+        removed = [self._chain.rel(v) for v in self._chain.clean_orphans()]
         data_root = os.path.join(self.root, "data")
         if os.path.isdir(data_root):
             for d in sorted(os.listdir(data_root)):

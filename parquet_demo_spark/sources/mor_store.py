@@ -26,9 +26,9 @@ primitives:
   log — the amortized rewrite, paid once per cadence instead of once
   per batch.
 
-Concurrency: the delta log uses the SAME optimistic-concurrency
-convention as the base store's manifests (merge_store.py:458). Each
-log mutation writes an immutable FULL-STATE entry file
+Concurrency: the delta log commits through the SAME protocol as the
+base store's manifests (:mod:`~parquet_demo_spark.sources.commit_log`).
+Each log mutation writes an immutable FULL-STATE entry file
 ``_log/e{n:08d}.json`` with O_EXCL — entry creation is the CAS — then
 swaps the ``_DELTAS.json`` head pointer (monotonic, like the base's
 ``_latest``). A writer that loses the CAS to a COMMITTED competitor
@@ -68,8 +68,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_demo_spark.sources.cdc import classify_changes
+from parquet_demo_spark.sources.commit_log import CommitLog
 from parquet_demo_spark.sources.merge_store import (
-    ConcurrentWriteConflict,
     ParquetMergeStore,
     apply_where_ranges,
 )
@@ -78,6 +78,15 @@ from parquet_demo_spark.tuning import plan_scope, scoped_store_op
 
 _OP = "__op"
 _SEQ = "__seq"
+
+
+def _pointer_entry(head) -> int:
+    """The entry number a parsed ``_DELTAS.json`` names: ``{"entry":
+    n}``, a bare int, or -1 for a pre-round-11 pointer that holds the
+    full log state itself."""
+    if isinstance(head, dict) and "dirs" in head:
+        return -1
+    return int(head["entry"] if isinstance(head, dict) else head)
 
 
 class MergeOnReadStore:
@@ -102,18 +111,26 @@ class MergeOnReadStore:
             num_buckets=num_buckets,
         )
         self._deltas_root = os.path.join(root, "deltas")
-        self._entries_root = os.path.join(root, "_log")
         self._changes_root = os.path.join(root, "changes")
         os.makedirs(self._deltas_root, exist_ok=True)
-        os.makedirs(self._entries_root, exist_ok=True)
+        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
+        self._chain = CommitLog(
+            root,
+            "_DELTAS.json",
+            "e{:08d}.json",
+            subdir="_log",
+            encode=lambda n: json.dumps({"entry": n}),
+            decode=lambda raw: _pointer_entry(json.loads(raw)),
+            label="log entry",
+        )
 
     # --- delta log: immutable O_EXCL entry chain + head pointer ---
 
     def _pointer_path(self) -> str:
-        return os.path.join(self.root, "_DELTAS.json")
+        return self._chain.pointer
 
     def _entry_path(self, n: int) -> str:
-        return os.path.join(self._entries_root, f"e{n:08d}.json")
+        return self._chain.path(n)
 
     def _log(self) -> dict:
         """Committed log state: ``{seq, dirs, [columns, types], entry}``.
@@ -124,40 +141,26 @@ class MergeOnReadStore:
         full state dict reads as entry -1 — its first new commit
         migrates it onto the chain at entry 0.
         """
-        try:
-            with open(self._pointer_path()) as f:
-                head = json.load(f)
-        except FileNotFoundError:
+        raw = self._chain.read_pointer()
+        if raw is None:
             return {"seq": -1, "dirs": [], "entry": -1}
-        if isinstance(head, dict) and "dirs" in head:  # legacy pointer
+        head = json.loads(raw)
+        n = _pointer_entry(head)
+        if n < 0:  # legacy pointer
             return {**head, "entry": -1}
-        n = int(head["entry"] if isinstance(head, dict) else head)
-        with open(self._entry_path(n)) as f:
-            return {**json.load(f), "entry": n}
+        return {**self._chain.read(n), "entry": n}
 
     def _swap_pointer(self, entry: int) -> None:
-        # commit point with the base store's monotonic fix-up
-        # (merge_store.py:496): two racing replaces can land out of
-        # order, and a pointer regression would make the newer
-        # committed entry look like an orphan
-        while True:
-            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_DELTAS.")
-            with os.fdopen(fd, "w") as f:
-                json.dump({"entry": entry}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._pointer_path())
-            cur = self._log()["entry"]
-            if cur >= entry:
-                break
+        """The shared monotonic pointer swap (commit_log)."""
+        self._chain.swap(entry)
 
     def _commit_log(self, mutate) -> dict:
-        """Commit ``mutate(committed_state) -> new_state`` with the
-        base store's optimistic-concurrency convention: O_EXCL entry
-        creation is the CAS; a loser against a COMMITTED head re-reads
-        and re-applies ``mutate`` (delta appends and truncations are
-        always rebase-safe — see module docstring); a loser against an
-        orphan entry raises :class:`ConcurrentWriteConflict`."""
+        """Commit ``mutate(committed_state) -> new_state`` through the
+        shared protocol (commit_log): O_EXCL entry creation is the CAS;
+        a loser against a COMMITTED head re-reads and re-applies
+        ``mutate`` (delta appends and truncations are always
+        rebase-safe — see module docstring); a loser against an orphan
+        entry raises :class:`ConcurrentWriteConflict`."""
         while True:
             log = self._log()
             new = dict(mutate(log))
@@ -171,23 +174,10 @@ class MergeOnReadStore:
                 "base_version", self.base.current_version()
             )
             entry = log["entry"] + 1
-            try:
-                fh = open(self._entry_path(entry), "x")
-            except FileExistsError:
-                if self._log()["entry"] >= entry:
-                    continue  # competitor committed: rebase on new head
-                raise ConcurrentWriteConflict(
-                    f"log entry {entry} exists but is not committed: a "
-                    "concurrent writer is mid-commit, or a crashed "
-                    "commit left an orphan (clean_orphans() removes it "
-                    "if no writer is active)"
-                ) from None
-            with fh:
-                json.dump(new, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            self._swap_pointer(entry)
-            return {**new, "entry": entry}
+            if self._chain.create(entry, new):
+                self._chain.swap(entry)
+                return {**new, "entry": entry}
+            self._chain.committed_past(entry)  # raises unless committed
 
     def delta_count(self) -> int:
         return len(self._log()["dirs"])
@@ -199,22 +189,21 @@ class MergeOnReadStore:
         the entry number totally orders the store's history the way
         the base store's manifest version does. ``None`` for a store
         with no committed entry (empty, or legacy base-only)."""
-        e = self._log()["entry"]
-        return None if e < 0 else e
+        e = self._chain.head()
+        return None if e is None or e < 0 else e
 
     def _entry_state(self, n: int) -> dict:
         """The committed full state at entry ``n`` — raises the
         descriptive expired error when the entry file is gone
         (vacuumed) or was never committed."""
-        head = self._log()["entry"]
-        if n < 0 or n > head:
+        head = self.current_version()
+        if head is None or not 0 <= n <= head:
             raise ValueError(
                 f"log entry {n} does not exist in {self.root} "
                 f"(committed head: {head})"
             )
         try:
-            with open(self._entry_path(n)) as f:
-                return {**json.load(f), "entry": n}
+            return {**self._chain.read(n), "entry": n}
         except FileNotFoundError:
             raise ValueError(
                 f"log entry {n} in {self.root} was removed by "
@@ -263,34 +252,13 @@ class MergeOnReadStore:
         )
         return new["entry"]
 
-    def _entry_files(self) -> list[tuple[int, str]]:
-        """(entry number, filename) for every well-formed e*.json in
-        the chain dir — the single parse both :meth:`clean_orphans`
-        (numbers above head) and :meth:`vacuum` (numbers below head)
-        filter, so the naming scheme lives in one place."""
-        out = []
-        for name in sorted(os.listdir(self._entries_root)):
-            if not (name.startswith("e") and name.endswith(".json")):
-                continue
-            try:
-                out.append((int(name[1:-5]), name))
-            except ValueError:
-                continue
-        return out
-
     def clean_orphans(self) -> list[str]:
         """Remove crashed commits' log entries (numbers above the
         committed head) so their slots become claimable again — the
-        base store's FSCK contract (merge_store.py:2830): the caller
-        asserts no writer is currently mid-commit. Delta data dirs
-        stay (vacuum reclaims them). Returns removed paths."""
-        head = self._log()["entry"]
-        removed = []
-        for n, name in self._entry_files():
-            if n > head:
-                os.remove(os.path.join(self._entries_root, name))
-                removed.append(os.path.join("_log", name))
-        return removed
+        shared FSCK contract (commit_log): the caller asserts no writer
+        is currently mid-commit. Delta data dirs stay (vacuum reclaims
+        them). Returns removed paths."""
+        return [self._chain.rel(n) for n in self._chain.clean_orphans()]
 
     # --- write path ---
 
@@ -1391,13 +1359,10 @@ class MergeOnReadStore:
             if isinstance(log.get("base_version"), int)
             else None
         )
-        for n, name in self._entry_files():
+        for n in self._chain.slots():
             if lo <= n < head:
                 try:
-                    with open(
-                        os.path.join(self._entries_root, name)
-                    ) as f:
-                        state = json.load(f)
+                    state = self._chain.read(n)
                 except (OSError, ValueError):
                     continue
                 live |= set(state.get("dirs", []))
@@ -1431,10 +1396,10 @@ class MergeOnReadStore:
             if name.startswith("_DELTAS.") and name != pointer:
                 os.unlink(os.path.join(self.root, name))
                 removed.append(name)
-        for n, name in self._entry_files():
+        for n in self._chain.slots():
             if n < lo:
-                os.unlink(os.path.join(self._entries_root, name))
-                removed.append(os.path.join("_log", name))
+                os.unlink(self._entry_path(n))
+                removed.append(self._chain.rel(n))
         return removed
 
 

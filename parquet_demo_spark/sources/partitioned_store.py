@@ -10,7 +10,8 @@ single-writer store rather than threaded through it. Each partition
 value owns a child :class:`ParquetMergeStore` at ``root/p=<val>/``
 (bucketed, bloom'd, CDC-capable, time-travelable — everything the child
 already does); a GLOBAL versioned manifest (``root/v{N}/manifest.json``
-+ atomic ``_latest`` pointer, the child's own commit protocol) maps
++ atomic ``_latest`` pointer: the child's own commit protocol,
+:func:`~parquet_demo_spark.sources.commit_log.manifest_log`) maps
 each committed table version to ``{partition value: child version}``.
 Readers resolve the global manifest first, so child versions committed
 by an in-flight writer are invisible until the global pointer swaps —
@@ -68,7 +69,6 @@ drop-partition retention, Iceberg partition pruning).
 from __future__ import annotations
 
 import contextlib
-import json
 import os
 import shutil
 import tempfile
@@ -77,6 +77,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_demo_spark.sources import commit_log
 from parquet_demo_spark.sources.merge_store import (
     ConcurrentWriteConflict,
     ParquetMergeStore,
@@ -203,6 +204,17 @@ class PartitionedParquetMergeStore:
                 raise ValueError(
                     "CHECK constraints require copy-on-write children"
                 )
+        self._chain = commit_log.manifest_log(
+            root,
+            "global version",
+            self._read_manifest,
+            commit_log.Rebase(
+                self._REBASE_SAFE_OPS,
+                self._footprint,
+                self._compatible,
+                self._overlay,
+            ),
+        )
         os.makedirs(root, exist_ok=True)
         committed = self.current_version()
         if committed is not None:
@@ -266,21 +278,14 @@ class PartitionedParquetMergeStore:
                 )
             self.constraints = {**persisted, **self.constraints}
 
-    # -- global pointer / manifest (the child's commit protocol, reused) --
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "_latest")
+    # -- global pointer / manifest (the child's commit protocol, reused:
+    # both chains are commit_log.manifest_log) --------------------------
 
     def current_version(self) -> int | None:
-        try:
-            with open(self._pointer) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return self._chain.head()
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version:05d}", "manifest.json")
+        return self._chain.path(version)
 
     def _read_manifest(self, version: int) -> dict:
         try:
@@ -320,8 +325,6 @@ class PartitionedParquetMergeStore:
             prev = self._read_manifest(version - 1)
             columns = prev.get("columns")
             column_types = prev.get("column_types")
-        vdir = os.path.join(self.root, f"v{version:05d}")
-        os.makedirs(vdir, exist_ok=True)
         manifest = {
             "version": version,
             "keys": list(self.keys),
@@ -346,43 +349,9 @@ class PartitionedParquetMergeStore:
         if columns is not None:
             manifest["columns"] = list(columns)
             manifest["column_types"] = dict(column_types or {})
-        try:
-            fh = open(self._manifest_path(version), "x")
-        except FileExistsError:
-            committed = self.current_version()
-            if committed is not None and committed >= version:
-                # a successful rebase lands at a HIGHER version — the
-                # caller must return THAT number, not its stale
-                # pre-race target (the competitor's commit)
-                rebased_to = self._try_rebase(version, manifest)
-                if rebased_to is not None:
-                    return rebased_to
-            raise ConcurrentWriteConflict(
-                f"global version {version} already has a manifest "
-                "(another writer won with an overlapping partition "
-                "footprint; re-read and retry)"
-            ) from None
-        with fh:
-            json.dump(manifest, fh, indent=1)
-            fh.flush()
-            os.fsync(fh.fileno())
-        self._swap_pointer(version)
-        return version
-
-    def _swap_pointer(self, version: int) -> None:
-        # atomic replace with a monotonic fix-up: two racing replaces
-        # can land out of order, and a pointer REGRESSION would make
-        # the newer committed version look like an orphan
-        while True:
-            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="_latest.")
-            with os.fdopen(fd, "w") as fh:
-                fh.write(str(version))
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, self._pointer)
-            cur = self.current_version()
-            if cur is not None and cur >= version:
-                break
+        # a successful rebase lands at a HIGHER version — the caller
+        # must return THAT number, not its stale pre-race target
+        return self._chain.commit(version, manifest)
 
     # rebase-safe table commits: effects confined to their touched
     # partitions. restore re-pins the whole table; clone is v0-only.
@@ -391,96 +360,32 @@ class PartitionedParquetMergeStore:
     )
 
     @staticmethod
-    def _touched_partitions(older: dict, newer: dict) -> set:
+    def _footprint(older: dict, newer: dict) -> set:
         """Partition values whose entry differs between two global
         manifests — the commit's footprint (a drop shows as present →
         absent, a re-create as a new epoch dir)."""
         a, b = older.get("partitions", {}), newer.get("partitions", {})
         return {p for p in set(a) | set(b) if a.get(p) != b.get(p)}
 
-    def _try_rebase(self, version: int, manifest: dict) -> int | None:
-        """Delta-style rebase of a CAS-losing GLOBAL commit (VERDICT r8
-        #6): two ingest jobs landing on DISJOINT partitions — different
-        dates, different sources — each committed their own child
-        stores (independent directories; no data contention by
-        construction) and only collided on the global pointer. The
-        loser's partition entries overlay the new head's map verbatim
-        and the commit retries at head+1; overlapping footprints,
-        schema/constraint changes underneath, or non-rebase-safe
-        operations (restore) stay conflicts.
-        """
-        if manifest["operation"] not in self._REBASE_SAFE_OPS:
-            return None
-        head = self.current_version()
-        if head is None or head < version:
-            return None
-        base_m = (
-            {"partitions": {}} if version == 0
-            else self._read_manifest(version - 1)
+    @staticmethod
+    def _compatible(head: dict, ours: dict) -> bool:
+        """No schema or constraint change underneath a rebasing commit."""
+        return (
+            head["num_buckets"] == ours["num_buckets"]
+            and head.get("columns") == ours.get("columns")
+            and head.get("column_types") == ours.get("column_types")
+            and head.get("constraints", {}) == ours["constraints"]
         )
-        ours = self._touched_partitions(base_m, manifest)
-        prev = base_m
-        for v in range(version, head + 1):
-            try:
-                m = self._read_manifest(v)
-            except (FileNotFoundError, ValueError):
-                return None
-            if m.get("operation", "merge") not in self._REBASE_SAFE_OPS:
-                return None
-            if self._touched_partitions(prev, m) & ours:
-                return None
-            prev = m
-        head_m = prev
-        if (
-            head_m["num_buckets"] != manifest["num_buckets"]
-            or head_m.get("columns") != manifest.get("columns")
-            or head_m.get("column_types") != manifest.get("column_types")
-            or head_m.get("constraints", {}) != manifest["constraints"]
-        ):
-            return None
-        rebased = dict(head_m)
-        merged = {
-            p: e
-            for p, e in head_m.get("partitions", {}).items()
-            if p not in ours
-        }
-        merged.update(
-            {
-                p: e
-                for p, e in manifest["partitions"].items()
-                if p in ours
-            }
-        )
-        # a partition WE dropped must stay dropped (absent from ours'
-        # map but in our footprint — the dict update above only adds)
-        for p in ours:
-            if p not in manifest["partitions"]:
-                merged.pop(p, None)
-        rebased["partitions"] = merged
-        for field in ("operation", "op_params", "committed_at"):
-            rebased[field] = manifest[field]
-        rebased["op_params"] = {
-            **manifest["op_params"],
-            # keep the ORIGINAL pre-race base through multi-level
-            # recursion (ADVICE r9 — same law as the child store)
-            "rebased_from": manifest["op_params"].get(
-                "rebased_from", version
-            ),
-        }
-        rebased["version"] = head + 1
-        os.makedirs(
-            os.path.join(self.root, f"v{head + 1:05d}"), exist_ok=True
-        )
-        try:
-            fh = open(self._manifest_path(head + 1), "x")
-        except FileExistsError:
-            return self._try_rebase(head + 1, rebased)
-        with fh:
-            json.dump(rebased, fh, indent=1)
-            fh.flush()
-            os.fsync(fh.fileno())
-        self._swap_pointer(head + 1)
-        return head + 1
+
+    @staticmethod
+    def _overlay(head: dict, ours: dict, footprint: set) -> dict:
+        """A rebasing commit's partition entries overlaid on the head's
+        map; a partition it dropped is in the footprint but absent from
+        its map, so it stays dropped."""
+        held = head.get("partitions", {})
+        theirs = {p: e for p, e in held.items() if p not in footprint}
+        mine = {p: e for p, e in ours["partitions"].items() if p in footprint}
+        return {"partitions": {**theirs, **mine}}
 
     def _parts(self, version: int | None = None) -> dict[str, dict]:
         """{partition value: {"dir": child dir name, "version": child
@@ -745,46 +650,15 @@ class PartitionedParquetMergeStore:
     def version_at(self, timestamp: float) -> int:
         """Newest global version committed at or before ``timestamp``
         (epoch seconds) — Delta's timestampAsOf, at the table level."""
-        cur = self.current_version()
-        if cur is None:
-            raise ValueError(f"empty partitioned store: {self.root}")
-        best = None
-        for v in range(cur + 1):
-            try:
-                m = self._read_manifest(v)
-            except ValueError:
-                continue  # vacuumed below the keep window
-            if m.get("committed_at", 0) <= timestamp:
-                best = v
-        if best is None:
-            raise ValueError(
-                f"no version committed at or before {timestamp}"
-            )
-        return best
+        return self._chain.version_at(timestamp)
 
     def describe_history(self) -> list[dict]:
         """Commit log of the committed global versions, oldest first —
         operation, parameters, wall-clock commit time, partition count
         (the child's DESCRIBE HISTORY, one level up)."""
-        cur = self.current_version()
-        if cur is None:
-            return []
-        out = []
-        for v in range(cur + 1):
-            try:
-                m = self._read_manifest(v)
-            except ValueError:
-                continue
-            out.append(
-                {
-                    "version": v,
-                    "operation": m.get("operation", "unknown"),
-                    "op_params": m.get("op_params", {}),
-                    "committed_at": m.get("committed_at"),
-                    "n_partitions": len(m.get("partitions", {})),
-                }
-            )
-        return out
+        return self._chain.describe(
+            lambda m: {"n_partitions": len(m.get("partitions", {}))},
+        )
 
     # -- write side -------------------------------------------------------
 
@@ -1480,13 +1354,10 @@ class PartitionedParquetMergeStore:
                     f"{e['dir']} (partition {pval!r}) was removed by "
                     "vacuum"
                 )
+            # a child's pin is a slot of its commit log: a COW child's
+            # manifest, a MOR child's log entry
             child = self._child(e["dir"])
-            child_manifest = (
-                child._entry_path(int(e["version"]))
-                if self.child_store == "mor"
-                else child._manifest_path(int(e["version"]))
-            )
-            if not os.path.exists(child_manifest):
+            if not os.path.exists(child._chain.path(int(e["version"]))):
                 raise ValueError(
                     f"cannot restore to v{target_version}: child "
                     f"{e['dir']} no longer has v{e['version']} "
@@ -1861,7 +1732,8 @@ class PartitionedParquetMergeStore:
             # value-pruned reads go through each child's own min/max/
             # bloom bucket pruning (and usually touch few children)
             eras, slow = [], list(selected)
-        dfs = [self._fused_frame(spark, era) for era in eras] + [
+        types = self._column_types_at(version)
+        dfs = [self._fused_frame(spark, era, types=types) for era in eras] + [
             self._child(parts[pval]["dir"]).read(
                 spark, version=parts[pval]["version"], where=where
             )
@@ -1911,7 +1783,7 @@ class PartitionedParquetMergeStore:
         if bv is not None:
             try:
                 m = _load_manifest(
-                    os.path.join(base_root, f"v{int(bv):05d}", "manifest.json")
+                    commit_log.manifest_log(base_root).path(int(bv))
                 )
             except (FileNotFoundError, ValueError):
                 return None
@@ -1983,7 +1855,11 @@ class PartitionedParquetMergeStore:
         return list(eras.values()), stragglers
 
     def _fused_frame(
-        self, spark: SparkSession, era: dict, keys: DataFrame | None = None
+        self,
+        spark: SparkSession,
+        era: dict,
+        keys: DataFrame | None = None,
+        types: dict[str, str] | None = None,
     ) -> DataFrame:
         """One era's children as ONE plan: a multi-dir base scan minus
         one broadcast DV anti-join, overlaid by the last-write-wins
@@ -2003,14 +1879,18 @@ class PartitionedParquetMergeStore:
         validates every appended batch against the child's recorded
         column/type map, so a child's live delta dirs share its
         columns. With a recorded type map every scan passes an
-        explicit schema, which skips its footer-inference job."""
+        explicit schema, which skips its footer-inference job: the
+        era's own (a MOR log's record), else ``types``, the table's
+        record at the read version — it holds for every child's files
+        because a merge never retypes a column, and it is the only one
+        a copy-on-write era has."""
         from parquet_demo_spark.sources.mor_store import (
             _OP,
             resolve_deltas,
             schema_ddl,
         )
 
-        cols, types, pk = era["cols"], era["types"], list(self.keys)
+        cols, types, pk = era["cols"], era["types"] or types, list(self.keys)
         lays = list(era["layouts"].values())
         row_ddl = schema_ddl(cols, types)
         base = None
@@ -2302,7 +2182,7 @@ class PartitionedParquetMergeStore:
         # (partition, bucket) dirs only: per-child bucket pruning is
         # preserved exactly
         eras, slow = self._era_plan(parts, hit, pv_buckets)
-        dfs = [self._fused_frame(spark, era, keys) for era in eras] + [
+        dfs = [self._fused_frame(spark, era, keys, tmap) for era in eras] + [
             self._child(parts[pv]["dir"]).probe(
                 spark,
                 keys.filter(pcol == pv),
@@ -2471,8 +2351,7 @@ class PartitionedParquetMergeStore:
         to their own changed bucket ids under ``v_to``, so the presence
         read needs no per-child collect); otherwise it is a straggler.
         ``types`` (the table's {column: type} record) gives every scan
-        an explicit schema, which skips its footer-inference job; COW
-        children record no type map of their own.
+        an explicit schema, which skips its footer-inference job.
         """
         from parquet_demo_spark.sources.cdc import classify_changes
         from parquet_demo_spark.sources.mor_store import schema_ddl
@@ -2738,20 +2617,12 @@ class PartitionedParquetMergeStore:
         routing write left behind. Orphan CHILD versions are reclaimed
         by each child's own clean_orphans/vacuum. Only run when no
         writer is active."""
-        import shutil
-
-        cur = self.current_version()
-        removed = []
+        removed = [self._chain.rel(v) for v in self._chain.clean_orphans()]
         for d in sorted(os.listdir(self.root)):
-            if d.startswith("v") and d[1:].isdigit():
-                v = int(d[1:])
-                if cur is None or v > cur:
-                    shutil.rmtree(os.path.join(self.root, d))
-                    removed.append(d)
-            elif d.startswith("_staging."):
+            if d.startswith("_staging."):
                 shutil.rmtree(os.path.join(self.root, d))
                 removed.append(d)
-        return removed
+        return sorted(removed)
 
     def vacuum(
         self, keep_last: int = 1, older_than: float | None = None
@@ -2779,25 +2650,10 @@ class PartitionedParquetMergeStore:
         cur = self.current_version()
         if cur is None:
             return []
-        committed = [
-            v
-            for v in range(0, cur + 1)
-            if os.path.exists(self._manifest_path(v))
-        ]
-        keep = set(committed[-keep_last:])
-        if older_than is not None:
-            # same retention law as the child store: a version is kept
-            # when its committed_at is at/after the cutoff OR it has no
-            # committed_at at all (legacy manifest — never expire data
-            # whose age can't be proven, even below a dated-old
-            # version; a contiguous-window walk would drop it)
-            for v in committed:
-                if v in keep:
-                    continue
-                at = self._read_manifest(v).get("committed_at")
-                if at is None or at >= older_than:
-                    keep.add(v)
-        keep.add(cur)
+        # the child store's retention law (commit_log): a legacy
+        # manifest with no committed_at is kept even below a dated-old
+        # version, where a contiguous-window walk would drop it
+        keep = set(self._chain.retained(keep_last, older_than))
         live = set()
         for v in sorted(keep):
             live |= {
@@ -2868,17 +2724,14 @@ class PartitionedParquetMergeStore:
                                 os.sep, 1
                             )[0]
                         )
+        expired = {
+            self._chain.rel(v)
+            for v in self._chain.slots()
+            if v <= cur and v not in keep
+        }
         removed = []
         for d in sorted(os.listdir(self.root)):
-            if d.startswith("p=") and d not in live:
-                shutil.rmtree(os.path.join(self.root, d))
-                removed.append(d)
-            elif (
-                d.startswith("v")
-                and d[1:].isdigit()
-                and int(d[1:]) <= cur
-                and int(d[1:]) not in keep
-            ):
+            if (d.startswith("p=") and d not in live) or d in expired:
                 shutil.rmtree(os.path.join(self.root, d))
                 removed.append(d)
         return removed

@@ -190,3 +190,22 @@ def test_mor_partitioned_changes_between_jobs(spark, mor_table):
     assert sorted((r.day, r.k) for r in rows) == [
         (d, k) for d in DAYS[:2] for k in range(5)
     ]
+
+
+def test_cow_partitioned_read_is_one_job(spark, tmp_path):
+    """Copy-on-write eras take their scan schema from the table's type
+    record, so building a 6-partition read launches no footer-inference
+    job: its collect is the only job."""
+    table = PartitionedParquetMergeStore(
+        str(tmp_path / "pcow"),
+        keys=("day", "k"),
+        partition_col="day",
+        version_cols=("v",),
+        num_buckets=2,
+    )
+    table.merge(_batch(spark, DAYS, 1))
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(table.read(spark).collect())) == 1
+    assert sorted((r.day, r.k, r.v) for r in rows) == sorted(
+        (d, k, 1) for d in DAYS for k in range(5)
+    )

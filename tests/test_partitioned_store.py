@@ -331,6 +331,13 @@ def test_clean_orphans_removes_manifests_above_pointer(spark, tmp_path):
         json.dump({"partitions": {}}, fh)
     assert st.current_version() == 0
     assert _rows(st.read(spark)) == [("d1", 1, 1, "d1/1")]
+    # the orphan blocks the next writer, which is told how to clear it
+    from parquet_demo_spark.sources.merge_store import (
+        ConcurrentWriteConflict,
+    )
+
+    with pytest.raises(ConcurrentWriteConflict, match="clean_orphans"):
+        st.merge(_batch(spark, [("d2", 2)]))
     assert st.clean_orphans() == ["v00001"]
     # the retried write takes v1 cleanly
     st.merge(_batch(spark, [("d2", 2)]))
