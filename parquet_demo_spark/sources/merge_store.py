@@ -281,6 +281,30 @@ def _bloom_maybe_contains(bloom: dict, v) -> bool:
     return all((bits[p >> 3] >> (p & 7)) & 1 for p in positions)
 
 
+def stats_rule_out(stats: dict, blooms: dict, where: dict | None) -> bool:
+    """THE pruning law for a recorded summary (a file's, a bucket's or a
+    partition's rollup): True when it PROVES no row satisfies every
+    ``where`` range — a recorded [min, max] excludes the (lo, hi)
+    range, or, for a point lookup (lo == hi), the bloom rules the value
+    out (the min/max of a hash-scattered column spans ~the full domain
+    and never prunes it). A column without a recorded summary never
+    rules anything out: absence means "can't prune", never "wrong
+    prune"."""
+    for col, (lo, hi) in (where or {}).items():
+        if col in stats:
+            mn, mx = stats[col]
+            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+                return True
+        if (
+            lo is not None
+            and lo == hi
+            and col in blooms
+            and not _bloom_maybe_contains(blooms[col], lo)
+        ):
+            return True
+    return False
+
+
 class ParquetMergeStore:
     """Single-writer, lock-free-reader MERGE store over parquet files."""
 
@@ -616,7 +640,7 @@ class ParquetMergeStore:
                 min(fs[c][0] for fs in per_file),
                 max(fs[c][1] for fs in per_file),
             ]
-            for c in common
+            for c in sorted(common)
         }
 
     def _prior_file_stats(
@@ -1022,35 +1046,15 @@ class ParquetMergeStore:
         if not where:
             return paths
         manifest = self._read_manifest(version)
-        stats = {int(k): v for k, v in manifest.get("stats", {}).items()}
-        blooms = {int(k): v for k, v in manifest.get("blooms", {}).items()}
-        out = {}
-        for b, p in paths.items():
-            bstats = stats.get(b, {})
-            bblooms = blooms.get(b, {})
-            keep = True
-            for col, (lo, hi) in where.items():
-                if col in bstats:
-                    mn, mx = bstats[col]
-                    if (hi is not None and mn > hi) or (
-                        lo is not None and mx < lo
-                    ):
-                        keep = False
-                        break
-                # a point lookup (lo == hi) additionally consults the
-                # bucket's bloom — the min/max of a hash-scattered
-                # column spans ~the full domain and never prunes it
-                if (
-                    lo is not None
-                    and lo == hi
-                    and col in bblooms
-                    and not _bloom_maybe_contains(bblooms[col], lo)
-                ):
-                    keep = False
-                    break
-            if keep:
-                out[b] = p
-        return out
+        stats = manifest.get("stats", {})
+        blooms = manifest.get("blooms", {})
+        return {
+            b: p
+            for b, p in paths.items()
+            if not stats_rule_out(
+                stats.get(str(b), {}), blooms.get(str(b), {}), where
+            )
+        }
 
     def _pruned_files(
         self, version: int, where: dict[str, tuple] | None
@@ -1071,24 +1075,12 @@ class ParquetMergeStore:
         for b, rel in pruned_dirs.items():
             d = os.path.join(self.root, rel)
             fs = fstats.get(b, {})
-            keep = []
-            for fname in sorted(os.listdir(d)):
-                if not fname.endswith(".parquet"):
-                    continue
-                st = fs.get(fname)
-                skip = False
-                if st and where:
-                    for col, (lo, hi) in where.items():
-                        if col in st:
-                            mn, mx = st[col]
-                            if (hi is not None and mn > hi) or (
-                                lo is not None and mx < lo
-                            ):
-                                skip = True
-                                break
-                if not skip:
-                    keep.append(os.path.join(d, fname))
-            out[b] = keep
+            out[b] = [
+                os.path.join(d, fname)
+                for fname in sorted(os.listdir(d))
+                if fname.endswith(".parquet")
+                and not stats_rule_out(fs.get(fname) or {}, {}, where)
+            ]
         return out
 
     def files_read(

@@ -83,6 +83,8 @@ from parquet_demo_spark.sources.merge_store import (
     ParquetMergeStore,
     _load_manifest,
     anti_join_dv,
+    apply_where_ranges,
+    stats_rule_out,
 )
 from parquet_demo_spark.tuning import scoped_store_op
 
@@ -453,8 +455,9 @@ class PartitionedParquetMergeStore:
         ``unionByName`` analyzes its accumulated plan JVM-side, so a
         chain over P children costs O(P²) driver analysis — measured as
         the round-10 #7 fan-in knee (scripts/fanin_scale_check.py); the
-        tree is O(P log P), and ``read()``'s era scan below keeps P
-        itself small."""
+        tree is O(P log P), and the fused table scan
+        (:meth:`_fused_frame`) leaves only CDC's per-child diffs to
+        union."""
         while len(dfs) > 1:
             dfs = [
                 dfs[i].unionByName(dfs[i + 1], allowMissingColumns=True)
@@ -758,7 +761,7 @@ class PartitionedParquetMergeStore:
         # or drops columns, it never RETYPES one. A retyped batch routed
         # exclusively to a NEW partition would otherwise create a fresh
         # child with the drifted physical type without any child-level
-        # check firing — and a later era-grouped whole-table read (one
+        # check firing — and a later fused whole-table read (one
         # parquet scan across same-named children) dies on the mixed
         # types. Reject at the door, like the MOR store's commit_delta.
         drift = {
@@ -1689,16 +1692,19 @@ class PartitionedParquetMergeStore:
         where: dict | None = None,
         timestamp: float | None = None,
     ) -> DataFrame:
-        """Snapshot read; ``partitions=(lo, hi)`` prunes child stores by
-        manifest before any file is listed; ``where`` (column →
-        (lo, hi) closed range) prunes TWICE — first against the global
-        manifest's rolled-up per-partition column stats (children whose
-        [min, max] provably exclude the range are skipped without their
-        directories ever being opened — the Iceberg manifest-list
-        design), then via the surviving children's own min/max/bloom
-        bucket pruning. ``timestamp`` (epoch seconds) time-travels to
-        the newest version committed at or before it (mutually
-        exclusive with ``version``)."""
+        """Snapshot read: every selected child in ONE fused plan
+        (:meth:`_fused_frame`).
+
+        ``partitions=(lo, hi)`` prunes child stores by manifest before
+        any file is listed. ``where`` (column → (lo, hi) closed range)
+        is answered from recorded summaries before any data is read:
+        the global manifest's rolled-up per-partition stats and blooms
+        skip whole children (the Iceberg manifest-list design), each
+        surviving child's bucket (or clustered per-file) stats choose
+        the files its layout contributes (:meth:`_child_layout`), and
+        the fused frame is range-filtered once. ``timestamp`` (epoch
+        seconds) time-travels to the newest version committed at or
+        before it (mutually exclusive with ``version``)."""
         if timestamp is not None:
             if version is not None:
                 raise ValueError(
@@ -1715,191 +1721,132 @@ class PartitionedParquetMergeStore:
                 "no live partitions (all dropped); time-travel an older "
                 "version to read them"
             )
-        selected = self._stats_select(
-            parts, self._select(parts, partitions), where
+        lays = self._read_layouts(parts, partitions, where)
+        return apply_where_ranges(
+            self._fused_frame(spark, version, lays), where
         )
-        if not selected:
-            # schema from any live child (aligned to the TABLE schema —
-            # that child may predate an evolution), zero matching rows
-            any_p = sorted(parts)[0]
-            df = self._child(parts[any_p]["dir"]).read(
-                spark, version=parts[any_p]["version"], where=where
+
+    def _read_layouts(
+        self, parts: dict, partitions: tuple | dict | None, where: dict | None
+    ) -> list[dict]:
+        """The layouts a :meth:`read` of this scope scans: the children
+        the partition range and the rolled-up stats keep, each pruned
+        by ``where``."""
+        return [
+            self._child_layout(parts[pval], where=where)
+            for pval in self._stats_select(
+                parts, self._select(parts, partitions), where
             )
-            return self._aligned_union(spark, [df], version).limit(0)
-        if where is None:
-            eras, slow = self._era_plan(parts, selected)
-        else:
-            # value-pruned reads go through each child's own min/max/
-            # bloom bucket pruning (and usually touch few children)
-            eras, slow = [], list(selected)
-        types = self._column_types_at(version)
-        dfs = [self._fused_frame(spark, era, types=types) for era in eras] + [
-            self._child(parts[pval]["dir"]).read(
-                spark, version=parts[pval]["version"], where=where
-            )
-            for pval in slow
         ]
-        return self._aligned_union(spark, dfs, version)
 
-    def _child_layout(self, entry: dict, buckets=None) -> dict | None:
-        """What bare multi-dir scans need to reproduce one pinned
-        child's ``read()`` — or, with ``buckets``, its probe of those
-        buckets: ``{"cols", "types", "base", "dv", "deltas"}``, i.e.
-        the column order, the recorded {column: type} map (``None``
-        when incomplete: scans then infer their schema), the base
-        bucket dirs, the deletion-vector (DV) dirs, and the delta dirs
-        in log order. A COW child is a MOR child with no deltas whose
-        base is the child itself.
+    def _child_layout(
+        self, entry: dict, buckets=None, where: dict | None = None
+    ) -> dict:
+        """The files one pinned child contributes to a table scan:
+        ``{"base", "dv", "deltas"}`` — its base store's data paths, its
+        deletion-vector (DV) dirs, and its delta dirs in log order. A
+        COW child is a MOR child with no deltas whose base is the child
+        itself.
 
-        ``None`` marks a straggler, left to the per-child path: an
-        unreadable or vacuumed pin (the per-child path raises the
-        descriptive expired-version error), a missing column record,
-        an evolved base (its bucket dirs may lack columns — the
-        child's mergeSchema path), a base whose columns differ from
-        the log entry's, any referenced dir gone from disk, or nothing
-        to scan — an emptied child, or a probe none of whose buckets
-        was ever written, where the per-child path supplies the typed
-        empty frame."""
-        croot = os.path.join(self.root, entry["dir"])
-        cols = types = None
-        deltas: list[str] = []
-        base_root, bv = croot, int(entry["version"])
+        The base paths are bucket dirs, pruned by the base store's own
+        min/max/bloom law for ``where``
+        (:meth:`ParquetMergeStore._pruned_bucket_paths`), or single
+        files where a clustered compact recorded per-file stats
+        (:meth:`ParquetMergeStore._pruned_files`); ``buckets`` keeps a
+        probe's routed bucket ids only. Delta dirs are not bucketed and
+        are always listed in full. Pruning only drops files whose
+        summaries exclude the range, so a range filter over the fused
+        frame stays exact (the :meth:`MergeOnReadStore._overlay`
+        algebra: the anti-join commutes with a row-wise filter on its
+        left). An unreadable or vacuumed pin raises the child's own
+        descriptive error (``_entry_state``, ``_read_manifest``,
+        ``_guard_vacuumed``)."""
+        child = self._child(entry["dir"])
+        base, bv, deltas = child, int(entry["version"]), []
         if self.child_store == "mor":
-            try:
-                state = self._child(entry["dir"])._entry_state(bv)
-            except (ValueError, KeyError, FileNotFoundError):
-                return None
-            cols, types = state.get("columns"), state.get("types")
-            if not cols:
-                return None
+            state = child._entry_state(bv)
+            base, bv = child.base, state.get("base_version")
             deltas = [
-                os.path.join(croot, "deltas", d)
-                for d in state.get("dirs") or []
+                os.path.join(child._deltas_root, d) for d in state["dirs"]
             ]
-            base_root = os.path.join(croot, "base")
-            bv = state.get("base_version")
-        base: list[str] = []
+        dirs: list[str] = []
         dv: list[str] = []
         if bv is not None:
-            try:
-                m = _load_manifest(
-                    commit_log.manifest_log(base_root).path(int(bv))
-                )
-            except (FileNotFoundError, ValueError):
-                return None
-            mcols = list(m.get("columns") or [])
-            if (
-                m.get("evolved", True)
-                or not mcols
-                or (cols is not None and mcols != list(cols))
-            ):
-                return None
-            cols = mcols
-
-            def _dirs(rels: dict) -> list[str]:
-                return sorted(
-                    {
-                        os.path.join(base_root, rel)
-                        for b, rel in rels.items()
-                        if rel and (buckets is None or int(b) in buckets)
-                    }
-                )
-
-            base, dv = _dirs(m["bucket_paths"]), _dirs(m.get("dv", {}))
-        if not (base or deltas) or not all(
-            os.path.isdir(d) for d in (*base, *dv, *deltas)
-        ):
-            return None
-        if types is not None and any(c not in types for c in cols):
-            types = None
-        return {
-            "cols": list(cols),
-            "types": types,
-            "base": base,
-            "dv": dv,
-            "deltas": deltas,
-        }
-
-    def _era_plan(
-        self, parts: dict, selected: list, buckets: dict | None = None
-    ) -> tuple[list[dict], list]:
-        """Group the fusable children among ``selected`` by SCHEMA ERA
-        (column order and recorded types) and return ``(eras,
-        stragglers)``. An era is ``{"cols", "types", "layouts": {pval:
-        layout}}`` (see :meth:`_child_layout`); stragglers take the
-        per-child path. ``buckets`` ({pval: bucket ids}) restricts each
-        child to a probe's routed buckets.
-
-        Driver cost is one manifest or log-entry JSON per child
-        (metadata) and, downstream, one plan per era — eras are ~1-2 in
-        practice — instead of one analyzed plan per child (round-10
-        VERDICT #7: the per-child plan build made a 1k-partition
-        ``read()`` driver-bound)."""
-        eras: dict[tuple, dict] = {}
-        stragglers: list = []
-        for pval in selected:
-            lay = self._child_layout(
-                parts[pval], None if buckets is None else buckets[pval]
+            bv = int(bv)
+            m = base._read_manifest(bv)
+            pruned = {
+                b: rel
+                for b, rel in base._pruned_bucket_paths(bv, where).items()
+                if buckets is None or b in buckets
+            }
+            dirs = sorted(
+                {
+                    os.path.join(base.root, rel)
+                    for rel in pruned.values()
+                    if rel
+                }
             )
-            if lay is None:
-                stragglers.append(pval)
-                continue
-            cols, types = lay["cols"], lay["types"]
-            era_key = (
-                tuple(cols),
-                None if types is None else tuple(types[c] for c in cols),
+            dv = sorted(
+                {
+                    os.path.join(base.root, rel)
+                    for b, rel in m.get("dv", {}).items()
+                    if buckets is None or int(b) in buckets
+                }
             )
-            eras.setdefault(
-                era_key, {"cols": cols, "types": types, "layouts": {}}
-            )["layouts"][pval] = lay
-        return list(eras.values()), stragglers
+        base._guard_vacuumed([*dirs, *dv, *deltas], int(entry["version"]))
+        if dirs and where and m.get("file_stats"):
+            files = base._pruned_files(bv, where)
+            dirs = sorted(p for b in pruned for p in files[b])
+        return {"base": dirs, "dv": dv, "deltas": deltas}
 
     def _fused_frame(
         self,
         spark: SparkSession,
-        era: dict,
+        version: int,
+        lays: list[dict],
         keys: DataFrame | None = None,
-        types: dict[str, str] | None = None,
     ) -> DataFrame:
-        """One era's children as ONE plan: a multi-dir base scan minus
-        one broadcast DV anti-join, overlaid by the last-write-wins
-        fold of every child's delta dirs, itself one parquet scan and
-        one window however many dirs the era's logs hold
+        """The children ``lays`` (see :meth:`_child_layout`) as ONE
+        plan in the table schema at ``version``: one multi-path base
+        scan minus one broadcast DV anti-join, overlaid by the
+        last-write-wins fold of every child's delta dirs, itself one
+        parquet scan and one window however many dirs the logs hold
         (:func:`~parquet_demo_spark.sources.mor_store.resolve_deltas`);
-        a probe's ``keys`` add semi-joins on the full PK. The
-        per-child plans carry one window and one anti-join PER CHILD,
-        and AQE materializes each exchange as its own job (q201
-        census: 21 -> 5 jobs per table read at 13 children).
+        a probe's ``keys`` add semi-joins on the full PK. Per-child
+        plans would carry one window and one anti-join PER CHILD, and
+        AQE materializes each exchange as its own job (q201 census: 21
+        -> 5 jobs per table read at 13 children).
 
         Sound because every partition column is a PK column (module
         docstring): the fold's window, the DV anti-join and the
         semi-joins are all keyed on the full PK, so they never match
         rows across children, and each child's delta positions only
-        order rows within its own key space. ``commit_delta``
-        validates every appended batch against the child's recorded
-        column/type map, so a child's live delta dirs share its
-        columns. With a recorded type map every scan passes an
-        explicit schema, which skips its footer-inference job: the
-        era's own (a MOR log's record), else ``types``, the table's
-        record at the read version — it holds for every child's files
-        because a merge never retypes a column, and it is the only one
-        a copy-on-write era has."""
+        order rows within its own key space. Every scan takes the
+        table's recorded DDL (:meth:`_columns_at`,
+        :meth:`_column_types_at`): a merge never retypes a column, so
+        it holds for every child's files, a file that lacks a column
+        (written before an evolution) reads it as a typed NULL, and no
+        scan pays a footer-inference job. A legacy table without a
+        type record never evolved and infers its scans. Nothing to
+        scan gives the typed empty frame of the table schema."""
+        from pyspark.sql.types import StructType
+
         from parquet_demo_spark.sources.mor_store import (
             _OP,
             resolve_deltas,
             schema_ddl,
         )
 
-        cols, types, pk = era["cols"], era["types"] or types, list(self.keys)
-        lays = list(era["layouts"].values())
+        cols, pk = self._columns_at(version), list(self.keys)
+        types = self._column_types_at(version)
         row_ddl = schema_ddl(cols, types)
         base = None
-        base_dirs = sorted({d for lay in lays for d in lay["base"]})
-        if base_dirs:
+        base_paths = sorted({p for lay in lays for p in lay["base"]})
+        if base_paths:
             reader = spark.read.schema(row_ddl) if row_ddl else spark.read
             base = anti_join_dv(
                 spark,
-                reader.parquet(*base_dirs).select(*cols),
+                reader.parquet(*base_paths).select(*cols),
                 pk,
                 [d for lay in lays for d in lay["dv"]],
                 schema_ddl(pk, types),
@@ -1907,12 +1854,13 @@ class PartitionedParquetMergeStore:
             if keys is not None:
                 base = base.join(keys, pk, "left_semi")
         latest = resolve_deltas(
-            spark,
-            pk,
-            [p for lay in lays for p in lay["deltas"]],
-            row_ddl,
+            spark, pk, [p for lay in lays for p in lay["deltas"]], row_ddl
         )
         if latest is None:
+            if base is None:
+                # limit(0) plans an empty local relation: no job
+                empty = spark.createDataFrame([], StructType())
+                return self._aligned_union(spark, [empty], version).limit(0)
             return base
         if keys is not None:
             latest = latest.join(keys, pk, "left_semi")
@@ -2020,36 +1968,15 @@ class PartitionedParquetMergeStore:
         #7): a hash-scattered key column's [min, max] spans ~the whole
         domain and never prunes, but the bloom skips the partition
         without its child manifest ever being opened."""
-        from parquet_demo_spark.sources.merge_store import (
-            _bloom_maybe_contains,
-        )
-
-        if not where:
-            return selected
-        out = []
-        for pval in selected:
-            st = parts[pval].get("stats") or {}
-            bl = parts[pval].get("blooms") or {}
-            keep = True
-            for col, (lo, hi) in where.items():
-                if col in st:
-                    mn, mx = st[col]
-                    if (hi is not None and mn > hi) or (
-                        lo is not None and mx < lo
-                    ):
-                        keep = False
-                        break
-                if (
-                    lo is not None
-                    and lo == hi
-                    and col in bl
-                    and not _bloom_maybe_contains(bl[col], lo)
-                ):
-                    keep = False
-                    break
-            if keep:
-                out.append(pval)
-        return out
+        return [
+            pval
+            for pval in selected
+            if not stats_rule_out(
+                parts[pval].get("stats") or {},
+                parts[pval].get("blooms") or {},
+                where,
+            )
+        ]
 
     def files_read(
         self,
@@ -2058,21 +1985,19 @@ class PartitionedParquetMergeStore:
         where: dict | None = None,
     ) -> int:
         """How many data files a :meth:`read` with this scope opens —
-        the pruning evidence (footer-free: manifests + listing), with
-        both levels applied: global stats rollup across partitions,
-        then each survivor's own bucket min/max/bloom pruning. MOR
-        children report their pinned base's pruned count plus their
-        live delta dirs' files (round 13 — the overlay is always
-        read in full)."""
-        parts = self._parts(version)
+        the pruning evidence (footer-free: manifests + listing),
+        counted over the very layouts the read scans
+        (:meth:`_read_layouts`): each surviving child's base files, or
+        the parquet files of its base bucket dirs, plus those of its
+        delta dirs (a delta dir is always read in full)."""
         total = 0
-        for pval in self._stats_select(
-            parts, self._select(parts, partitions), where
-        ):
-            child = self._child(parts[pval]["dir"])
-            total += child.files_read(
-                version=parts[pval]["version"], where=where
-            )
+        for lay in self._read_layouts(self._parts(version), partitions, where):
+            for p in (*lay["base"], *lay["deltas"]):
+                total += (
+                    1
+                    if os.path.isfile(p)
+                    else sum(f.endswith(".parquet") for f in os.listdir(p))
+                )
         return total
 
     def probe(
@@ -2082,7 +2007,7 @@ class PartitionedParquetMergeStore:
         version: int | None = None,
     ) -> DataFrame:
         """Table-level PK-probe point read: partition-prune, then
-        bucket-prune (the child's :meth:`ParquetMergeStore.probe`).
+        bucket-prune, in ONE fused plan (:meth:`_fused_frame`).
 
         Partition columns are PK columns (the table's routing
         invariant), so each probe key names its partition exactly — a
@@ -2090,12 +2015,12 @@ class PartitionedParquetMergeStore:
         within each child only the keys' buckets. ONE driver job
         computes the distinct (partition, bucket) pairs for the whole
         key batch (metadata-sized: <= touched partitions x num_buckets
-        rows); the touched children's routed bucket dirs are then
-        scanned by one fused plan per schema era (a straggler child is
-        probed with its pre-computed bucket slice), so a K-partition
-        probe costs O(1) driver jobs instead of K+1 sequential
-        per-child collects (VERDICT r9 #5).
-        Children absent from the manifest are no-ops; results align to
+        rows); the touched children's routed bucket dirs (plus their
+        delta dirs) are then scanned by one plan semi-joined to the
+        keys, so a K-partition probe costs O(1) driver jobs instead of
+        K+1 sequential per-child collects (VERDICT r9 #5). Children
+        absent from the manifest are no-ops, a batch that routes to no
+        live child gets the typed empty frame, and every row comes in
         the table schema (typed-null backfill across any evolution
         boundary). At 100 TB: a thousand-key probe touches a handful
         of dirs, never a listing of the table.
@@ -2168,30 +2093,11 @@ class PartitionedParquetMergeStore:
             pv = _pv(tuple(r[c] for c in self.partition_cols))
             if pv is not None and pv in parts:
                 pv_buckets.setdefault(pv, set()).add(int(r["__bucket"]))
-        hit = sorted(pv_buckets)
-        if not hit:
-            any_p = sorted(parts)[0]
-            df = self._child(parts[any_p]["dir"]).read(
-                spark, version=parts[any_p]["version"]
-            )
-            return self._aligned_union(spark, [df], v).limit(0)
-        pcol = F.concat_ws(
-            _SEP, *[F.col(c).cast("string") for c in self.partition_cols]
-        )
-        # one fused scan + semi-join per era over the routed
-        # (partition, bucket) dirs only: per-child bucket pruning is
-        # preserved exactly
-        eras, slow = self._era_plan(parts, hit, pv_buckets)
-        dfs = [self._fused_frame(spark, era, keys, tmap) for era in eras] + [
-            self._child(parts[pv]["dir"]).probe(
-                spark,
-                keys.filter(pcol == pv),
-                version=parts[pv]["version"],
-                buckets=sorted(pv_buckets[pv]),
-            )
-            for pv in slow
+        lays = [
+            self._child_layout(parts[pv], buckets=pv_buckets[pv])
+            for pv in sorted(pv_buckets)
         ]
-        return self._aligned_union(spark, dfs, v)
+        return self._fused_frame(spark, v, lays, keys)
 
     def count_rows(
         self,
@@ -2223,102 +2129,81 @@ class PartitionedParquetMergeStore:
 
         Per partition present in both AT THE SAME CHILD DIR: the
         child's diff over its recorded versions (O(changed buckets) for
-        COW children, O(appended deltas) for MOR children). The
-        children whose diff can be fused — :meth:`_era_plan` at
-        ``v_to``, with the table's columns at both endpoints — diff in
-        ONE plan (:meth:`_snapshot_diff` / :meth:`_log_diff`); the rest
-        run the child's own ``changes_between``. A partition only in
-        ``v_to`` contributes its full snapshot as inserts; one only in
-        ``v_from`` — i.e. dropped, the retention path — contributes its
-        old snapshot as deletes; present in both but at DIFFERENT dirs
-        (dropped and later re-created — a new epoch) nets the old
-        snapshot as deletes plus the new one as inserts. Downstream
-        consumers see retention as ordinary CDC delete rows without the
-        drop itself having touched any data file.
+        COW children, O(appended deltas) for MOR children), all such
+        children in ONE plan (:meth:`_snapshot_diff` /
+        :meth:`_log_diff`). A child runs its own ``changes_between``
+        where the span cannot be diffed that way: the table's columns
+        change inside it (an evolution), the child's bucket count does
+        (a rebucket), or its MOR log span is not all appends. A
+        partition only in ``v_to`` contributes its full snapshot as
+        inserts; one only in ``v_from`` — i.e. dropped, the retention
+        path — contributes its old snapshot as deletes; present in both
+        but at DIFFERENT dirs (dropped and later re-created — a new
+        epoch) nets the old snapshot as deletes plus the new one as
+        inserts. Each snapshot side is one :meth:`_fused_frame`.
+        Downstream consumers see retention as ordinary CDC delete rows
+        without the drop itself having touched any data file.
         """
         from parquet_demo_spark.sources.merge_store import changes_between
 
         p_from = self._parts(v_from)
         p_to = self._parts(v_to)
-
-        def _snap(entry, tag):
-            return (
-                self._child(entry["dir"])
-                .read(spark, version=entry["version"])
-                .withColumn("_change_type", F.lit(tag))
-            )
-
-        outs = []
+        snaps: dict[str, list] = {"delete": [], "insert": []}
         changed: list = []
         for pval in sorted(set(p_from) | set(p_to)):
             a, b = p_from.get(pval), p_to.get(pval)
             if a and b and a["dir"] == b["dir"]:
                 if a["version"] != b["version"]:
                     changed.append(pval)
-            elif a and b:  # drop + re-create: different epoch dirs
-                outs.append(_snap(a, "delete"))
-                outs.append(_snap(b, "insert"))
-            elif b:
-                outs.append(_snap(b, "insert"))
-            else:
-                outs.append(_snap(a, "delete"))
-        if changed:
-            cols = list(self._columns_at(v_to))
-            # an evolution inside the span leaves pre-states that need
-            # per-child null backfill: only same-schema children fuse
-            uniform = cols == list(self._columns_at(v_from))
-            eras, slow = self._era_plan(p_to, changed)
-            fusable: list = []
-            for era in eras:
-                (fusable if uniform and era["cols"] == cols else slow).extend(
-                    era["layouts"]
-                )
-            # the table's type record holds for every child's files (a
-            # merge never retypes a column), so the fused scans take it
-            # as their schema
-            types = self._column_types_at(v_to)
-            if self.child_store == "mor":
-                fused, rest = self._log_diff(
-                    spark, p_from, p_to, fusable, cols, types, v_from,
-                    include_preimages,
-                )
-            else:
-                fused, rest = self._snapshot_diff(
-                    spark, p_from, p_to, fusable, cols, types,
-                    include_preimages,
-                )
-            if fused is not None:
-                outs.append(fused)
-            for pval in sorted(slow + rest):
-                child = self._child(p_from[pval]["dir"])
-                vf = int(p_from[pval]["version"])
-                vt = int(p_to[pval]["version"])
-                outs.append(
-                    child.changes_between(
-                        spark, vf, vt, include_preimages=include_preimages
-                    )
-                    if self.child_store == "mor"
-                    else changes_between(
-                        child, spark, vf, vt,
-                        include_preimages=include_preimages,
-                    )
-                )
-        if not outs:
-            any_p = sorted(p_from or p_to)[0]
-            entry = (p_from or p_to)[any_p]
-            snap = self._child(entry["dir"]).read(
-                spark, version=entry["version"]
+                continue
+            if a:  # dropped, or re-created in a new epoch dir
+                snaps["delete"].append(self._child_layout(a))
+            if b:
+                snaps["insert"].append(self._child_layout(b))
+        outs = [
+            self._fused_frame(spark, v, snaps[tag]).withColumn(
+                "_change_type", F.lit(tag)
             )
-            return snap.withColumn("_change_type", F.lit("none")).limit(0)
+            for v, tag in ((v_from, "delete"), (v_to, "insert"))
+            if snaps[tag]
+        ]
+        cols_from, cols_to = self._columns_at(v_from), self._columns_at(v_to)
+        # an evolution inside the span leaves pre-states the child's own
+        # diff backfills: only a span with one column set fuses
+        fusable = changed if cols_to == cols_from else []
+        diff = (
+            self._log_diff
+            if self.child_store == "mor"
+            else self._snapshot_diff
+        )
+        fused, slow = diff(
+            spark, p_from, p_to, fusable, v_from, v_to, include_preimages
+        )
+        if fused is not None:
+            outs.append(fused)
+        for pval in sorted(slow + [p for p in changed if p not in fusable]):
+            child = self._child(p_from[pval]["dir"])
+            vf = int(p_from[pval]["version"])
+            vt = int(p_to[pval]["version"])
+            outs.append(
+                child.changes_between(
+                    spark, vf, vt, include_preimages=include_preimages
+                )
+                if self.child_store == "mor"
+                else changes_between(
+                    child, spark, vf, vt,
+                    include_preimages=include_preimages,
+                )
+            )
         # align to the WIDER endpoint's table schema (+ the CDC tag):
         # across an evolution boundary, pre-evolution children's change
         # rows lack the new columns — typed-null backfill, same law as
         # read()
-        wide = (
-            v_to
-            if len(self._columns_at(v_to)) >= len(self._columns_at(v_from))
-            else v_from
-        )
+        wide = v_to if len(cols_to) >= len(cols_from) else v_from
+        if not outs:
+            return self._fused_frame(spark, wide, []).withColumn(
+                "_change_type", F.lit("none")
+            )
         return self._aligned_union(
             spark, outs, wide, extra_cols=("_change_type",)
         )
@@ -2329,12 +2214,13 @@ class PartitionedParquetMergeStore:
         p_from: dict,
         p_to: dict,
         pvals: list,
-        cols: list[str],
-        types: dict[str, str] | None,
+        v_from: int,
+        v_to: int,
         include_preimages: bool,
     ) -> tuple[DataFrame | None, list]:
         """The COW diff law for the fusable changed children, as ONE
-        plan; returns ``(frame or None, stragglers)``.
+        plan; returns ``(frame or None, children left to their own
+        diff)``.
 
         The per-child :func:`~parquet_demo_spark.sources.merge_store.
         changes_between` plans two changed-bucket scans, a presence
@@ -2345,18 +2231,19 @@ class PartitionedParquetMergeStore:
         their DV anti-join, and one shared-law classification emits
         the feed. Only manifest-changed bucket dirs are read, per side,
         per child. Sound for the :meth:`_fused_frame` reason: every
-        join is keyed on the full PK. A child additionally needs its
-        ``v_from`` layout in the table's columns and an unchanged
-        bucket count inside the span (no rebucket — old keys then hash
-        to their own changed bucket ids under ``v_to``, so the presence
-        read needs no per-child collect); otherwise it is a straggler.
-        ``types`` (the table's {column: type} record) gives every scan
-        an explicit schema, which skips its footer-inference job.
+        join is keyed on the full PK. A child additionally needs an
+        unchanged bucket count inside the span (no rebucket — old keys
+        then hash to their own changed bucket ids under ``v_to``, so
+        the presence read needs no per-child collect); otherwise it is
+        returned for its own diff. Every scan takes the table's DDL at
+        ``v_to`` (the caller fuses only spans with one column set), as
+        in :meth:`_fused_frame`.
         """
         from parquet_demo_spark.sources.cdc import classify_changes
         from parquet_demo_spark.sources.mor_store import schema_ddl
 
-        pk = list(self.keys)
+        pk, cols = list(self.keys), self._columns_at(v_to)
+        types = self._column_types_at(v_to)
         sides: dict[str, list[str]] = {
             s: [] for s in ("new", "old", "pres", "dv_new", "dv_old", "dv_pres")
         }
@@ -2365,13 +2252,8 @@ class PartitionedParquetMergeStore:
             child = self._child(p_from[pval]["dir"])
             vf = int(p_from[pval]["version"])
             vt = int(p_to[pval]["version"])
-            la = self._child_layout(p_from[pval])
-            if (
-                la is None
-                or la["cols"] != cols
-                or child._read_manifest(vf).get("num_buckets")
-                != child._read_manifest(vt).get("num_buckets")
-            ):
+            nb = child._read_manifest(vf).get("num_buckets")
+            if nb != child._read_manifest(vt).get("num_buckets"):
                 slow.append(pval)
                 continue
             old_paths = child._bucket_paths(vf)
@@ -2449,13 +2331,13 @@ class PartitionedParquetMergeStore:
         p_from: dict,
         p_to: dict,
         pvals: list,
-        cols: list[str],
-        types: dict[str, str] | None,
         v_from: int,
+        v_to: int,
         include_preimages: bool,
     ) -> tuple[DataFrame | None, list]:
         """The MOR diff law for the fusable changed children, as ONE
-        plan; returns ``(frame or None, stragglers)``.
+        plan; returns ``(frame or None, children left to their own
+        diff)``.
 
         The per-child diff plans one delta fold, one bucket probe and
         one classification join PER CHILD, and each child probe pays
@@ -2469,10 +2351,10 @@ class PartitionedParquetMergeStore:
         and the joins are keyed on the full PK. A child additionally
         needs a fast-diffable span (:meth:`MergeOnReadStore.
         _span_append_dirs` — appends and compacts only) whose appended
-        dirs are still on disk; otherwise it is a straggler. A span
-        that appended nothing contributes no rows either way.
-        ``types`` (the table's {column: type} record) types the delta
-        scan, which skips its footer-inference job.
+        dirs are still on disk; otherwise it is returned for its own
+        diff. A span that appended nothing contributes no rows either
+        way. The table's DDL at ``v_to`` types the delta scan, which
+        skips its footer-inference job.
         """
         from parquet_demo_spark.sources.mor_store import (
             _OP,
@@ -2481,7 +2363,8 @@ class PartitionedParquetMergeStore:
             schema_ddl,
         )
 
-        pk = list(self.keys)
+        pk, cols = list(self.keys), self._columns_at(v_to)
+        types = self._column_types_at(v_to)
         paths: list[str] = []
         slow: list = []
         for pval in pvals:

@@ -4,10 +4,12 @@
 "Before" plans replay the pre-round-16 planning posture (scope dial
 forced off via SPARK_GRAFT_SMALL_PLAN_BYTES=0 where the change is a
 measured-input plan scope); "after" plans come from the live code at
-the default dial. Like r15, action-time conf scopes never appear in a
-declared query's RETURNED plan — the observable artifact is the plan
-the scoped action runs, captured here by planning the same logical
-query inside vs outside the scope.
+the default dial. The partitioned read is captured live only: its
+committed "before" plan is the record of the removed per-child path.
+Like r15, action-time conf scopes never appear in a declared query's
+RETURNED plan — the observable artifact is the plan the scoped action
+runs, captured here by planning the same logical query inside vs
+outside the scope.
 """
 
 from __future__ import annotations
@@ -104,13 +106,11 @@ def main() -> None:
         )
 
     # --- partitioned MOR fused table read (q195/q198/q201/q182) ---------
-    # before = every child forced down the per-child read (the r15
-    # shape: one delta window + one anti-join per child); after = the
-    # live fused era read (one base scan + one fold + one DV anti-join)
+    # the live fused read (one base scan + one fold + one DV anti-join).
+    # The table has no per-child read path left to replay, so the
+    # committed q201_mor_table_read_before.txt (the r15 shape: one
+    # delta window + one anti-join per child) stays as the record.
     from parquet_demo_spark.registry import all_queries
-    from parquet_demo_spark.sources.partitioned_store import (
-        PartitionedParquetMergeStore,
-    )
 
     q = all_queries()["q201_mor_table_wap"]
     store, ev = q.build(spark, SF)
@@ -124,14 +124,6 @@ def main() -> None:
     from pyspark.sql import functions as FF
 
     store.merge(ev.filter(FF.col("event_id") % 11 == 0))
-    fused = PartitionedParquetMergeStore._era_plan
-    PartitionedParquetMergeStore._era_plan = (
-        lambda self, parts, selected, buckets=None: ([], list(selected))
-    )
-    try:
-        write("q201_mor_table_read_before.txt", store.read(spark))
-    finally:
-        PartitionedParquetMergeStore._era_plan = fused
     write("q201_mor_table_read_after.txt", store.read(spark))
 
     # --- q126/q127 ANN: vectorized hyperplane bucket + norm-precomputed

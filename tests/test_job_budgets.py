@@ -209,3 +209,72 @@ def test_cow_partitioned_read_is_one_job(spark, tmp_path):
     assert sorted((r.day, r.k, r.v) for r in rows) == sorted(
         (d, k, 1) for d in DAYS for k in range(5)
     )
+
+
+def _table(spark, root, child_store: str = "cow"):
+    table = PartitionedParquetMergeStore(
+        str(root),
+        keys=("day", "k"),
+        partition_col="day",
+        version_cols=("v",),
+        num_buckets=2,
+        child_store=child_store,
+    )
+    table.merge(_batch(spark, DAYS, 1))
+    return table
+
+
+@pytest.mark.parametrize("child_store, budget", [("cow", 1), ("mor", 2)])
+def test_partitioned_where_read_jobs_match_plain_read(
+    spark, tmp_path, child_store, budget
+):
+    """A value-pruned read is the plain read's one fused plan over the
+    children's pruned files, range-filtered once: building it runs no
+    per-child footer job, so it costs what the plain read does."""
+    table = _table(spark, tmp_path / "t", child_store)
+    rows = []
+    where = {"k": (1, 3)}
+    read = table.read(spark, where=where)
+    assert _jobs(spark, lambda: rows.extend(read.collect())) == budget
+    assert _jobs(spark, lambda: table.read(spark).collect()) == budget
+    assert sorted((r.day, r.k, r.v) for r in rows) == sorted(
+        (d, k, 1) for d in DAYS for k in (1, 2, 3)
+    )
+
+
+def test_cow_evolved_child_reads_and_probes_fused(spark, tmp_path):
+    """A child widened by schema evolution reads through the table DDL
+    in the one fused scan (its missing columns are typed NULLs), so an
+    evolved table reads in one job, and a probe into the evolved child
+    costs what the same probe costs on an un-evolved table."""
+    plain = _table(spark, tmp_path / "plain")
+    table = _table(spark, tmp_path / "evolved")
+    table.merge(
+        spark.range(1).select(
+            F.lit("d2").alias("day"),
+            F.lit(9).cast("long").alias("k"),
+            F.lit(1).cast("long").alias("v"),
+            F.lit("wide").alias("payload"),
+            F.lit(7).cast("long").alias("extra"),
+        ),
+        allow_schema_evolution=True,
+    )
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(table.read(spark).collect())) == 1
+    assert len(rows) == 31
+    assert {(r.day, r.k, r.extra) for r in rows if r.extra is not None} == {
+        ("d2", 9, 7)
+    }
+    keys = spark.createDataFrame([("d2", 1), ("d2", 9)], "day string, k long")
+    counts, got = {}, {}
+    for name, t in (("plain", plain), ("evolved", table)):
+        got[name] = []
+        counts[name] = _jobs(
+            spark, lambda: got[name].extend(t.probe(spark, keys).collect())
+        )
+    assert counts == {"plain": 6, "evolved": 6}, counts
+    assert sorted((r.k, r.extra) for r in got["evolved"]) == [
+        (1, None),
+        (9, 7),
+    ]
+    assert [r.k for r in got["plain"]] == [1]

@@ -487,6 +487,46 @@ def test_stats_pruning_skips_buckets(spark, tmp_path):
     assert got == [(1, 2, "fresh")]
 
 
+def test_dir_column_stats_key_order_is_fixed(tmp_path):
+    """A bucket's recorded stats come out in sorted column order, so two
+    writer processes record byte-identical manifests whatever their
+    string-hash seed. No Spark: the stats are footer metadata."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "s" / "data" / "b0"
+    d.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"z": [1, 2], "a": ["x", "y"], "m": [0.5, 1.5]}),
+        d / "part-0.parquet",
+    )
+    code = (
+        "import json, sys\n"
+        "from parquet_demo_spark.sources.merge_store import "
+        "ParquetMergeStore\n"
+        "st = ParquetMergeStore(sys.argv[1], keys=('z',))\n"
+        "print(json.dumps(st._dir_column_stats('data/b0')))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = {
+        subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path / "s")],
+            cwd=repo,
+            env={**os.environ, "PYTHONHASHSEED": str(seed)},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        for seed in range(4)
+    }
+    assert len(outs) == 1, outs
+    assert list(json.loads(outs.pop())) == ["a", "m", "z"]
+
+
 def test_read_where_matches_full_filter(spark, tmp_path):
     store = _store(tmp_path, num_buckets=4)
     store.merge(

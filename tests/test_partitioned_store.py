@@ -3,8 +3,9 @@ retention, CDC across drops, and global snapshot isolation."""
 
 from __future__ import annotations
 
-import contextlib
+import functools
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -39,19 +40,103 @@ def _batch(spark, day_keys):
     )
 
 
-@contextlib.contextmanager
-def _per_child_only(st):
-    """Send every child down the per-child path — the reference the
-    fused era plans are checked against."""
-    orig = type(st)._era_plan
-    type(st)._era_plan = lambda self, parts, selected, buckets=None: (
-        [],
-        list(selected),
+def _union_as_table(st, version, dfs, extra=()):
+    """Union per-child frames in the table schema at ``version`` with
+    typed-null backfill for the columns a child lacks."""
+    cols = st._columns_at(version) + list(extra)
+    types = {**st._column_types_at(version), "_change_type": "string"}
+    return functools.reduce(
+        lambda x, y: x.unionByName(y),
+        [
+            df.select(
+                *[
+                    F.col(c)
+                    if c in df.columns
+                    else F.lit(None).cast(types[c]).alias(c)
+                    for c in cols
+                ]
+            )
+            for df in dfs
+        ],
     )
-    try:
-        yield
-    finally:
-        type(st)._era_plan = orig
+
+
+def _per_child_read(spark, st, version=None, where=None):
+    """The table read composed from every live child store's own
+    public ``read`` — the reference the fused read is checked
+    against."""
+    v = st.current_version() if version is None else version
+    return _union_as_table(
+        st,
+        v,
+        [
+            st._child(e["dir"]).read(spark, version=e["version"], where=where)
+            for e in st._parts(v).values()
+        ],
+    )
+
+
+def _per_child_probe(spark, st, keys):
+    """The table probe composed from every live child's own public
+    ``probe`` of its partition's keys."""
+    v = st.current_version()
+    return _union_as_table(
+        st,
+        v,
+        [
+            st._child(e["dir"]).probe(
+                spark, keys.filter(F.col("day") == pval), version=e["version"]
+            )
+            for pval, e in st._parts(v).items()
+        ],
+    )
+
+
+def _per_child_cdc(spark, st, v_from, v_to, include_preimages):
+    """The table change feed composed from the children's own public
+    ``changes_between`` (same dir at both ends) and snapshot reads
+    (dropped, created and re-created partitions)."""
+    from parquet_demo_spark.sources.merge_store import changes_between
+
+    p_from, p_to = st._parts(v_from), st._parts(v_to)
+    outs = []
+    for pval in sorted(set(p_from) | set(p_to)):
+        a, b = p_from.get(pval), p_to.get(pval)
+        if a and b and a["dir"] == b["dir"]:
+            child = st._child(a["dir"])
+            vf, vt = int(a["version"]), int(b["version"])
+            if vf != vt:
+                outs.append(
+                    child.changes_between(
+                        spark, vf, vt, include_preimages=include_preimages
+                    )
+                    if st.child_store == "mor"
+                    else changes_between(
+                        child, spark, vf, vt,
+                        include_preimages=include_preimages,
+                    )
+                )
+            continue
+        for e, tag in ((a, "delete"), (b, "insert")):
+            if e:
+                outs.append(
+                    st._child(e["dir"])
+                    .read(spark, version=e["version"])
+                    .withColumn("_change_type", F.lit(tag))
+                )
+    return _union_as_table(st, v_to, outs, extra=("_change_type",))
+
+
+def _row_scans(df) -> tuple[int, int]:
+    """(base, delta) scan relations in ``df``'s plan: a delta scan
+    carries ``__op``, a base scan the table's rows without it, and a
+    deletion-vector scan (only the PK) is neither."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    rels = re.findall(r"Relation \[([^\]]*)\]", plan)
+    return (
+        sum("payload" in r and "__op" not in r for r in rels),
+        sum("__op" in r for r in rels),
+    )
 
 
 def test_partition_col_must_be_key(tmp_path):
@@ -1234,27 +1319,27 @@ def test_partitioned_probe_opens_only_the_keys_partitions(
     calls = []
     orig = ParquetMergeStore.probe
     routed = []
-    orig_plan = type(st)._era_plan
+    orig_layout = type(st)._child_layout
 
     def counting(self, *a, **kw):
         calls.append(self.root)
         return orig(self, *a, **kw)
 
-    def recording(self, parts, selected, buckets=None):
-        routed.append(list(selected))
-        return orig_plan(self, parts, selected, buckets)
+    def recording(self, entry, buckets=None, where=None):
+        routed.append(entry["dir"])
+        return orig_layout(self, entry, buckets, where)
 
     monkeypatch.setattr(ParquetMergeStore, "probe", counting)
-    monkeypatch.setattr(type(st), "_era_plan", recording)
+    monkeypatch.setattr(type(st), "_child_layout", recording)
     keys = spark.createDataFrame(
         [Row(day="d2", k=1), Row(day="d2", k=999), Row(day="zz", k=1)]
     )
     got = _rows(st.probe(spark, keys))
     assert got == [("d2", 1, 1, "d2/1")]
     # exactly one partition routed (fused scan over its dirs only;
-    # the r16 fusion replaced the per-child probe call, so the pruning
-    # evidence is the routed hit list, not a child-probe count)
-    assert routed == [["d2"]] and calls == []
+    # the fusion replaced the per-child probe call, so the pruning
+    # evidence is the routed layout list, not a child-probe count)
+    assert routed == ["p=d2"] and calls == []
     # zero matching partitions: schema-only empty frame, no child probe
     routed.clear()
     empty = st.probe(spark, spark.createDataFrame([Row(day="zz", k=1)]))
@@ -1459,13 +1544,14 @@ def test_partitioned_vacuum_older_than_keeps_legacy_undated(
 
 
 def test_era_scan_matches_per_child_reads(spark, tmp_path):
-    """read()'s era fast path (ONE multi-path scan per schema era,
-    round-10 VERDICT #7) must return exactly what the per-child slow
-    path returns, on a store mixing every eligibility class: plain
-    children and a DV-carrying child (era-scanned, the DV anti-joined),
-    an evolved child (routed to a per-child read), and a
-    post-evolution era."""
-    st = _store(tmp_path)
+    """read()'s one fused plan (ONE multi-path base scan, round-10
+    VERDICT #7) returns exactly what the children's own reads return,
+    with and without ``where``, on a store mixing every child state:
+    plain children, a DV-carrying child (the DV anti-joined), an
+    evolved child (typed NULLs from the table DDL) and, after a
+    clustered compact, children whose manifests record per-file
+    stats. A vacuumed child pin raises the descriptive error."""
+    st = _store(tmp_path, bloom_cols=("k",))
     st.merge(
         _batch(
             spark,
@@ -1485,21 +1571,80 @@ def test_era_scan_matches_per_child_reads(spark, tmp_path):
         (F.col("day") == "d3") & (F.col("k") == 2),
         deletion_vectors=True,
     )
-    fast = st.read(spark)
-    parts = st._parts(st.current_version())
-    eras, stragglers = st._era_plan(parts, sorted(parts))
-    assert stragglers == ["d2"] and len(eras) == 1
-    with _per_child_only(st):
-        slow = st.read(spark)
     key = lambda df: sorted(  # noqa: E731
         (tuple(r) for r in df.select(*sorted(df.columns)).collect()),
         key=repr,  # rows carry typed NULLs (the evolved column)
     )
-    assert fast.columns == slow.columns
-    assert key(fast) == key(slow)
+    wheres = [
+        None,
+        {"k": (2, 3)},  # a range
+        {"k": (9, 9)},  # a point lookup: blooms and min/max prune
+        {"k": (2, 2)},
+    ]
+
+    def check(label):
+        for where in wheres:
+            fast = st.read(spark, where=where)
+            slow = _per_child_read(spark, st, where=where)
+            assert fast.columns == slow.columns, (label, where)
+            assert key(fast) == key(slow), (label, where)
+            assert _row_scans(fast)[0] <= 1, (label, where)
+
+    check("evolved + DV")
+    fast = st.read(spark)
+    assert _row_scans(fast) == (1, 0)
     assert ("d3", 2, 1, "d3/2", None) not in [
         (r.day, r.k, r.v, r.payload, r.extra) for r in fast.collect()
     ]  # the DV'd row is gone on the fast path too
+    assert key(st.read(spark, where={"k": (9, 9)})) == [
+        ("d2", 7, 9, "wide", 1)
+    ]
+
+    # clustered compact: every child records per-file min/max boxes
+    v_old = st.current_version()
+    st.compact(spark, cluster_by=["k"])
+    parts = st._parts(st.current_version())
+    assert all(
+        st._child(e["dir"])._read_manifest(e["version"]).get("file_stats")
+        for e in parts.values()
+    )
+    check("clustered")
+
+    # a vacuumed child pin: the table manifest survives, the child's
+    # pre-compact data dirs do not
+    for e in parts.values():
+        st._child(e["dir"]).vacuum(keep_last=1)
+    with pytest.raises(ValueError, match="vacuum"):
+        st.read(spark, version=v_old)
+    with pytest.raises(ValueError, match="vacuum"):
+        _per_child_read(spark, st, version=v_old)
+    check("after child vacuum")
+
+
+def test_files_read_counts_the_files_a_where_read_scans(spark, tmp_path):
+    """files_read counts the read's own layouts: on a clustered table
+    (per-file min/max boxes) without deletion vectors, the files a
+    ``where`` read's scan relations open are exactly
+    ``files_read(where=...)``, and fewer than a full read's."""
+    st = _store(tmp_path)
+    st.merge(
+        spark.createDataFrame(
+            [
+                Row(day=d, k=k, v=1, payload=f"{d}/{k}")
+                for d in ("d1", "d2")
+                for k in range(64)
+            ]
+        )
+    )
+    st.compact(spark, cluster_by=["k"], files_per_bucket=4)
+    where = {"k": (8, 15)}
+    df = st.read(spark, where=where)
+    assert len(df.inputFiles()) == st.files_read(where=where)
+    assert st.files_read(where=where) < st.files_read()
+    assert len(st.read(spark).inputFiles()) == st.files_read()
+    assert sorted((r.day, r.k) for r in df.collect()) == [
+        (d, k) for d in ("d1", "d2") for k in range(8, 16)
+    ]
 
 
 def test_merge_rejects_retyped_batch_even_into_new_partition(
@@ -2185,20 +2330,23 @@ def test_mor_table_write_change_feed(spark, tmp_path):
 
 def test_mor_fused_read_matches_per_child(spark, tmp_path):
     """The fused MOR table read (one base scan + one delta fold + one
-    DV anti-join per schema era — _fused_frame, r16) returns
-    exactly the per-child slow read's rows in every store state:
-    live upsert/delete deltas, post-compact deletion vectors, and a
-    later delta layer on top of the DV'd base."""
-    st = _mor_store(tmp_path)
+    DV anti-join — _fused_frame) returns exactly the children's own
+    reads' rows, with and without ``where``, in every store state:
+    live upsert/delete deltas, post-compact deletion vectors, a later
+    delta layer on top of the DV'd base (one of whose updates moves a
+    row out of a range), and a child whose base reads as evolved and
+    whose log entry carries no column record."""
+    import json
 
-    def slow_rows():
-        with _per_child_only(st):
-            return _rows(st.read(spark))
+    st = _mor_store(tmp_path)
+    wheres = [None, {"k": (1, 1)}, {"v": (1, 1)}]
 
     def check(state_label):
-        fused = _rows(st.read(spark))
-        assert fused == slow_rows(), state_label
-        return fused
+        for where in wheres:
+            fused = _rows(st.read(spark, where=where))
+            want = _rows(_per_child_read(spark, st, where=where))
+            assert fused == want, (state_label, where)
+        return _rows(st.read(spark))
 
     # live deltas: upserts across partitions + LWW re-edit + delete
     st.merge(_batch(spark, [("d1", 1), ("d1", 2), ("d2", 1)]))
@@ -2210,25 +2358,47 @@ def test_mor_fused_read_matches_per_child(spark, tmp_path):
     st.delete_where(spark, F.col("k") == 2)
     rows = check("live deltas")
     assert rows == [("d1", 1, 2, "d1/1b"), ("d2", 1, 1, "d2/1")]
-    # the fused path actually engages here (no child on the slow list)
-    parts = st._parts(st.current_version())
-    eras, slow = st._era_plan(parts, sorted(parts))
-    assert slow == [] and len(eras) == 1
+    assert _row_scans(st.read(spark)) == (0, 1)
 
     # post-compact: deltas fold into the base, deletes become DVs
     st.compact(spark)
     assert check("post-compact (DV state)") == rows
 
-    # fresh deltas layered over the DV'd base
+    # fresh deltas layered over the DV'd base; the update of (d2, 1)
+    # moves its row out of the v in [1, 1] range
     st.merge(
         spark.createDataFrame(
-            [Row(day="d2", k=7, v=1, payload="d2/7")]
+            [
+                Row(day="d2", k=7, v=1, payload="d2/7"),
+                Row(day="d2", k=1, v=3, payload="d2/1c"),
+            ]
         )
     )
-    st.delete_where(spark, F.col("k") == 1)
+    st.delete_where(spark, (F.col("day") == "d1") & (F.col("k") == 1))
     assert check("deltas over DV base") == [
+        ("d2", 1, 3, "d2/1c"),
         ("d2", 7, 1, "d2/7"),
     ]
+    assert _rows(st.read(spark, where={"v": (1, 1)})) == [
+        ("d2", 7, 1, "d2/7")
+    ]
+
+    # d2's base manifest predates the sticky 'evolved' flag (so it
+    # reads as evolved) and its pinned log entry records no columns
+    e = st._parts(st.current_version())["d2"]
+    child = st._child(e["dir"])
+    state = child._entry_state(int(e["version"]))
+    mp = child.base._manifest_path(int(state["base_version"]))
+    m = json.load(open(mp))
+    m.pop("evolved", None)
+    json.dump(m, open(mp, "w"))
+    ep = child._entry_path(int(e["version"]))
+    entry = json.load(open(ep))
+    entry.pop("columns", None)
+    entry.pop("types", None)
+    json.dump(entry, open(ep, "w"))
+    check("evolved base, log entry without a column record")
+    assert _row_scans(st.read(spark))[0] == 1
 
 
 def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
@@ -2250,8 +2420,9 @@ def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
         )
 
     def per_child_rows(v_from, v_to, pre):
-        with _per_child_only(st):
-            return cdc_rows(v_from, v_to, pre)
+        return sorted(
+            map(tuple, _per_child_cdc(spark, st, v_from, v_to, pre).collect())
+        )
 
     def check(v_from, v_to, label):
         for pre in (False, True):
@@ -2313,21 +2484,10 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
             key=repr,  # evolved rows carry typed NULLs
         )
 
-    def slow_rows(st, keys):
-        with _per_child_only(st):
-            return rows(st.probe(spark, keys))
-
     def check(st, keys, label):
         fused = rows(st.probe(spark, keys))
-        assert fused == slow_rows(st, keys), label
+        assert fused == rows(_per_child_probe(spark, st, keys)), label
         return fused
-
-    def fused_plan(st):
-        # the fused path actually engages: (eras, per-child stragglers)
-        parts = st._parts(st.current_version())
-        return st._era_plan(
-            parts, sorted(parts), {p: {0, 1} for p in parts}
-        )
 
     # -- MOR children ----------------------------------------------------
     st = _mor_store(tmp_path)
@@ -2350,8 +2510,7 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
         ("d1", 1, "d1/1b", 2),
         ("d2", 1, "d2/1", 1),
     ]
-    eras, slow = fused_plan(st)
-    assert slow == [] and len(eras) == 1
+    assert _row_scans(st.probe(spark, keys)) == (0, 1)
 
     st.compact(spark)
     check(st, keys, "post-compact (DV state)")
@@ -2417,15 +2576,16 @@ def test_mor_fused_probe_matches_per_child(spark, tmp_path):
         ("d2", 7, 9, "wide", 1),
         ("d3", None, 5, "d3/5", 1),
     }
-    eras, slow = fused_plan(st)
-    assert slow == ["d2"] and len(eras) == 1
+    assert _row_scans(st.probe(spark, keys)) == (1, 0)
 
 
 def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
     """The fused COW table-level CDC (_snapshot_diff, r16) emits
     exactly the per-child snapshot diffs' rows for every span shape:
-    merges, DV deletes, preimages on/off, and spans including a
-    partition drop (handled outside the fusion)."""
+    merges, DV deletes, preimages on/off, spans including a partition
+    drop (its snapshot a fused frame of its own), a span with an
+    evolution (per-child diffs) and spans after one (fused, over
+    evolved and narrow children)."""
     st = _store(tmp_path)
 
     def cdc_rows(v_from, v_to, pre):
@@ -2439,8 +2599,9 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
         )
 
     def per_child_rows(v_from, v_to, pre):
-        with _per_child_only(st):
-            return cdc_rows(v_from, v_to, pre)
+        return sorted(
+            map(tuple, _per_child_cdc(spark, st, v_from, v_to, pre).collect())
+        )
 
     def check(v_from, v_to, label):
         for pre in (False, True):
@@ -2469,3 +2630,27 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
     check(1, 2, "DV-delete-only span")
     st.drop_partition("d2")
     check(0, 3, "span including a partition drop")
+
+    # v4 widens d1 (an evolution inside the span: per-child diffs);
+    # v5 then writes the wide schema into d1 and the narrow d3 (one
+    # column set across the span: fused, pre-states read typed NULLs)
+    st.merge(
+        spark.createDataFrame(
+            [Row(day="d1", k=1, v=3, payload="d1/1c", extra=7)]
+        ),
+        allow_schema_evolution=True,
+    )
+    st.merge(
+        spark.createDataFrame(
+            [
+                Row(day="d1", k=5, v=1, payload="d1/5", extra=8),
+                Row(day="d3", k=5, v=2, payload="d3/5b", extra=None),
+                Row(day="d3", k=6, v=1, payload="d3/6", extra=9),
+            ],
+            "day string, k bigint, v bigint, payload string, extra bigint",
+        ),
+        allow_schema_evolution=True,
+    )
+    check(3, 4, "span with an evolution")
+    check(4, 5, "span after an evolution")
+    check(0, 5, "span across drop and evolution")
