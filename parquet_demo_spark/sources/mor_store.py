@@ -406,8 +406,9 @@ class MergeOnReadStore:
         ``__op`` column is ignored) against :meth:`_schema_record`, and
         return the ``(columns, types)`` record its log entry carries.
         Raises ValueError on drift. The partitioned table runs it for
-        every touched child before staging a fused delta write, so a
-        drifted batch fails with nothing written."""
+        every touched child after staging a fused delta write and
+        before any child adopts it, so a drifted batch fails with
+        nothing committed."""
         missing = [
             c
             for c in (*self.keys, *self.version_cols)
@@ -1451,17 +1452,19 @@ def resolve_deltas(
     with plan_scope(spark, 0):
         df = reader.parquet(*paths)
     pos = {os.path.abspath(p): i for i, p in enumerate(paths)}
-    seq = []
+    file_pos = {}
     for f in df.inputFiles():
         # the scan reports a file as a URI; ``_metadata.file_path``
         # renders the same URI without an empty authority
         u = urlsplit(f)
         auth = f"//{u.netloc}" if u.netloc else ""
-        seq += [
-            F.lit(f"{u.scheme}:{auth}{u.path}"),
-            F.lit(pos[os.path.dirname(unquote(u.path))]),
+        file_pos[f"{u.scheme}:{auth}{u.path}"] = pos[
+            os.path.dirname(unquote(u.path))
         ]
-    log_pos = F.create_map(*seq).cast("map<string, bigint>")
+    # ONE literal for the whole map (the optimizer folds it to a map
+    # constant): a literal per key and per value cost two py4j calls
+    # per file
+    log_pos = F.from_json(F.lit(json.dumps(file_pos)), "map<string,bigint>")
     w = Window.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
     return (
         df.withColumn(_SEQ, log_pos[F.col("_metadata.file_path")])

@@ -92,6 +92,8 @@ from parquet_demo_spark.tuning import scoped_store_op
 # separator between the components of a composite (multi-column)
 # partition value in manifest keys and child dir names: p=2024-01-05|web
 _SEP = "|"
+# the dir partitionBy writes a NULL (or empty-string) value to
+_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _pdir(val, multi: bool = False) -> str:
@@ -681,8 +683,7 @@ class PartitionedParquetMergeStore:
 
         Only TOUCHED partitions' children advance (and inside each, only
         touched buckets rewrite — the child's law); untouched partitions
-        re-reference their committed child versions. The distinct-
-        partition collect is metadata-sized (# touched partitions).
+        re-reference their committed child versions.
 
         ``conditional=True`` forwards the child's only-if-newer merge,
         which makes streaming ingest through ``stream_merge_into_store``
@@ -699,17 +700,20 @@ class PartitionedParquetMergeStore:
         written in ONE Spark job ``partitionBy`` partition value into a
         staging dir under the table root; each staged dir is renamed
         into its child's ``deltas/`` and adopted with a metadata-only
-        log-entry commit. A merge costs the routing collect plus that
-        write — two jobs at any number of touched partitions. Every
-        live touched child is fenced to the global pin and checks the
-        batch against its schema record before anything is written.
+        log-entry commit. The staged write IS the routing: its dir
+        listing names the touched partitions, carries the NULL guard
+        and makes an empty batch a no-op, so a merge is one job at any
+        number of touched partitions. Every touched child is fenced to
+        the global pin and checks the batch against its schema record
+        after the write is staged and before any child adopts.
 
-        Routing and the staged partition dirs derive from the SAME
-        Spark-side ``cast('string')`` expression, so a partition value
-        whose Python ``str()`` rendering differs from Spark's (doubles,
-        fractional timestamps) can never route to a slice that matches
-        nothing — and the NULL guard rides the same single
-        distinct-collect job instead of paying its own.
+        Copy-on-write children route with one distinct collect of
+        (partition value, bucket) pairs: each child's merge needs its
+        touched buckets. Routing and the staged partition dirs derive
+        from the SAME Spark-side ``cast('string')`` expression, so a
+        partition value whose Python ``str()`` rendering differs from
+        Spark's (doubles, fractional timestamps) can never route to a
+        slice that matches nothing.
         """
         lacking = [
             c for c in self.partition_cols if c not in upserts.columns
@@ -733,11 +737,11 @@ class PartitionedParquetMergeStore:
         # whole-table read dies on the union. With the flag, the global
         # manifest's column set widens (batch-order append) and every
         # read aligns children to it via _aligned_union.
-        cur0 = self.current_version()
+        cur = self.current_version()
         g_cols, g_types = None, None
-        if cur0 is not None:
-            g_cols = self._columns_at(cur0)
-            g_types = self._column_types_at(cur0)
+        if cur is not None:
+            g_cols = self._columns_at(cur)
+            g_types = self._column_types_at(cur)
             if set(upserts.columns) != set(g_cols):
                 if not allow_schema_evolution:
                     raise ValueError(
@@ -785,58 +789,7 @@ class PartitionedParquetMergeStore:
         # the full invariant — but by then sibling partitions may have
         # committed; this one agg job keeps the failure atomic)
         self._validate_batch(upserts, "merge batch")
-        pexprs = [
-            F.col(c).cast("string").alias(c) for c in self.partition_cols
-        ]
-        # ONE distinct job routes partitions AND buckets: the child
-        # bucket id rides along so each child's merge can skip its own
-        # touched-bucket distinct-collect — a per-child fixed-cost
-        # Spark job a W-partition backfill paid W times (VERDICT r11
-        # #1/#7). The expression is the child's own bucket_expr, so
-        # the sets are exact by construction.
-        bexpr = ParquetMergeStore.bucket_expr(self.keys, self.num_buckets)
-        routed = [
-            tuple(r)
-            for r in upserts.select(*pexprs, bexpr.alias("__b"))
-            .distinct()
-            .collect()
-        ]
-        pval_rows = {row[:-1] for row in routed}
-        if any(any(v is None for v in row) for row in pval_rows):
-            raise ValueError(
-                f"NULL in {self.partition_cols} cannot route to a partition"
-            )
-        components = {_composite(row): row for row in pval_rows}
-        pvals = sorted(components)
-        touched_buckets: dict[str, set[int]] = {}
-        for row in routed:
-            touched_buckets.setdefault(
-                _composite(row[:-1]), set()
-            ).add(int(row[-1]))
-        cur = self.current_version()
-        if not pvals:
-            # empty batch: no child advanced, so no global version burns
-            # (the child store's own no-op law, one level up)
-            if cur is None:
-                raise ValueError(
-                    "cannot merge an empty batch into an empty store"
-                )
-            return cur
         parts = {} if cur is None else self._parts(cur)
-        # dir assignment stays serial (cheap, and epoch probing must not
-        # race itself)
-        dirnames = {}
-        for pval in pvals:
-            # a partition with no LIVE entry gets a FRESH epoch dir even
-            # if an old child exists on disk (dropped history): pinning
-            # the old child again would resurrect its pre-drop rows
-            dirnames[pval] = (
-                parts[pval]["dir"]
-                if pval in parts
-                else self._next_epoch_dir(pval)
-            )
-
-        spark = upserts.sparkSession
         if self.child_store == "mor":
             from parquet_demo_spark.sources.mongo import collapse_for_upsert
             from parquet_demo_spark.sources.mor_store import _OP
@@ -846,85 +799,53 @@ class PartitionedParquetMergeStore:
             # every partition column is a PK column — so the __pval
             # shuffle already satisfies the window: one shuffle
             staged = collapse_for_upsert(
-                self._by_pval(
-                    upserts.withColumn(_OP, F.lit("u")), len(pvals)
-                ),
+                self._by_pval(upserts.withColumn(_OP, F.lit("u"))),
                 ("__pval", *self.keys),
                 self.version_cols,
             )
             results = self._stage_and_adopt(
-                staged,
-                upserts,
-                pvals,
-                parts,
-                dirnames,
-                write_change_feed,
-                fence_routed=True,
+                staged, upserts, parts, write_change_feed
             )
-        elif len(pvals) == 1:
-            # single-partition batch (the streaming-ingest common case):
-            # the whole batch IS the slice — no routing write needed
-            [only] = pvals
-            child = (
-                self._pinned_child(parts[only])
-                if only in parts
-                else self._child(dirnames[only])
-            )
-            pend = child._merge_prepare(
-                upserts,
-                write_change_feed=write_change_feed,
-                conditional=conditional,
-                allow_schema_evolution=allow_schema_evolution,
-                touched=sorted(touched_buckets[only]),
-            )
-            v = child._merge_commit(
-                pend, child._out_dir_blooms(spark, pend["out_dir"])
-            )
-            results = {
-                only: {
-                    "dir": dirnames[only],
-                    "version": v,
-                    "stats": self._child_stats_rollup(child, v),
-                    "blooms": self._child_blooms_rollup(child, v),
-                }
-            }
         else:
             results = self._cow_merge(
                 upserts,
-                pvals,
                 parts,
-                dirnames,
-                touched_buckets,
                 write_change_feed=write_change_feed,
                 conditional=conditional,
                 allow_schema_evolution=allow_schema_evolution,
             )
+        if not results:
+            # empty batch: no child advanced, so no global version burns
+            # (the child store's own no-op law, one level up)
+            if cur is None:
+                raise ValueError(
+                    "cannot merge an empty batch into an empty store"
+                )
+            return cur
         parts.update(results)
         new_version = 0 if cur is None else cur + 1
         return self._commit(
             new_version,
             parts,
             "merge",
-            {"touched_partitions": pvals},
+            {"touched_partitions": sorted(results)},
             columns=g_cols,
             column_types=g_types,
         )
 
-    def _by_pval(self, df: DataFrame, n: int) -> DataFrame:
+    def _by_pval(self, df: DataFrame) -> DataFrame:
         """``df`` plus its composite partition value ``__pval``,
-        shuffled on it into ``n`` partitions (at most 64).
+        shuffled on it, so each value's rows sit in one task and its
+        staged dir gets one file.
 
-        The value is the routing collect's own Spark-side rendering.
-        concat_ws never returns NULL, and no row reaching here has a
-        NULL component (merge's routing collect rejects them; table
-        rows never carry one), so every row lands in a real ``__pval``
-        dir."""
-        pval_col = F.concat_ws(
-            _SEP, *[F.col(c).cast("string") for c in self.partition_cols]
-        )
-        return df.withColumn("__pval", pval_col).repartition(
-            max(1, min(n, 64)), F.col("__pval")
-        )
+        Each component renders with Spark's ``cast('string')``, as in
+        the copy-on-write routing collect. The value is NULL when any
+        component is NULL: Spark then writes the row to its default
+        partition dir, which :meth:`_stage` rejects."""
+        comps = [F.col(c).cast("string") for c in self.partition_cols]
+        # concat, unlike concat_ws, is NULL when any input is
+        pval_col = F.concat(*[x for c in comps for x in (F.lit(_SEP), c)][1:])
+        return df.withColumn("__pval", pval_col).repartition(F.col("__pval"))
 
     @contextlib.contextmanager
     def _staging(self):
@@ -937,81 +858,144 @@ class PartitionedParquetMergeStore:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
-    @staticmethod
-    def _stage(
-        df: DataFrame, staging: str, routed, complete: bool = False
-    ) -> dict[str, str]:
+    def _stage(self, df: DataFrame, staging: str) -> dict[str, str]:
         """Write ``df`` (shaped by :meth:`_by_pval`) ``partitionBy
         ("__pval")`` into ``staging`` in ONE Spark job and return
-        {partition value: its staged dir}. Only partitions that
-        received rows get a dir; ``complete`` requires one for every
-        ``routed`` value. Spark Hive-escapes special chars in dir
-        names; unescaping the listing back to the ``routed`` values
-        keeps the mapping exact without replicating the escape
-        table."""
+        {partition value: its staged dir}, one per value that received
+        rows. The listing is the routing, so it is validated here,
+        before any caller fences or adopts a child: a default-partition
+        dir (a NULL component, or an empty value, which Spark stages as
+        NULL) raises; each value is unescaped exactly (Spark Hive-
+        escapes special chars in dir names, and escapes '%' itself);
+        and its components must be ``len(partition_cols)`` values that
+        :func:`_composite` accepts."""
         (
             df.write.mode("overwrite")  # mkdtemp pre-created the dir
             .partitionBy("__pval")
             .parquet(staging)
         )
-        slices = {}
-        for d in os.listdir(staging):
-            if not d.startswith("__pval="):
-                continue
-            pval = _unescape(d.split("=", 1)[1])
-            if pval not in routed:
-                raise ValueError(
-                    f"staged partition {pval!r} not in the routed set "
-                    f"{sorted(routed)} — partition-value rendering "
-                    "drifted"
-                )
-            slices[pval] = os.path.join(staging, d)
-        unstaged = sorted(set(routed) - set(slices)) if complete else []
-        if unstaged:
+        names = [
+            d.split("=", 1)[1]
+            for d in os.listdir(staging)
+            if d.startswith("__pval=")
+        ]
+        if _NULL_DIR in names:
             raise ValueError(
-                f"routed partitions never staged: {unstaged} — "
-                "partition-value rendering drifted"
+                f"NULL in {self.partition_cols} cannot route to a "
+                "partition (an empty value stages as NULL too)"
+            )
+        slices = {}
+        n = len(self.partition_cols)
+        for name in names:
+            pval = _unescape(name)
+            comps = pval.split(_SEP) if n > 1 else [pval]
+            if len(comps) != n:
+                raise ValueError(
+                    f"unsupported partition value: {pval!r} has "
+                    f"{len(comps)} {_SEP!r}-separated components, not {n}"
+                )
+            slices[_composite(comps)] = os.path.join(
+                staging, f"__pval={name}"
             )
         return slices
 
-    def _cow_merge(
-        self,
-        upserts: DataFrame,
-        pvals: list,
-        parts: dict,
-        dirnames: dict,
-        touched_buckets: dict,
-        **merge_kw,
-    ) -> dict[str, dict]:
-        """Copy-on-write children of a multi-partition merge.
+    def _child_dir(self, parts: dict, pval: str) -> str:
+        """The dir a write to ``pval`` goes through: its live entry's,
+        else a FRESH epoch dir even if an old child exists on disk
+        (dropped history): pinning the old child again would resurrect
+        its pre-drop rows."""
+        if pval in parts:
+            return parts[pval]["dir"]
+        return self._next_epoch_dir(pval)
 
-        ONE Spark job routes the whole batch (VERDICT r7 #1's
-        composite-write design): the batch is staged ``partitionBy
-        (__pval)``, so each child's merge then reads ITS one-or-two-
-        file slice — a 1-task scan — instead of re-filtering the full
-        batch. Without this, a 50-partition backfill pays 50 x (batch
+    def _cow_entry(self, dirname: str, child, v: int) -> dict:
+        """A copy-on-write child's manifest entry at its version ``v``."""
+        return {
+            "dir": dirname,
+            "version": v,
+            "stats": self._child_stats_rollup(child, v),
+            "blooms": self._child_blooms_rollup(child, v),
+        }
+
+    def _cow_merge(
+        self, upserts: DataFrame, parts: dict, **merge_kw
+    ) -> dict[str, dict]:
+        """Copy-on-write children of a merge. Returns the new manifest
+        entry per touched partition ({} for an empty batch).
+
+        ONE distinct job routes partitions AND buckets: the child
+        bucket id rides along so each child's merge can skip its own
+        touched-bucket distinct-collect — a per-child fixed-cost Spark
+        job a W-partition backfill paid W times (VERDICT r11 #1/#7).
+        The expression is the child's own bucket_expr, so the sets are
+        exact by construction, and the NULL guard rides the same job.
+
+        A single-partition batch (the streaming-ingest common case) IS
+        its slice. Otherwise ONE Spark job stages the whole batch
+        (VERDICT r7 #1's composite-write design) ``partitionBy
+        (__pval)``, so each child's merge then reads ITS one-file slice
+        — a 1-task scan — instead of re-filtering the full batch.
+        Without this, a 50-partition backfill pays 50 x (batch
         partitions) tasks per stage; with it, the batch is scanned
-        once. Returns the new manifest entry per touched partition."""
+        once."""
+        pexprs = [
+            F.col(c).cast("string").alias(c) for c in self.partition_cols
+        ]
+        bexpr = ParquetMergeStore.bucket_expr(self.keys, self.num_buckets)
+        routed = [
+            tuple(r)
+            for r in upserts.select(*pexprs, bexpr.alias("__b"))
+            .distinct()
+            .collect()
+        ]
+        if any(None in row[:-1] for row in routed):
+            raise ValueError(
+                f"NULL in {self.partition_cols} cannot route to a partition"
+            )
+        touched: dict[str, set[int]] = {}
+        for row in routed:
+            touched.setdefault(_composite(row[:-1]), set()).add(int(row[-1]))
+        pvals = sorted(touched)
+        if not pvals:
+            return {}
+        # dir assignment stays serial (cheap, and epoch probing must not
+        # race itself)
+        dirnames = {p: self._child_dir(parts, p) for p in pvals}
         spark = upserts.sparkSession
-        with self._staging() as staging:
-            slices = self._stage(
-                self._by_pval(upserts, len(pvals)),
-                staging,
-                pvals,
-                complete=True,
+
+        def _open(pval: str):
+            return (
+                self._pinned_child(parts[pval])
+                if pval in parts
+                else self._child(dirnames[pval])
             )
 
-            def _prepare_one(pval: str):
-                child = (
-                    self._pinned_child(parts[pval])
-                    if pval in parts
-                    else self._child(dirnames[pval])
+        if len(pvals) == 1:
+            [only] = pvals
+            child = _open(only)
+            pend = child._merge_prepare(
+                upserts, touched=sorted(touched[only]), **merge_kw
+            )
+            v = child._merge_commit(
+                pend, child._out_dir_blooms(spark, pend["out_dir"])
+            )
+            return {only: self._cow_entry(dirnames[only], child, v)}
+        with self._staging() as staging:
+            slices = self._stage(self._by_pval(upserts), staging)
+            if sorted(slices) != pvals:
+                raise ValueError(
+                    f"staged partitions {sorted(slices)} differ from the "
+                    f"routed set {pvals} — partition-value rendering "
+                    "drifted"
                 )
+
+            def _prepare_one(pval: str):
+                child = _open(pval)
                 pend = child._merge_prepare(
                     spark.read.parquet(slices[pval]).select(
                         *upserts.columns
                     ),
-                    touched=sorted(touched_buckets[pval]),
+                    touched=sorted(touched[pval]),
                     **merge_kw,
                 )
                 return child, pend
@@ -1050,12 +1034,7 @@ class PartitionedParquetMergeStore:
             def _commit_one(pval: str) -> dict:
                 child, pend = prepared[pval]
                 v = child._merge_commit(pend, new_blooms.get(pval, {}))
-                return {
-                    "dir": dirnames[pval],
-                    "version": v,
-                    "stats": self._child_stats_rollup(child, v),
-                    "blooms": self._child_blooms_rollup(child, v),
-                }
+                return self._cow_entry(dirnames[pval], child, v)
 
             # commits are metadata-only (manifest write + footer-stat
             # walk); the pool still helps when W is large
@@ -1069,26 +1048,20 @@ class PartitionedParquetMergeStore:
         self,
         staged: DataFrame,
         batch: DataFrame,
-        routed: list,
         parts: dict,
-        dirnames: dict,
         write_change_feed: bool,
-        fence_routed: bool,
     ) -> dict[str, dict]:
         """The merge-on-read stage-and-adopt law. ONE Spark job writes
         ``staged`` (collapsed rows of ``batch`` with ``__op``, shaped
-        by :meth:`_by_pval`) into a staging dir. Each staged
-        ``__pval=`` dir is one child's whole delta: it is renamed into
-        that child's ``deltas/`` under a fresh unique name (same
-        filesystem, so the rename is atomic) and adopted with a
-        metadata-only log-entry commit.
-
-        Every child is fenced to the global pin (``_pinned_child``)
-        and checks ``batch`` against its delta schema record before
-        any child adopts. ``fence_routed`` (a merge) does that for
-        every live ``routed`` child before anything is written, and
-        requires a staged dir for every routed value; otherwise (a
-        delete) the staged dirs pick the children.
+        by :meth:`_by_pval`) into a staging dir, and its validated
+        listing (:meth:`_stage`) picks the children: each staged
+        ``__pval=`` dir is one child's whole delta. Every such child is
+        then fenced to the global pin (``_pinned_child``) and checks
+        ``batch`` against its delta schema record; only when all pass
+        is each dir renamed into its child's ``deltas/`` under a fresh
+        unique name (same filesystem, so the rename is atomic) and
+        adopted with a metadata-only log-entry commit. A batch with no
+        rows stages no dir and adopts nothing.
 
         Crash law: a staged or renamed dir is invisible until a child
         log entry references it (the child's vacuum reclaims an
@@ -1097,22 +1070,17 @@ class PartitionedParquetMergeStore:
         restores over on the next write; the staging dir is removed
         either way. Returns the new manifest entry per adopted
         partition."""
-        children = {
-            p: self._pinned_child(parts[p])
-            for p in (routed if fence_routed else ())
-            if p in parts
-        }
-        records = {p: c._delta_schema(batch) for p, c in children.items()}
         with self._staging() as staging:
-            slices = self._stage(
-                staged, staging, routed, complete=fence_routed
-            )
+            slices = self._stage(staged, staging)
+            dirs = {p: self._child_dir(parts, p) for p in slices}
+            # live children first: a fresh child's dir is created only
+            # once no fence or schema check is left to fail
+            children = {
+                p: self._pinned_child(parts[p]) for p in slices if p in parts
+            }
+            records = {p: c._delta_schema(batch) for p, c in children.items()}
             for p in sorted(set(slices) - set(children)):
-                children[p] = (
-                    self._pinned_child(parts[p])
-                    if p in parts
-                    else self._child(dirnames[p])
-                )
+                children[p] = self._child(dirs[p])
                 records[p] = children[p]._delta_schema(batch)
             out = {}
             for pval in sorted(slices):
@@ -1123,7 +1091,7 @@ class PartitionedParquetMergeStore:
                     batch.sparkSession, d, records[pval], write_change_feed
                 )
                 out[pval] = {
-                    "dir": dirnames[pval],
+                    "dir": dirs[pval],
                     "version": state["entry"],
                     "stats": {},
                     "blooms": {},
@@ -1175,15 +1143,10 @@ class PartitionedParquetMergeStore:
                 spark, version=cur, partitions=partitions
             ).filter(condition)
             results = self._stage_and_adopt(
-                self._by_pval(
-                    matching.withColumn(_OP, F.lit("d")), len(in_scope)
-                ),
+                self._by_pval(matching.withColumn(_OP, F.lit("d"))),
                 matching,
-                in_scope,
                 parts,
-                {p: parts[p]["dir"] for p in in_scope},
                 write_change_feed,
-                fence_routed=False,
             )
             parts.update(results)
             touched = sorted(results)
@@ -1199,12 +1162,7 @@ class PartitionedParquetMergeStore:
                 )
                 if v is None:  # no match, no child commit burned
                     return None
-                return {
-                    "dir": parts[pval]["dir"],
-                    "version": v,
-                    "stats": self._child_stats_rollup(child, v),
-                    "blooms": self._child_blooms_rollup(child, v),
-                }
+                return self._cow_entry(parts[pval]["dir"], child, v)
 
             with ThreadPoolExecutor(
                 max_workers=min(self.write_concurrency, len(in_scope))
@@ -2000,6 +1958,9 @@ class PartitionedParquetMergeStore:
                 )
         return total
 
+    # scoped like a batch write: a small key batch's pair collect
+    # plans without AQE, one job instead of one per query stage
+    @scoped_store_op("keys_df")
     def probe(
         self,
         spark: SparkSession,

@@ -13,6 +13,8 @@ parquet-sourced batches.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,16 +61,66 @@ def mor_table(spark, tmp_path):
     return st
 
 
+def _adopted_files(table, days) -> list[int]:
+    """Parquet files in the delta dir each day's child adopted last."""
+    counts = []
+    for d in days:
+        child = table._child(table._parts()[d]["dir"])
+        last = os.path.join(child._deltas_root, child._log()["dirs"][-1])
+        counts.append(sum(f.endswith(".parquet") for f in os.listdir(last)))
+    return counts
+
+
 @pytest.mark.parametrize("touched", [1, 2, 5])
-def test_mor_partitioned_merge_is_two_jobs(spark, mor_table, touched):
-    """The routing collect plus ONE staged delta write, whatever the
-    number of touched children."""
+def test_mor_partitioned_merge_is_one_job(spark, mor_table, touched):
+    """The staged delta write is the routing: ONE job whatever the
+    number of touched children, and each adopted dir is one file."""
     days = DAYS[:touched]
-    assert _jobs(spark, lambda: mor_table.merge(_batch(spark, days, 2))) == 2
+    assert _jobs(spark, lambda: mor_table.merge(_batch(spark, days, 2))) == 1
+    assert _adopted_files(mor_table, days) == [1] * touched
     got = mor_table.read(spark).filter(F.col("v") == 2)
     assert {r.day for r in got.select("day").distinct().collect()} == set(
         days
     )
+
+
+def test_mor_partitioned_bootstrap_and_empty_merge_are_one_job(
+    spark, tmp_path
+):
+    """A first merge creates every child from the one staged write; an
+    empty batch stages nothing and burns no version, in one job."""
+    table = PartitionedParquetMergeStore(
+        str(tmp_path / "boot"),
+        keys=("day", "k"),
+        partition_col="day",
+        version_cols=("v",),
+        num_buckets=2,
+        child_store="mor",
+    )
+    assert _jobs(spark, lambda: table.merge(_batch(spark, DAYS, 1))) == 1
+    assert table.current_version() == 0
+    assert table.partitions() == DAYS
+    assert _adopted_files(table, DAYS) == [1] * len(DAYS)
+    empty = _batch(spark, DAYS, 2).filter(F.col("k") < 0)
+    assert _jobs(spark, lambda: table.merge(empty)) == 1
+    assert table.current_version() == 0
+
+
+@pytest.mark.parametrize("child_store", ["cow", "mor"])
+def test_partitioned_probe_routes_in_one_job(spark, tmp_path, child_store):
+    """A small key batch's (partition, bucket) pair collect runs under
+    the store's small-plan scope: building the probe is one job (two
+    under AQE, which materializes the distinct's shuffle stage)."""
+    table = _table(spark, tmp_path / "t", child_store)
+    keys = spark.range(2).select(
+        F.lit("d2").alias("day"), (F.col("id") + 1).alias("k")
+    )
+    probe = []
+    assert _jobs(spark, lambda: probe.append(table.probe(spark, keys))) == 1
+    assert sorted((r.day, r.k) for r in probe[0].collect()) == [
+        ("d2", 1),
+        ("d2", 2),
+    ]
 
 
 @pytest.mark.parametrize(
@@ -177,13 +229,14 @@ def test_mor_read_jobs_flat_in_delta_count(spark, tmp_path):
 def test_mor_partitioned_changes_between_jobs(spark, mor_table):
     """A two-version CDC read over two changed MOR children: the
     appended dirs fold in one typed scan (no footer job), and the
-    pre-state comes from one table probe."""
+    pre-state comes from one table probe, whose pair collect is one
+    job under the small-plan scope."""
     v1 = mor_table.current_version()
     mor_table.merge(_batch(spark, DAYS[:2], 2))
     v2 = mor_table.current_version()
     assert (
         _jobs(spark, lambda: mor_table.changes_between(spark, v1, v2).collect())
-        == 9
+        == 8
     )
     rows = mor_table.changes_between(spark, v1, v2).collect()
     assert {r._change_type for r in rows} == {"update_postimage"}

@@ -273,6 +273,31 @@ def test_resolve_deltas_matches_per_dir_fold(spark, tmp_path, typed):
     ]
 
 
+def test_resolve_deltas_key_filter_pushes_into_the_scan(spark, tmp_path):
+    """The file-to-position map is one folded literal, and a key filter
+    over the fold still reaches the parquet scan's pushed filters."""
+    schema = f"{_FOLD_DDL}, `__op` string"
+    paths = []
+    for i in range(3):
+        paths.append(str(tmp_path / "deltas" / f"d{i}"))
+        spark.createDataFrame(
+            [("a", k, i, f"a{k}/{i}", "u") for k in range(4)], schema
+        ).write.parquet(paths[-1])
+    fold = resolve_deltas(spark, ("p", "k"), paths, _FOLD_DDL)
+    hit = fold.filter((F.col("p") == "a") & (F.col("k") == 2))
+    qe = hit._jdf.queryExecution()
+    assert "from_json" not in qe.optimizedPlan().toString().lower()
+    pushed = [
+        ln
+        for ln in qe.executedPlan().toString().splitlines()
+        if "PushedFilters" in ln
+    ]
+    assert len(pushed) == 1 and "EqualTo(k,2)" in pushed[0], pushed
+    assert [tuple(r) for r in hit.select("k", "v", "payload").collect()] == [
+        (2, 2, "a2/2")
+    ]
+
+
 def test_validation_errors(spark, tmp_path):
     st = _seed(spark, tmp_path)
     with pytest.raises(ValueError, match="op must be 'u' or 'd'"):

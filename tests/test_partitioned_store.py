@@ -2018,6 +2018,78 @@ def test_mor_children_fence_crashed_writer(spark, tmp_path, monkeypatch):
     )
 
 
+def _assert_rejected(st, batch, match):
+    """``merge(batch)`` raises ``match`` with nothing changed: no child
+    file, no leftover staging dir, no new version."""
+    before = (_child_files(st.root), st.current_version())
+    with pytest.raises(ValueError, match=match):
+        st.merge(batch)
+    assert (_child_files(st.root), st.current_version()) == before
+    assert not [n for n in os.listdir(st.root) if n.startswith("_staging.")]
+
+
+def test_mor_merge_routes_from_the_staged_listing(spark, tmp_path):
+    """A merge-on-read merge routes from its staged write's dir
+    listing, which carries every routing law: an empty value stages
+    as NULL and is refused like one, a '|' inside a component of a
+    multi-column table is refused, an empty batch burns no version
+    (and cannot bootstrap a table), and values Spark Hive-escapes in
+    dir names route back exactly."""
+    st = _mor_store(tmp_path)
+    empty = _batch(spark, [("d1", 1)]).filter(F.col("k") < 0)
+    _assert_rejected(st, empty, "empty batch")
+    _assert_rejected(st, _batch(spark, [("d1", 1), ("", 2)]), "NULL")
+    st.merge(_batch(spark, [("d1", 1)]))
+    _assert_rejected(st, _batch(spark, [("d1", 2), ("", 2)]), "empty value")
+    before = _child_files(st.root)
+    assert st.merge(empty) == 0
+    assert _child_files(st.root) == before
+
+    mst = _mstore(tmp_path, child_store="mor")
+    mst.merge(_mbatch(spark, [("d1", "web", 1)]))
+    _assert_rejected(
+        mst,
+        _mbatch(spark, [("d1", "web", 2), ("d1", "we|b", 1)]),
+        "unsupported partition value",
+    )
+
+    odd = ["a b", "x%y", "k=v", "t:1", "é", "a|b"]
+    st.merge(_batch(spark, [(d, 1) for d in odd]))
+    st.merge(_batch(spark, [(d, 2) for d in odd]))
+    assert st.partitions() == sorted(["d1", *odd])
+    assert {e["dir"] for e in st._parts().values()} == {
+        f"p={d}" for d in ["d1", *odd]
+    }
+    assert _rows(st.read(spark)) == sorted(
+        [("d1", 1, 1, "d1/1")]
+        + [(d, k, 1, f"{d}/{k}") for d in odd for k in (1, 2)]
+    )
+
+
+def test_mor_merge_failed_check_creates_no_child(
+    spark, tmp_path, monkeypatch
+):
+    """A live child's failed fence or schema check stops a merge before
+    any fresh child's dir is created, so the retry puts the new
+    partition in its bare ``p=<value>`` dir, not a later epoch."""
+    from parquet_demo_spark.sources.mor_store import MergeOnReadStore
+
+    st = _mor_store(tmp_path)
+    st.merge(_batch(spark, [("d5", 1)]))
+    real = MergeOnReadStore._delta_schema
+
+    def failing(self, batch):
+        raise ValueError("simulated drift")
+
+    monkeypatch.setattr(MergeOnReadStore, "_delta_schema", failing)
+    batch = _batch(spark, [("d1", 1), ("d5", 2)])
+    _assert_rejected(st, batch, "simulated drift")
+    assert not os.path.exists(os.path.join(st.root, "p=d1"))
+    monkeypatch.setattr(MergeOnReadStore, "_delta_schema", real)
+    st.merge(batch)
+    assert st._parts()["d1"]["dir"] == "p=d1"
+
+
 def test_mor_children_cow_only_surfaces_raise(spark, tmp_path):
     st = _mor_store(tmp_path)
     st.merge(_batch(spark, [("d1", 1)]))
