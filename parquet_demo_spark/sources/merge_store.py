@@ -3590,7 +3590,13 @@ def anti_join_dv(
     dir of ``dv_dirs`` (each holds deleted PKs). Null-safe on the PK,
     matching the store's PK semantics everywhere else. ``key_ddl``
     is an explicit schema for the DV scan, which skips its
-    footer-inference job."""
+    footer-inference job.
+
+    Vectors are small by design (deleted PKs, not rows), so the
+    session's ``autoBroadcastJoinThreshold`` broadcasts them from the
+    DV files' listed sizes and the anti-join never shuffles the data
+    side; a DV union past the threshold plans a sort-merge join
+    rather than a forced broadcast."""
     if not dv_dirs:
         return df
     reader = spark.read.schema(key_ddl) if key_ddl else spark.read
@@ -3600,9 +3606,7 @@ def anti_join_dv(
         .dropDuplicates()
     )
     cond = [F.col(k).eqNullSafe(F.col(f"__dv_{k}")) for k in keys]
-    # vectors are small by design (deleted PKs, not rows): broadcast
-    # so the anti-join never shuffles the data side
-    return df.join(F.broadcast(dv), cond, "left_anti")
+    return df.join(dv, cond, "left_anti")
 
 
 def admission_watermarks(

@@ -69,6 +69,7 @@ drop-partition retention, Iceberg partition pruning).
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import shutil
 import tempfile
@@ -438,36 +439,22 @@ class PartitionedParquetMergeStore:
         version: int,
         extra_cols: tuple[str, ...] = (),
     ) -> DataFrame:
-        """Union child frames by name, aligned to the TABLE schema at
+        """Union frames by name, aligned to the TABLE schema at
         ``version`` with TYPED null backfill — the child store's
         ``_read_aligned`` law one level up.
 
-        After a widening merge into a subset of partitions, untouched
-        children still present their narrower schema; a plain
-        ``unionByName`` would raise on the mismatch (a successful write
-        that leaves the table unreadable — VERDICT r8 #3). Columns
-        missing from SOME children take their type from the children
-        that have them (Spark's allowMissingColumns); columns missing
-        from EVERY selected child (a pruned read over only
-        pre-evolution partitions) backfill from the manifest's recorded
-        type — never an untyped NullType, which the parquet writer
-        would reject downstream.
-
-        The union is a BALANCED tree, not a left-deep chain: each
-        ``unionByName`` analyzes its accumulated plan JVM-side, so a
-        chain over P children costs O(P²) driver analysis — measured as
-        the round-10 #7 fan-in knee (scripts/fanin_scale_check.py); the
-        tree is O(P log P), and the fused table scan
-        (:meth:`_fused_frame`) leaves only CDC's per-child diffs to
-        union."""
-        while len(dfs) > 1:
-            dfs = [
-                dfs[i].unionByName(dfs[i + 1], allowMissingColumns=True)
-                if i + 1 < len(dfs)
-                else dfs[i]
-                for i in range(0, len(dfs), 2)
-            ]
-        out = dfs[0]
+        Its callers are CDC, whose result unions at most four frames
+        (the dropped and the created snapshots, the log law and the
+        snapshot law, each already one plan over its children) across
+        the two endpoints' schemas, and the typed empty frame. Columns
+        missing from SOME frames take their type from the frames that
+        have them (Spark's allowMissingColumns); columns missing from
+        EVERY frame backfill from the manifest's recorded type — never
+        an untyped NullType, which the parquet writer would reject
+        downstream."""
+        out = functools.reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=True), dfs
+        )
         cols = self._columns_at(version) + list(extra_cols)
         missing = [c for c in cols if c not in out.columns]
         if not missing:
@@ -840,11 +827,13 @@ class PartitionedParquetMergeStore:
 
         Each component renders with Spark's ``cast('string')``, as in
         the copy-on-write routing collect. The value is NULL when any
-        component is NULL: Spark then writes the row to its default
-        partition dir, which :meth:`_stage` rejects."""
+        component is NULL or holds a NUL character (which Spark would
+        write into a dir name unescaped): Spark then writes the row to
+        its default partition dir, which :meth:`_stage` rejects."""
         comps = [F.col(c).cast("string") for c in self.partition_cols]
         # concat, unlike concat_ws, is NULL when any input is
         pval_col = F.concat(*[x for c in comps for x in (F.lit(_SEP), c)][1:])
+        pval_col = F.when(~pval_col.contains("\0"), pval_col)
         return df.withColumn("__pval", pval_col).repartition(F.col("__pval"))
 
     @contextlib.contextmanager
@@ -864,9 +853,9 @@ class PartitionedParquetMergeStore:
         {partition value: its staged dir}, one per value that received
         rows. The listing is the routing, so it is validated here,
         before any caller fences or adopts a child: a default-partition
-        dir (a NULL component, or an empty value, which Spark stages as
-        NULL) raises; each value is unescaped exactly (Spark Hive-
-        escapes special chars in dir names, and escapes '%' itself);
+        dir (a NULL component, or an empty or NUL-bearing value: both
+        stage as NULL) raises; each value is unescaped exactly (Spark
+        Hive-escapes special chars in dir names, and escapes '%' itself);
         and its components must be ``len(partition_cols)`` values that
         :func:`_composite` accepts."""
         (
@@ -882,7 +871,8 @@ class PartitionedParquetMergeStore:
         if _NULL_DIR in names:
             raise ValueError(
                 f"NULL in {self.partition_cols} cannot route to a "
-                "partition (an empty value stages as NULL too)"
+                "partition (an empty value, or one holding a NUL "
+                "character, stages as NULL too)"
             )
         slices = {}
         n = len(self.partition_cols)
@@ -1766,8 +1756,8 @@ class PartitionedParquetMergeStore:
     ) -> DataFrame:
         """The children ``lays`` (see :meth:`_child_layout`) as ONE
         plan in the table schema at ``version``: one multi-path base
-        scan minus one broadcast DV anti-join, overlaid by the
-        last-write-wins fold of every child's delta dirs, itself one
+        scan minus one DV anti-join, overlaid by the last-write-wins
+        fold of every child's delta dirs, itself one
         parquet scan and one window however many dirs the logs hold
         (:func:`~parquet_demo_spark.sources.mor_store.resolve_deltas`);
         a probe's ``keys`` add semi-joins on the full PK. Per-child
@@ -2088,34 +2078,40 @@ class PartitionedParquetMergeStore:
     ) -> DataFrame:
         """Net row changes between two global versions, Delta-CDF-tagged.
 
-        Per partition present in both AT THE SAME CHILD DIR: the
-        child's diff over its recorded versions (O(changed buckets) for
-        COW children, O(appended deltas) for MOR children), all such
-        children in ONE plan (:meth:`_snapshot_diff` /
-        :meth:`_log_diff`). A child runs its own ``changes_between``
-        where the span cannot be diffed that way: the table's columns
-        change inside it (an evolution), the child's bucket count does
-        (a rebucket), or its MOR log span is not all appends. A
-        partition only in ``v_to`` contributes its full snapshot as
-        inserts; one only in ``v_from`` — i.e. dropped, the retention
-        path — contributes its old snapshot as deletes; present in both
-        but at DIFFERENT dirs (dropped and later re-created — a new
-        epoch) nets the old snapshot as deletes plus the new one as
-        inserts. Each snapshot side is one :meth:`_fused_frame`.
-        Downstream consumers see retention as ordinary CDC delete rows
-        without the drop itself having touched any data file.
+        Every partition present in both AT THE SAME CHILD DIR, at two
+        different pins, is routed once, up front, to one of two laws,
+        each ONE plan over all of its children: a MOR child whose log
+        span is appends and compacts only, with its appended dirs on
+        disk, to the log law (:meth:`_log_diff`, O(appended deltas));
+        every other changed child (every COW child, and a MOR child
+        whose span holds a restore or runs backward) to the snapshot
+        law (:meth:`_snapshot_diff`, O(changed buckets) for a COW
+        child). Both scan with the table DDL at ``v_to`` and classify
+        on its columns, so an evolution inside the span needs no path
+        of its own. A partition only in ``v_to`` contributes its full
+        snapshot as inserts; one only in ``v_from`` — i.e. dropped,
+        the retention path — contributes its old snapshot as deletes;
+        present in both but at DIFFERENT dirs (dropped and later
+        re-created — a new epoch) nets the old snapshot as deletes plus
+        the new one as inserts. Each snapshot side is one
+        :meth:`_fused_frame`. Downstream consumers see retention as
+        ordinary CDC delete rows without the drop itself having touched
+        any data file.
         """
-        from parquet_demo_spark.sources.merge_store import changes_between
-
         p_from = self._parts(v_from)
         p_to = self._parts(v_to)
         snaps: dict[str, list] = {"delete": [], "insert": []}
-        changed: list = []
+        logged: list[str] = []
+        diffs: list[tuple] = []
         for pval in sorted(set(p_from) | set(p_to)):
             a, b = p_from.get(pval), p_to.get(pval)
             if a and b and a["dir"] == b["dir"]:
                 if a["version"] != b["version"]:
-                    changed.append(pval)
+                    span = self._span_paths(a, b)
+                    if span is None:
+                        diffs.append(self._diff_layouts(a, b))
+                    else:
+                        logged += span
                 continue
             if a:  # dropped, or re-created in a new epoch dir
                 snaps["delete"].append(self._child_layout(a))
@@ -2128,38 +2124,20 @@ class PartitionedParquetMergeStore:
             for v, tag in ((v_from, "delete"), (v_to, "insert"))
             if snaps[tag]
         ]
-        cols_from, cols_to = self._columns_at(v_from), self._columns_at(v_to)
-        # an evolution inside the span leaves pre-states the child's own
-        # diff backfills: only a span with one column set fuses
-        fusable = changed if cols_to == cols_from else []
-        diff = (
-            self._log_diff
-            if self.child_store == "mor"
-            else self._snapshot_diff
-        )
-        fused, slow = diff(
-            spark, p_from, p_to, fusable, v_from, v_to, include_preimages
-        )
-        if fused is not None:
-            outs.append(fused)
-        for pval in sorted(slow + [p for p in changed if p not in fusable]):
-            child = self._child(p_from[pval]["dir"])
-            vf = int(p_from[pval]["version"])
-            vt = int(p_to[pval]["version"])
+        if logged:
             outs.append(
-                child.changes_between(
-                    spark, vf, vt, include_preimages=include_preimages
-                )
-                if self.child_store == "mor"
-                else changes_between(
-                    child, spark, vf, vt,
-                    include_preimages=include_preimages,
+                self._log_diff(spark, v_from, v_to, logged, include_preimages)
+            )
+        if diffs:
+            outs.append(
+                self._snapshot_diff(
+                    spark, v_to, *zip(*diffs), include_preimages
                 )
             )
         # align to the WIDER endpoint's table schema (+ the CDC tag):
-        # across an evolution boundary, pre-evolution children's change
-        # rows lack the new columns — typed-null backfill, same law as
-        # read()
+        # across an evolution boundary, the narrower side's rows lack
+        # the new columns — typed-null backfill, same law as read()
+        cols_from, cols_to = self._columns_at(v_from), self._columns_at(v_to)
         wide = v_to if len(cols_to) >= len(cols_from) else v_from
         if not outs:
             return self._fused_frame(spark, wide, []).withColumn(
@@ -2169,153 +2147,127 @@ class PartitionedParquetMergeStore:
             spark, outs, wide, extra_cols=("_change_type",)
         )
 
+    def _span_paths(self, a: dict, b: dict) -> list[str] | None:
+        """The delta dirs a MOR child appended between its pins ``a``
+        and ``b`` (same dir), in log order, when the log law can diff
+        the span: :meth:`MergeOnReadStore._span_append_dirs` walks it
+        (appends and compacts only, forward) and every appended dir is
+        still on disk. ``None`` sends the child to the snapshot law,
+        as it does every COW child."""
+        if self.child_store != "mor":
+            return None
+        child = self._child(a["dir"])
+        try:
+            span = child._span_append_dirs(
+                int(a["version"]), int(b["version"])
+            )
+        except (ValueError, KeyError, FileNotFoundError):
+            return None
+        if span is None:
+            return None
+        paths = [os.path.join(child._deltas_root, d) for d in span]
+        return paths if all(os.path.isdir(p) for p in paths) else None
+
+    def _diff_layouts(self, a: dict, b: dict) -> tuple[dict, dict, dict]:
+        """One changed child's (old, new, presence) layouts for
+        :meth:`_snapshot_diff`, pinned at ``a`` and ``b`` (same dir).
+
+        A MOR child's sides are unrestricted: its old and new
+        snapshots, and presence is the new one (delta dirs are not
+        bucketed). A COW child's are restricted per side to the bucket
+        ids whose data dir or deletion vector differs between the two
+        pins, since an unchanged bucket cannot hold a change. Presence
+        reads the NEW pin at the OLD side's changed ids: a table child
+        keeps its bucket count (``_child`` refuses to open a child
+        whose head has another, and no table path rebuckets), so an
+        old row's key hashes to the same id at both pins."""
+        if self.child_store == "mor":
+            new = self._child_layout(b)
+            return self._child_layout(a), new, new
+        child = self._child(a["dir"])
+        vf, vt = int(a["version"]), int(b["version"])
+        paths_f, paths_t = child._bucket_paths(vf), child._bucket_paths(vt)
+        dv_f, dv_t = child._dv_entries(vf), child._dv_entries(vt)
+
+        def changed(mine: dict, other: dict) -> set:
+            return {
+                bid
+                for bid, p in mine.items()
+                if other.get(bid) != p or dv_f.get(bid) != dv_t.get(bid)
+            }
+
+        old_ids = changed(paths_f, paths_t)
+        return (
+            self._child_layout(a, buckets=old_ids),
+            self._child_layout(b, buckets=changed(paths_t, paths_f)),
+            self._child_layout(b, buckets=old_ids),
+        )
+
     def _snapshot_diff(
         self,
         spark: SparkSession,
-        p_from: dict,
-        p_to: dict,
-        pvals: list,
-        v_from: int,
         v_to: int,
+        olds: list,
+        news: list,
+        pres: list,
         include_preimages: bool,
-    ) -> tuple[DataFrame | None, list]:
-        """The COW diff law for the fusable changed children, as ONE
-        plan; returns ``(frame or None, children left to their own
-        diff)``.
+    ) -> DataFrame:
+        """The snapshot diff law for every changed child the log law
+        does not take, as ONE plan over the children's
+        :meth:`_diff_layouts`.
 
-        The per-child :func:`~parquet_demo_spark.sources.merge_store.
-        changes_between` plans two changed-bucket scans, a presence
-        read and a classification join PER CHILD, so a table CDC over
-        P changed partitions carries ~2-3P exchanges (q159 census: 30
-        jobs at 13 children). Here the OLD sides, NEW sides and
-        presence reads of all the children each scan once, minus
-        their DV anti-join, and one shared-law classification emits
-        the feed. Only manifest-changed bucket dirs are read, per side,
-        per child. Sound for the :meth:`_fused_frame` reason: every
-        join is keyed on the full PK. A child additionally needs an
-        unchanged bucket count inside the span (no rebucket — old keys
-        then hash to their own changed bucket ids under ``v_to``, so
-        the presence read needs no per-child collect); otherwise it is
-        returned for its own diff. Every scan takes the table's DDL at
-        ``v_to`` (the caller fuses only spans with one column set), as
-        in :meth:`_fused_frame`.
-        """
+        The old side, the new side and the presence read are each one
+        :meth:`_fused_frame` over every child's layouts (base scan
+        minus DV anti-join, overlaid by the delta fold), all three in
+        the table DDL at ``v_to``: a file written before an evolution
+        reads the new column as a typed NULL, as the child's own diff
+        backfills it. An old row whose key the presence read lacks is
+        a delete; one shared-law classification on ``v_to``'s columns
+        emits the feed. Per-child diffs would plan two scans, a
+        presence read and a classification join PER CHILD (q159
+        census: 30 jobs at 13 children). Sound for the
+        :meth:`_fused_frame` reason: every join is keyed on the full
+        PK. A side with nothing to scan is the typed empty frame, so a
+        version bump that rewrote no bucket emits nothing."""
         from parquet_demo_spark.sources.cdc import classify_changes
-        from parquet_demo_spark.sources.mor_store import schema_ddl
 
-        pk, cols = list(self.keys), self._columns_at(v_to)
-        types = self._column_types_at(v_to)
-        sides: dict[str, list[str]] = {
-            s: [] for s in ("new", "old", "pres", "dv_new", "dv_old", "dv_pres")
-        }
-        slow: list = []
-        for pval in pvals:
-            child = self._child(p_from[pval]["dir"])
-            vf = int(p_from[pval]["version"])
-            vt = int(p_to[pval]["version"])
-            nb = child._read_manifest(vf).get("num_buckets")
-            if nb != child._read_manifest(vt).get("num_buckets"):
-                slow.append(pval)
-                continue
-            old_paths = child._bucket_paths(vf)
-            new_paths = child._bucket_paths(vt)
-            dv_f, dv_t = child._dv_entries(vf), child._dv_entries(vt)
-            changed = {
-                bid
-                for bid, p in new_paths.items()
-                if old_paths.get(bid) != p or dv_f.get(bid) != dv_t.get(bid)
-            }
-            changed_old = {
-                bid
-                for bid, p in old_paths.items()
-                if new_paths.get(bid) != p or dv_f.get(bid) != dv_t.get(bid)
-            }
-            for side, rels, bids in (
-                ("new", new_paths, changed),
-                ("old", old_paths, changed_old),
-                ("pres", new_paths, changed_old),
-                ("dv_new", dv_t, changed),
-                ("dv_old", dv_f, changed_old),
-                ("dv_pres", dv_t, changed_old),
-            ):
-                sides[side] += [
-                    os.path.join(child.root, rel)
-                    for bid, rel in rels.items()
-                    if rel and bid in bids
-                ]
-        if not (sides["new"] or sides["old"]):
-            # version bumps with no bucket/DV change emit nothing —
-            # the same rows as the per-child limit(0)
-            return None, slow
-
-        row_ddl = schema_ddl(cols, types)
-        reader = spark.read.schema(row_ddl) if row_ddl else spark.read
-
-        def _scan(side: str) -> DataFrame | None:
-            if not sides[side]:
-                return None
-            df = reader.parquet(*sorted(set(sides[side]))).select(*cols)
-            return anti_join_dv(
-                spark, df, pk, sides[f"dv_{side}"], schema_ddl(pk, types)
-            )
-
-        new, old = _scan("new"), _scan("old")
-        if old is None:
-            return (
-                classify_changes(None, new, None, cols, pk, include_preimages),
-                slow,
-            )
-        presence = _scan("pres")
-        if presence is None:
-            gone = old
-        else:
-            gone = old.join(
-                presence.select(*[F.col(k).alias(f"__new_{k}") for k in pk]),
-                [F.col(k).eqNullSafe(F.col(f"__new_{k}")) for k in pk],
-                "left_anti",
-            )
-        if new is None:
-            return (
-                classify_changes(
-                    None, old.limit(0), gone, cols, pk, include_preimages
-                ),
-                slow,
-            )
-        return (
-            classify_changes(old, new, gone, cols, pk, include_preimages),
-            slow,
+        pk = list(self.keys)
+        old, new, presence = (
+            self._fused_frame(spark, v_to, lays) for lays in (olds, news, pres)
+        )
+        gone = old.join(
+            presence.select(*[F.col(k).alias(f"__new_{k}") for k in pk]),
+            [F.col(k).eqNullSafe(F.col(f"__new_{k}")) for k in pk],
+            "left_anti",
+        )
+        return classify_changes(
+            old, new, gone, self._columns_at(v_to), pk, include_preimages
         )
 
     def _log_diff(
         self,
         spark: SparkSession,
-        p_from: dict,
-        p_to: dict,
-        pvals: list,
         v_from: int,
         v_to: int,
+        paths: list[str],
         include_preimages: bool,
-    ) -> tuple[DataFrame | None, list]:
-        """The MOR diff law for the fusable changed children, as ONE
-        plan; returns ``(frame or None, children left to their own
-        diff)``.
+    ) -> DataFrame:
+        """The log diff law for the MOR children whose spans only
+        append, as ONE plan over their appended delta dirs ``paths``
+        (see :meth:`_span_paths`).
 
-        The per-child diff plans one delta fold, one bucket probe and
-        one classification join PER CHILD, and each child probe pays
-        its own bucket-id collect, so a table CDC over P changed
-        partitions costs ~4-5P jobs (q198 census: 60 jobs at 13
-        children). Here the span's appended delta dirs of all the
-        children fold at once, their pre-state resolves through ONE
-        table-level :meth:`probe` of ``v_from`` (a single pair collect
-        for the whole batch), and one shared-law classification emits
-        the feed. Sound for the :meth:`_fused_frame` reason: the fold
-        and the joins are keyed on the full PK. A child additionally
-        needs a fast-diffable span (:meth:`MergeOnReadStore.
-        _span_append_dirs` — appends and compacts only) whose appended
-        dirs are still on disk; otherwise it is returned for its own
-        diff. A span that appended nothing contributes no rows either
-        way. The table's DDL at ``v_to`` types the delta scan, which
-        skips its footer-inference job.
+        The dirs fold at once in the table DDL at ``v_to`` (one typed
+        scan, no footer job); their per-PK winners are the candidate
+        keys and their post-state, and the pre-state resolves through
+        ONE table-level :meth:`probe` of ``v_from`` (a single pair
+        collect for the whole batch), backfilled to ``v_to``'s columns
+        with typed NULLs across an evolution. One shared-law
+        classification on ``v_to``'s columns emits the feed. Per-child
+        diffs would plan one fold, one bucket probe and one
+        classification PER CHILD, each probe with its own collect
+        (q198 census: 60 jobs at 13 children). Sound for the
+        :meth:`_fused_frame` reason: the fold and the joins are keyed
+        on the full PK.
         """
         from parquet_demo_spark.sources.mor_store import (
             _OP,
@@ -2326,41 +2278,18 @@ class PartitionedParquetMergeStore:
 
         pk, cols = list(self.keys), self._columns_at(v_to)
         types = self._column_types_at(v_to)
-        paths: list[str] = []
-        slow: list = []
-        for pval in pvals:
-            child = self._child(p_from[pval]["dir"])
-            try:
-                span = child._span_append_dirs(
-                    int(p_from[pval]["version"]), int(p_to[pval]["version"])
-                )
-            except (ValueError, KeyError, FileNotFoundError):
-                span = None
-            span_paths = [
-                os.path.join(child._deltas_root, d) for d in span or []
-            ]
-            if span is None or not all(os.path.isdir(p) for p in span_paths):
-                slow.append(pval)
-            else:
-                paths += span_paths
-        if not paths:
-            return None, slow
         # the table probe's pair collect materializes the fold once;
         # classification reuses it (the child-level fast path's own
         # lazy-checkpoint law)
         latest = resolve_deltas(
             spark, pk, paths, schema_ddl(cols, types)
         ).localCheckpoint(eager=False)
-        pre = self.probe(spark, latest.select(*pk), version=v_from).select(
-            *cols
-        )
+        pre = self.probe(spark, latest.select(*pk), version=v_from)
+        pre = self._aligned_union(spark, [pre], v_to)
         post_u = latest.filter(F.col(_OP) == "u").select(*cols)
         post_d = latest.filter(F.col(_OP) == "d").select(*pk)
-        return (
-            MergeOnReadStore._cdc_emit(
-                pre, post_u, post_d, cols, pk, include_preimages
-            ),
-            slow,
+        return MergeOnReadStore._cdc_emit(
+            pre, post_u, post_d, cols, pk, include_preimages
         )
 
     # -- maintenance --------------------------------------------------------

@@ -1,12 +1,14 @@
 """Partitioned-store read fan-in at high partition counts (VERDICT r10 #7).
 
-``PartitionedParquetMergeStore.read()`` unions one DataFrame per live
-child. Each ``unionByName`` triggers JVM-side analysis of the
-accumulated plan, so a LEFT-DEEP union chain costs O(P²) driver
-analysis across P partitions — invisible at tens of children, a real
-knee at ~1k. This script measures plan-CONSTRUCTION time (the driver
-work: ``read()`` returning its analyzed DataFrame) and the full count
-action separately, at P = 64 / 256 / 1024.
+``PartitionedParquetMergeStore.read()`` builds ONE fused plan over every
+live child: a multi-path base scan, one deletion-vector anti-join and
+one delta fold, whatever the partition count. Its driver work is one
+manifest read per child, the scan's file listing and one analysis of
+that plan; BASELINE.md records the superlinear curve of the per-child
+``unionByName`` chain this replaced. This script measures
+plan-CONSTRUCTION time (the driver work: ``read()`` returning its
+analyzed DataFrame) and the full count action separately, at
+P = 64 / 256 / 1024.
 
 Usage: python scripts/fanin_scale_check.py [--parts N ...]
 Default: 64 256 1024. Record the knee (or the fix's flat curve) in

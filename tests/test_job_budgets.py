@@ -331,3 +331,56 @@ def test_cow_evolved_child_reads_and_probes_fused(spark, tmp_path):
         (9, 7),
     ]
     assert [r.k for r in got["plain"]] == [1]
+
+
+def test_cow_cdc_across_an_evolution_jobs_flat_in_children(spark, tmp_path):
+    """A copy-on-write table CDC whose span holds an evolution diffs
+    every changed child in one snapshot-law plan, in the table DDL at
+    its end: 1 and 4 changed children launch the same jobs."""
+    counts = {}
+    for n in (1, 4):
+        table = _table(spark, tmp_path / f"t{n}")
+        v0 = table.current_version()
+        table.merge(
+            _batch(spark, DAYS[:n], 2).withColumn(
+                "extra", F.lit(7).cast("long")
+            ),
+            allow_schema_evolution=True,
+        )
+        rows = []
+        counts[n] = _jobs(
+            spark,
+            lambda: rows.extend(
+                table.changes_between(spark, v0, v0 + 1).collect()
+            ),
+        )
+        assert sorted((r.day, r.k, r.v, r.extra) for r in rows) == [
+            (d, k, 2, 7) for d in DAYS[:n] for k in range(5)
+        ]
+        assert {r._change_type for r in rows} == {"update_postimage"}
+    assert counts[1] == counts[4], counts
+
+
+def test_mor_cdc_across_a_restore_jobs_flat_in_children(spark, tmp_path):
+    """A merge-on-read table CDC across a table restore, whose child
+    spans run backward in their logs, diffs every changed child in one
+    snapshot-law plan: 1 and 4 changed children launch the same
+    jobs."""
+    counts = {}
+    for n in (1, 4):
+        table = _table(spark, tmp_path / f"t{n}", "mor")
+        table.merge(_batch(spark, DAYS[:n], 2))
+        v1 = table.current_version()
+        table.restore(v1 - 1)
+        rows = []
+        counts[n] = _jobs(
+            spark,
+            lambda: rows.extend(
+                table.changes_between(spark, v1, v1 + 1).collect()
+            ),
+        )
+        assert sorted((r.day, r.k, r.v) for r in rows) == [
+            (d, k, 1) for d in DAYS[:n] for k in range(5)
+        ]
+        assert {r._change_type for r in rows} == {"update_postimage"}
+    assert counts[1] == counts[4], counts

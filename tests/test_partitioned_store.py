@@ -95,7 +95,8 @@ def _per_child_probe(spark, st, keys):
 def _per_child_cdc(spark, st, v_from, v_to, include_preimages):
     """The table change feed composed from the children's own public
     ``changes_between`` (same dir at both ends) and snapshot reads
-    (dropped, created and re-created partitions)."""
+    (dropped, created and re-created partitions), in the table schema
+    of the endpoint with more columns, as the table aligns its feed."""
     from parquet_demo_spark.sources.merge_store import changes_between
 
     p_from, p_to = st._parts(v_from), st._parts(v_to)
@@ -124,7 +125,8 @@ def _per_child_cdc(spark, st, v_from, v_to, include_preimages):
                     .read(spark, version=e["version"])
                     .withColumn("_change_type", F.lit(tag))
                 )
-    return _union_as_table(st, v_to, outs, extra=("_change_type",))
+    wide = max((v_to, v_from), key=lambda v: len(st._columns_at(v)))
+    return _union_as_table(st, wide, outs, extra=("_change_type",))
 
 
 def _row_scans(df) -> tuple[int, int]:
@@ -2041,6 +2043,9 @@ def test_mor_merge_routes_from_the_staged_listing(spark, tmp_path):
     _assert_rejected(st, _batch(spark, [("d1", 1), ("", 2)]), "NULL")
     st.merge(_batch(spark, [("d1", 1)]))
     _assert_rejected(st, _batch(spark, [("d1", 2), ("", 2)]), "empty value")
+    _assert_rejected(
+        st, _batch(spark, [("d1", 2), ("a\x00b", 2)]), "NUL character"
+    )
     before = _child_files(st.root)
     assert st.merge(empty) == 0
     assert _child_files(st.root) == before
@@ -2477,8 +2482,10 @@ def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
     """The fused table-level MOR CDC (one delta fold + one table probe
     + one classification — _log_diff, r16) emits exactly the
     per-child diffs' rows for every span shape: multi-commit spans,
-    spans crossing a compact, preimages on and off, and a span that
-    includes a partition drop (handled outside the fusion)."""
+    spans crossing a compact, preimages on and off, a span that
+    includes a partition drop (handled outside the fusion), and the
+    spans the log law cannot walk, which take the fused snapshot law:
+    one holding a table restore, and a backward one."""
     st = _mor_store(tmp_path)
 
     def cdc_rows(v_from, v_to, pre):
@@ -2539,6 +2546,12 @@ def test_mor_fused_cdc_matches_per_child(spark, tmp_path):
     st.drop_partition("d2")
     check(0, 5, "span including a partition drop")
     check(4, 5, "drop-only span")
+
+    # v6 restores v2: d2 returns in its old dir, and every same-dir
+    # child's span runs backward in its log (the snapshot law)
+    st.restore(2)
+    check(4, 6, "span holding a table restore")
+    check(4, 0, "backward span")
 
 
 def test_mor_fused_probe_matches_per_child(spark, tmp_path):
@@ -2656,8 +2669,9 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
     exactly the per-child snapshot diffs' rows for every span shape:
     merges, DV deletes, preimages on/off, spans including a partition
     drop (its snapshot a fused frame of its own), a span with an
-    evolution (per-child diffs) and spans after one (fused, over
-    evolved and narrow children)."""
+    evolution, spans after one (over evolved and narrow children) and
+    a backward span across one, all fused in the table DDL at the
+    span's end."""
     st = _store(tmp_path)
 
     def cdc_rows(v_from, v_to, pre):
@@ -2703,9 +2717,9 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
     st.drop_partition("d2")
     check(0, 3, "span including a partition drop")
 
-    # v4 widens d1 (an evolution inside the span: per-child diffs);
-    # v5 then writes the wide schema into d1 and the narrow d3 (one
-    # column set across the span: fused, pre-states read typed NULLs)
+    # v4 widens d1 (an evolution inside the span); v5 then writes the
+    # wide schema into d1 and the narrow d3 (pre-states read typed
+    # NULLs)
     st.merge(
         spark.createDataFrame(
             [Row(day="d1", k=1, v=3, payload="d1/1c", extra=7)]
@@ -2726,3 +2740,4 @@ def test_cow_fused_cdc_matches_per_child(spark, tmp_path):
     check(3, 4, "span with an evolution")
     check(4, 5, "span after an evolution")
     check(0, 5, "span across drop and evolution")
+    check(5, 3, "backward span across an evolution")

@@ -510,3 +510,41 @@ def test_q200_apply_leg_is_map_side_and_train_loop_guarded(
     assert plan.count("Exchange (") == 2, plan
     with pytest.raises(ValueError, match="per merge step"):
         _q196_mine(spark, sf_dir, _Q196_MAX_STEPS + 1)
+
+
+def test_dv_anti_join_broadcast_is_sized_by_the_session(spark, tmp_path):
+    """A deletion-vector (DV) anti-join carries no broadcast hint: a
+    small DV plans a broadcast from its listed file size, and under a
+    threshold below that size no BroadcastExchange sits over the DV
+    scan, with the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_demo_spark.sources.merge_store import anti_join_dv
+
+    dv_dir = tmp_path / "dv"
+    dv_dir.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([1, 3, 5], pa.int64())}),
+        str(dv_dir / "part-0.parquet"),
+    )
+
+    def kept():
+        df = anti_join_dv(
+            spark, spark.range(8).withColumnRenamed("id", "k"), ["k"],
+            [str(dv_dir)], "k bigint",
+        )
+        return physical_plan(df), sorted(r.k for r in df.collect())
+
+    plan, rows = kept()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1")
+        low_plan, low_rows = kept()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in low_plan, low_plan
+    assert "SortMergeJoin" in low_plan, low_plan
+    assert rows == low_rows == [0, 2, 4, 6, 7]
