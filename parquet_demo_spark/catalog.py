@@ -38,9 +38,64 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+# Session confs that change what parquet schema inference returns for the
+# same files (``mergeSchema`` decides which footers it reads).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (absolute path, inference confs) -> (files stamp, inferred schema); one
+# entry per path and conf set, so a rewritten fixture replaces its entry
+_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _files_stamp(path: str) -> tuple:
+    """``(file, size, mtime_ns)`` of every file under ``path`` (or of
+    ``path`` itself); empty when nothing is there to stat."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.join(d, f), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one fixture table."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Lazy parquet scan of one fixture table.
+
+    Schema inference reads parquet footers in a Spark job (about 0.1 s);
+    a scan given its schema launches none. So the table's schema is
+    inferred once and then served from a cache, whose key is the table's
+    absolute path, the ``(file, size, mtime_ns)`` of every file under it,
+    and the session confs that change parquet inference (``nanosAsLong``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``inferTimestampNTZ`` and
+    ``mergeSchema``). A hit is exact: inference is a function of those
+    files' footers and those confs, so it returns what a fresh inference
+    would, and Spark applies the same ``asNullable`` to a given schema as
+    to an inferred one. This holds as long as a file that changes also
+    changes its size or mtime. The stamp is taken before inferring, so a
+    file rewritten during inference leaves a stale stamp, which only
+    makes the next call infer again. A path with no local file to stat
+    (missing, or not on the local file system) is inferred every time.
+    """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    key = (os.path.abspath(path), confs)
+    stamp = _files_stamp(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)  # infers: one footer job
+        if stamp:
+            _SCHEMAS[key] = (stamp, df.schema)
     for col in _NANOS_TS_COLS.get(name, ()):
         if isinstance(df.schema[col].dataType, T.LongType):
             # integral `div`, NOT `/1000` — epoch-ns (~1.7e18) exceeds

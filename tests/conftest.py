@@ -11,23 +11,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 
 
-def _test_driver_heap() -> str:
-    """Half the machine's memory, as the test JVM's heap.
-
-    ``get_spark`` defaults the driver heap to 48g. On a smaller machine
-    G1 keeps growing a heap that large under the suite's allocation
-    rate until the kernel kills the JVM, although the suite's live set
-    stays near 2 GB; every test after that point then fails. Sizing
-    the heap from the machine makes G1 collect instead. Subprocess
-    sessions (CLI and bench tests) inherit the same bound.
-    """
-    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
-    return f"{max(2, min(48, total // 2**31))}g"
-
-
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _test_driver_heap())
-
-
 @pytest.fixture(scope="session")
 def spark():
     from parquet_demo_spark.session import get_spark

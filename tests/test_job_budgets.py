@@ -384,3 +384,103 @@ def test_mor_cdc_across_a_restore_jobs_flat_in_children(spark, tmp_path):
         ]
         assert {r._change_type for r in rows} == {"update_postimage"}
     assert counts[1] == counts[4], counts
+
+
+def _write_events(path, n: int, extra: str | None = None) -> None:
+    """A fixture ``events`` table whose ``ts`` is parquet timestamp[ns],
+    the column ``catalog.load`` converts; ``extra`` adds a column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "ts": pa.array(
+            [1_700_000_000_000_000_123 + i * 10**9 for i in range(n)],
+            pa.timestamp("ns"),
+        ),
+        "user_id": pa.array(range(n), pa.int32()),
+    }
+    if extra is not None:
+        cols[extra] = pa.array([f"{extra}{i}" for i in range(n)])
+    pq.write_table(pa.table(cols), str(path / "events.parquet"))
+
+
+def test_second_catalog_load_launches_no_job(spark, tmp_path):
+    """``catalog.load`` infers a fixture's schema once: a second load
+    of the same files launches no footer-inference job and gives the
+    schema and rows of the first."""
+    from pyspark.sql.types import TimestampType
+
+    from parquet_demo_spark.catalog import load
+
+    _write_events(tmp_path, 5)
+    sf, first, again = str(tmp_path), [], []
+    assert _jobs(spark, lambda: first.append(load(spark, sf, "events"))) == 1
+    assert _jobs(spark, lambda: again.append(load(spark, sf, "events"))) == 0
+    assert again[0].schema == first[0].schema
+    assert isinstance(again[0].schema["ts"].dataType, TimestampType)
+    assert sorted(again[0].collect()) == sorted(first[0].collect())
+
+
+def test_catalog_load_infers_a_rewritten_fixture_again(spark, tmp_path):
+    """A fixture rewritten in place with another column set changes its
+    files stamp, so its schema is inferred again, never served stale."""
+    from parquet_demo_spark.catalog import load
+
+    _write_events(tmp_path, 5)
+    assert load(spark, str(tmp_path), "events").columns == ["ts", "user_id"]
+    _write_events(tmp_path, 3, extra="tag")
+    df = load(spark, str(tmp_path), "events")
+    assert df.columns == ["ts", "user_id", "tag"]
+    assert sorted(r.tag for r in df.collect()) == ["tag0", "tag1", "tag2"]
+
+
+# the perfbench ``analytics`` mix: one read-only query per operator module
+ANALYTICS_MIX = (
+    "q15_topk_global",
+    "q115_forecast_revenue",
+    "q138_heavy_hitters",
+    "q33_asof_join",
+    "q44_simhash",
+    "q88_curation_funnel",
+    "q22_json_funcs",
+    "q27_cosine_topk",
+    "q40_stats_aggregates",
+    "q25_text_top_tokens",
+    "q108_map_in_arrow",
+    "q34_window_distribution",
+    "q95_salted_agg",
+    "q188_hashed_tf_retrieval",
+)
+
+
+def test_second_analytics_pass_compiles_no_class(spark, sf_smoke):
+    """The session's generated-code cache holds every class one pass of
+    the analytics mix compiles, so a second pass compiles none (under
+    Spark's default cap of 100 entries it compiles about 178 again).
+
+    Whole-stage class names carry the codegen stage id, which adaptive
+    execution hands out in the order concurrent stages finish, so a
+    query can generate a renamed copy of a cached class on any run
+    (q188 in this mix; CHANGES.md lists the per-run recompilers). The
+    test turns that naming off to count only what the cap decides:
+    classes evicted between passes."""
+    from parquet_demo_spark.registry import all_queries
+
+    reg = all_queries()
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass() -> int:
+        before = int(metrics.METRIC_COMPILATION_TIME().getCount())
+        for name in ANALYTICS_MIX:
+            reg[name].spark(spark, sf_smoke).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return int(metrics.METRIC_COMPILATION_TIME().getCount()) - before
+
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    try:
+        assert run_pass() > 0
+        assert run_pass() == 0
+    finally:
+        spark.conf.unset("spark.sql.codegen.useIdInClassName")
