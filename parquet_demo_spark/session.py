@@ -45,6 +45,8 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
 CODEGEN_CACHE_ENTRIES = 4096
+# the broadcast-join bound; tuning's small-plan threshold defaults to it
+BROADCAST_BYTES = 64 * 1024 * 1024
 
 
 def driver_memory(total_bytes: int | None = None) -> str:
@@ -91,7 +93,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_BYTES))
         # --- Python exchange is Arrow-batched, never row-pickled ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -593,23 +593,26 @@ class ParquetMergeStore:
                 name = col.path_in_schema
                 if name in dropped:
                     continue
-                st = col.statistics
-                if (
-                    st is None
-                    or not st.has_min_max
-                    or not isinstance(st.min, (int, float, str, bool))
-                    or not isinstance(st.max, (int, float, str, bool))
-                ):
+                try:
+                    st = col.statistics
+                    lo, hi = (
+                        (st.min, st.max)
+                        if st is not None and st.has_min_max
+                        else (None, None)
+                    )
+                except NotImplementedError:
+                    # pyarrow cannot decode some footer stats (a
+                    # decimal stored as INT32/INT64): no stats
+                    lo = hi = None
+                if not isinstance(
+                    lo, (int, float, str, bool)
+                ) or not isinstance(hi, (int, float, str, bool)):
                     dropped.add(name)
                     mins.pop(name, None)
                     maxs.pop(name, None)
                     continue
-                mins[name] = (
-                    st.min if name not in mins else min(mins[name], st.min)
-                )
-                maxs[name] = (
-                    st.max if name not in maxs else max(maxs[name], st.max)
-                )
+                mins[name] = lo if name not in mins else min(mins[name], lo)
+                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
         return {name: [mins[name], maxs[name]] for name in mins}
 
     def _dir_file_stats(self, rel_dir: str) -> dict[str, dict]:

@@ -74,7 +74,8 @@ from parquet_demo_spark.sources.merge_store import (
     apply_where_ranges,
 )
 from parquet_demo_spark.sources.mongo import collapse_for_upsert
-from parquet_demo_spark.tuning import plan_scope, scoped_store_op
+from parquet_demo_spark.sources.staging import arrow_writes, write_staged
+from parquet_demo_spark.tuning import plan_scope, scoped_store_op, small_op
 
 _OP = "__op"
 _SEQ = "__seq"
@@ -338,6 +339,14 @@ class MergeOnReadStore:
         """Append one maintenance batch to the delta log: O(batch)
         cost, no bucket read or rewrite at ANY base size.
 
+        The delta dir is a staging write (:func:`staging.write_staged`):
+        when this commit's small-plan scope pinned and every column
+        type reads back exactly (:func:`staging.arrow_writes`), the
+        collapsed batch is collected with ``toArrow()`` and written as
+        one file by pyarrow, else Spark writes it. A streaming
+        micro-batch session skips the scope's estimate, so an applier's
+        commit always writes through Spark.
+
         ``write_change_feed=True`` additionally materializes this
         commit's Delta-CDF rows (insert / update_pre+post / delete,
         pre-images included) under ``changes/`` and records the ref in
@@ -393,7 +402,7 @@ class MergeOnReadStore:
                     f"delta op must be 'u' or 'd', got {bad[0][_OP]!r}"
                 )
         d = self._new_delta_dir()
-        batch.write.mode("overwrite").parquet(d)
+        write_staged(batch, d, arrow_writes(batch, small_op()))
         return self._append_delta(
             batch.sparkSession, d, record, write_change_feed
         )["seq"]

@@ -73,7 +73,6 @@ import functools
 import os
 import shutil
 import tempfile
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,14 +86,13 @@ from parquet_demo_spark.sources.merge_store import (
     apply_where_ranges,
     stats_rule_out,
 )
-from parquet_demo_spark.tuning import scoped_store_op
+from parquet_demo_spark.sources.staging import arrow_writes, write_staged
+from parquet_demo_spark.tuning import op_pool, scoped_store_op, small_op
 
 
 # separator between the components of a composite (multi-column)
 # partition value in manifest keys and child dir names: p=2024-01-05|web
 _SEP = "|"
-# the dir partitionBy writes a NULL (or empty-string) value to
-_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _pdir(val, multi: bool = False) -> str:
@@ -115,16 +113,6 @@ def _composite(vals) -> str:
     """Composite manifest key / dir tag for a value tuple."""
     vals = list(vals)
     return _SEP.join(_pdir(v, multi=len(vals) > 1) for v in vals)
-
-
-def _unescape(name: str) -> str:
-    """Reverse Spark's Hive-style %XX dir-name escaping (partitionBy
-    escapes '%' itself, so one unescape pass is exact)."""
-    import re
-
-    return re.sub(
-        "%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
-    )
 
 
 class PartitionedParquetMergeStore:
@@ -684,15 +672,18 @@ class PartitionedParquetMergeStore:
 
         Merge-on-read children stage once and adopt per child: the
         whole batch, collapsed last-write-wins with ``__op = 'u'``, is
-        written in ONE Spark job ``partitionBy`` partition value into a
-        staging dir under the table root; each staged dir is renamed
-        into its child's ``deltas/`` and adopted with a metadata-only
-        log-entry commit. The staged write IS the routing: its dir
-        listing names the touched partitions, carries the NULL guard
-        and makes an empty batch a no-op, so a merge is one job at any
-        number of touched partitions. Every touched child is fenced to
-        the global pin and checks the batch against its schema record
-        after the write is staged and before any child adopts.
+        written in ONE Spark job, one dir per partition value, into a
+        staging dir under the table root (:meth:`_stage`: collected to
+        the driver and written by pyarrow when this merge's small-plan
+        scope pinned, else a ``partitionBy`` Spark write); each staged
+        dir is renamed into its child's ``deltas/`` and adopted with a
+        metadata-only log-entry commit. The staged write IS the
+        routing: its partition values name the touched partitions,
+        carry the NULL guard and make an empty batch a no-op, so a
+        merge is one job at any number of touched partitions. Every
+        touched child is fenced to the global pin and checks the batch
+        against its schema record after the write is staged and before
+        any child adopts.
 
         Copy-on-write children route with one distinct collect of
         (partition value, bucket) pairs: each child's merge needs its
@@ -783,15 +774,17 @@ class PartitionedParquetMergeStore:
 
             # the staged write IS the delta write: 'u' ops, collapsed
             # last-write-wins on (__pval, *keys) — the PK collapse, as
-            # every partition column is a PK column — so the __pval
-            # shuffle already satisfies the window: one shuffle
+            # every partition column is a PK column — so a Spark-written
+            # stage's __pval shuffle already satisfies the window: one
+            # shuffle
+            arrow = arrow_writes(upserts, small_op())
             staged = collapse_for_upsert(
-                self._by_pval(upserts.withColumn(_OP, F.lit("u"))),
+                self._by_pval(upserts.withColumn(_OP, F.lit("u")), arrow),
                 ("__pval", *self.keys),
                 self.version_cols,
             )
             results = self._stage_and_adopt(
-                staged, upserts, parts, write_change_feed
+                staged, upserts, parts, write_change_feed, arrow
             )
         else:
             results = self._cow_merge(
@@ -820,21 +813,24 @@ class PartitionedParquetMergeStore:
             column_types=g_types,
         )
 
-    def _by_pval(self, df: DataFrame) -> DataFrame:
-        """``df`` plus its composite partition value ``__pval``,
-        shuffled on it, so each value's rows sit in one task and its
-        staged dir gets one file.
+    def _by_pval(self, df: DataFrame, arrow: bool) -> DataFrame:
+        """``df`` plus its composite partition value ``__pval``, for
+        :meth:`_stage` with the same ``arrow``. The Spark writer
+        (``arrow`` False) needs the frame shuffled on it, so each
+        value's rows sit in one task and its staged dir gets one file;
+        the Arrow writer groups on the driver and needs no shuffle.
 
         Each component renders with Spark's ``cast('string')``, as in
         the copy-on-write routing collect. The value is NULL when any
         component is NULL or holds a NUL character (which Spark would
-        write into a dir name unescaped): Spark then writes the row to
-        its default partition dir, which :meth:`_stage` rejects."""
+        write into a dir name unescaped), and :meth:`_stage` rejects
+        it."""
         comps = [F.col(c).cast("string") for c in self.partition_cols]
         # concat, unlike concat_ws, is NULL when any input is
         pval_col = F.concat(*[x for c in comps for x in (F.lit(_SEP), c)][1:])
         pval_col = F.when(~pval_col.contains("\0"), pval_col)
-        return df.withColumn("__pval", pval_col).repartition(F.col("__pval"))
+        df = df.withColumn("__pval", pval_col)
+        return df if arrow else df.repartition(F.col("__pval"))
 
     @contextlib.contextmanager
     def _staging(self):
@@ -847,28 +843,25 @@ class PartitionedParquetMergeStore:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
-    def _stage(self, df: DataFrame, staging: str) -> dict[str, str]:
-        """Write ``df`` (shaped by :meth:`_by_pval`) ``partitionBy
-        ("__pval")`` into ``staging`` in ONE Spark job and return
-        {partition value: its staged dir}, one per value that received
-        rows. The listing is the routing, so it is validated here,
-        before any caller fences or adopts a child: a default-partition
-        dir (a NULL component, or an empty or NUL-bearing value: both
-        stage as NULL) raises; each value is unescaped exactly (Spark
-        Hive-escapes special chars in dir names, and escapes '%' itself);
-        and its components must be ``len(partition_cols)`` values that
-        :func:`_composite` accepts."""
-        (
-            df.write.mode("overwrite")  # mkdtemp pre-created the dir
-            .partitionBy("__pval")
-            .parquet(staging)
-        )
-        names = [
-            d.split("=", 1)[1]
-            for d in os.listdir(staging)
-            if d.startswith("__pval=")
-        ]
-        if _NULL_DIR in names:
+    def _stage(
+        self, df: DataFrame, staging: str, arrow: bool
+    ) -> dict[str, str]:
+        """Write ``df`` (shaped by :meth:`_by_pval` with the same
+        ``arrow``) into ``staging`` in ONE Spark job, one dir and one
+        file per ``__pval`` value, and return {partition value: its
+        staged dir}, one per value that received rows.
+        ``arrow`` (:func:`staging.arrow_writes` of the operation's
+        :func:`tuning.small_op`) picks the writer
+        (:func:`staging.write_staged`): a driver-side ``toArrow``
+        collect written by pyarrow, or a ``partitionBy("__pval")``
+        Spark write. The values are the routing, so they are validated
+        here, before any caller fences or adopts a child: a NULL value
+        (a NULL component, or an empty or NUL-bearing value: both stage
+        as NULL) raises, and each value's components must be
+        ``len(partition_cols)`` values that :func:`_composite`
+        accepts."""
+        groups = write_staged(df, staging, arrow, by="__pval")
+        if None in groups:
             raise ValueError(
                 f"NULL in {self.partition_cols} cannot route to a "
                 "partition (an empty value, or one holding a NUL "
@@ -876,17 +869,14 @@ class PartitionedParquetMergeStore:
             )
         slices = {}
         n = len(self.partition_cols)
-        for name in names:
-            pval = _unescape(name)
+        for pval, d in groups.items():
             comps = pval.split(_SEP) if n > 1 else [pval]
             if len(comps) != n:
                 raise ValueError(
                     f"unsupported partition value: {pval!r} has "
                     f"{len(comps)} {_SEP!r}-separated components, not {n}"
                 )
-            slices[_composite(comps)] = os.path.join(
-                staging, f"__pval={name}"
-            )
+            slices[_composite(comps)] = d
         return slices
 
     def _child_dir(self, parts: dict, pval: str) -> str:
@@ -922,10 +912,11 @@ class PartitionedParquetMergeStore:
 
         A single-partition batch (the streaming-ingest common case) IS
         its slice. Otherwise ONE Spark job stages the whole batch
-        (VERDICT r7 #1's composite-write design) ``partitionBy
-        (__pval)``, so each child's merge then reads ITS one-file slice
-        — a 1-task scan — instead of re-filtering the full batch.
-        Without this, a 50-partition backfill pays 50 x (batch
+        (VERDICT r7 #1's composite-write design) one dir per partition
+        value (:meth:`_stage`), so each child's merge then reads ITS
+        one-file slice — a 1-task scan under the batch's own schema, so
+        no footer-inference job — instead of re-filtering the full
+        batch. Without this, a 50-partition backfill pays 50 x (batch
         partitions) tasks per stage; with it, the batch is scanned
         once."""
         pexprs = [
@@ -971,7 +962,10 @@ class PartitionedParquetMergeStore:
             )
             return {only: self._cow_entry(dirnames[only], child, v)}
         with self._staging() as staging:
-            slices = self._stage(self._by_pval(upserts), staging)
+            arrow = arrow_writes(upserts, small_op())
+            slices = self._stage(
+                self._by_pval(upserts, arrow), staging, arrow
+            )
             if sorted(slices) != pvals:
                 raise ValueError(
                     f"staged partitions {sorted(slices)} differ from the "
@@ -982,9 +976,7 @@ class PartitionedParquetMergeStore:
             def _prepare_one(pval: str):
                 child = _open(pval)
                 pend = child._merge_prepare(
-                    spark.read.parquet(slices[pval]).select(
-                        *upserts.columns
-                    ),
+                    spark.read.schema(upserts.schema).parquet(slices[pval]),
                     touched=sorted(touched[pval]),
                     **merge_kw,
                 )
@@ -1003,8 +995,8 @@ class PartitionedParquetMergeStore:
             # restored-over by the next write through _pinned_child —
             # so propagating the first error is crash-consistent either
             # way.
-            with ThreadPoolExecutor(
-                max_workers=min(self.write_concurrency, len(pvals))
+            with op_pool(
+                spark, min(self.write_concurrency, len(pvals))
             ) as pool:
                 futs = {p: pool.submit(_prepare_one, p) for p in pvals}
                 prepared = {p: f.result() for p, f in futs.items()}
@@ -1028,8 +1020,8 @@ class PartitionedParquetMergeStore:
 
             # commits are metadata-only (manifest write + footer-stat
             # walk); the pool still helps when W is large
-            with ThreadPoolExecutor(
-                max_workers=min(self.write_concurrency, len(pvals))
+            with op_pool(
+                spark, min(self.write_concurrency, len(pvals))
             ) as pool:
                 futs = {p: pool.submit(_commit_one, p) for p in pvals}
                 return {p: f.result() for p, f in futs.items()}
@@ -1040,18 +1032,20 @@ class PartitionedParquetMergeStore:
         batch: DataFrame,
         parts: dict,
         write_change_feed: bool,
+        arrow: bool,
     ) -> dict[str, dict]:
         """The merge-on-read stage-and-adopt law. ONE Spark job writes
         ``staged`` (collapsed rows of ``batch`` with ``__op``, shaped
-        by :meth:`_by_pval`) into a staging dir, and its validated
-        listing (:meth:`_stage`) picks the children: each staged
-        ``__pval=`` dir is one child's whole delta. Every such child is
-        then fenced to the global pin (``_pinned_child``) and checks
-        ``batch`` against its delta schema record; only when all pass
-        is each dir renamed into its child's ``deltas/`` under a fresh
-        unique name (same filesystem, so the rename is atomic) and
-        adopted with a metadata-only log-entry commit. A batch with no
-        rows stages no dir and adopts nothing.
+        by :meth:`_by_pval` with the same ``arrow``) into a staging
+        dir, by the writer ``arrow`` picks (:meth:`_stage`), and its
+        validated partition values pick the children: each staged dir
+        is one child's whole delta. Every such child is then fenced to
+        the global pin (``_pinned_child``) and checks ``batch`` against
+        its delta schema record; only when all pass is each dir renamed
+        into its child's ``deltas/`` under a fresh unique name (same
+        filesystem, so the rename is atomic) and adopted with a
+        metadata-only log-entry commit. A batch with no rows stages no
+        dir and adopts nothing.
 
         Crash law: a staged or renamed dir is invisible until a child
         log entry references it (the child's vacuum reclaims an
@@ -1061,7 +1055,7 @@ class PartitionedParquetMergeStore:
         either way. Returns the new manifest entry per adopted
         partition."""
         with self._staging() as staging:
-            slices = self._stage(staged, staging)
+            slices = self._stage(staged, staging, arrow)
             dirs = {p: self._child_dir(parts, p) for p in slices}
             # live children first: a fresh child's dir is created only
             # once no fence or schema check is left to fail
@@ -1132,11 +1126,13 @@ class PartitionedParquetMergeStore:
             matching = self.read(
                 spark, version=cur, partitions=partitions
             ).filter(condition)
+            arrow = arrow_writes(matching, small_op())
             results = self._stage_and_adopt(
-                self._by_pval(matching.withColumn(_OP, F.lit("d"))),
+                self._by_pval(matching.withColumn(_OP, F.lit("d")), arrow),
                 matching,
                 parts,
                 write_change_feed,
+                arrow,
             )
             parts.update(results)
             touched = sorted(results)
@@ -1154,8 +1150,8 @@ class PartitionedParquetMergeStore:
                     return None
                 return self._cow_entry(parts[pval]["dir"], child, v)
 
-            with ThreadPoolExecutor(
-                max_workers=min(self.write_concurrency, len(in_scope))
+            with op_pool(
+                spark, min(self.write_concurrency, len(in_scope))
             ) as pool:
                 futs = {p: pool.submit(_delete_one, p) for p in in_scope}
                 for pval in in_scope:
@@ -2357,8 +2353,8 @@ class PartitionedParquetMergeStore:
         # overhead audit, VERDICT r11 #7)
         touched = []
         if parts:
-            with ThreadPoolExecutor(
-                max_workers=min(self.write_concurrency, len(parts))
+            with op_pool(
+                spark, min(self.write_concurrency, len(parts))
             ) as pool:
                 futs = {
                     p: pool.submit(_compact_one, p) for p in sorted(parts)

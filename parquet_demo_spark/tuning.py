@@ -21,13 +21,27 @@ non-adaptive plan — one job per action instead of one per query stage
 is big or its size is unknown. The decision is made from measured
 bytes per operation, so the SAME code path keeps AQE + parallel
 shuffles on a 100 TB table and drops to the minimal plan for the tail
-of tiny maintenance commits every lakehouse accumulates. Wrong
-estimates are performance-neutral-to-suboptimal, never incorrect: the
-scope only changes partition counts and AQE staging, not semantics.
+of tiny maintenance commits every lakehouse accumulates.
 
-Threshold: ``SPARK_GRAFT_SMALL_PLAN_BYTES`` (default 64 MiB, the same
-class of dial as the bloom build's driver fast-path threshold); 0
-disables the scope entirely.
+The scope changes three things and no semantics: partition counts, AQE
+staging, and the WRITER of a store operation's staging writes (a batch
+written into a fresh private dir that no reader sees until a commit
+adopts it: ``sources/staging.py``). :func:`scoped_store_op` records its
+own decision for the operation's thread (:func:`small_op`); a staging
+write under a pinned scope is collected once with ``toArrow()`` and
+written from the driver by pyarrow, which skips a Spark file-write
+job's fixed cost, and any other staging write runs as a Spark job.
+Wrong estimates are performance-neutral-to-suboptimal, never
+incorrect: both writers produce files that read back identically.
+
+Threshold: ``SPARK_GRAFT_SMALL_PLAN_BYTES`` (default 64 MiB, the
+``autoBroadcastJoinThreshold`` ``session.get_spark`` pins, so by
+default the driver never collects a staged batch larger than Spark
+would broadcast); 0 disables the scope entirely.
+
+:func:`scoped_store_op` also names the operation's Spark jobs: their
+job description is ``<Class>.<method>``, on the pool threads
+(:func:`op_pool`) the operation fans its per-child work across too.
 """
 
 from __future__ import annotations
@@ -36,12 +50,17 @@ import functools
 import inspect
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_demo_spark.session import BROADCAST_BYTES
+
 _ENV = "SPARK_GRAFT_SMALL_PLAN_BYTES"
-_DEFAULT_BYTES = 64 * 1024 * 1024
+_DEFAULT_BYTES = BROADCAST_BYTES
+# the local property SparkContext.setJobDescription sets
+_DESC = "spark.job.description"
 
 # conf a small-input scope pins (saved/restored on exit):
 # - AQE off: no per-query-stage job materialization for plans whose
@@ -67,6 +86,9 @@ _saved: dict[str, str | None] = {}
 # a different session object (a streaming micro-batch clone), and the
 # last exit must restore where the first entry wrote
 _saved_spark: SparkSession | None = None
+# per thread: whether the innermost scoped store op running on it
+# pinned its small-plan scope (see small_op)
+_op = threading.local()
 
 
 def small_plan_threshold() -> int:
@@ -202,12 +224,46 @@ def scoped_store_op(batch_arg: str | None, spark_arg: str | None = None):
                 spark = SparkSession.getActiveSession()
             if spark is None:
                 return fn(self, *args, **kwargs)
-            with store_plan_scope(spark, self.root, batch):
-                return fn(self, *args, **kwargs)
+            sc = spark.sparkContext
+            desc = sc.getLocalProperty(_DESC)
+            sc.setJobDescription(f"{type(self).__name__}.{fn.__name__}")
+            outer = small_op()
+            try:
+                with store_plan_scope(spark, self.root, batch) as small:
+                    _op.small = small
+                    return fn(self, *args, **kwargs)
+            finally:
+                _op.small = outer
+                sc.setLocalProperty(_DESC, desc)
 
         return inner
 
     return deco
+
+
+def op_pool(spark: SparkSession, max_workers: int) -> ThreadPoolExecutor:
+    """A thread pool for a store operation's per-child work. A Spark
+    job description is a thread-local property, so each worker starts
+    with the calling thread's: the jobs it launches are named after the
+    operation too."""
+    sc = spark.sparkContext
+    return ThreadPoolExecutor(
+        max_workers,
+        initializer=sc.setLocalProperty,
+        initargs=(_DESC, sc.getLocalProperty(_DESC)),
+    )
+
+
+def small_op() -> bool:
+    """True when the innermost :func:`scoped_store_op` running on THIS
+    thread pinned its small-plan scope: the operation's measured input
+    is under the threshold, so its staging writes may be collected to
+    the driver. Per thread, never the process-wide :func:`scope_active`:
+    another thread's scope says nothing about this operation's size.
+    False outside any scoped operation, on a pool thread the operation
+    started, and under a streaming micro-batch session (which skips the
+    estimate, see :func:`store_plan_scope`)."""
+    return getattr(_op, "small", False)
 
 
 def scope_active() -> bool:

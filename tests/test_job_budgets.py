@@ -18,6 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_demo_spark.sources import staging
 from parquet_demo_spark.sources.mor_store import MergeOnReadStore
 from parquet_demo_spark.sources.partitioned_store import (
     PartitionedParquetMergeStore,
@@ -104,6 +105,98 @@ def test_mor_partitioned_bootstrap_and_empty_merge_are_one_job(
     empty = _batch(spark, DAYS, 2).filter(F.col("k") < 0)
     assert _jobs(spark, lambda: table.merge(empty)) == 1
     assert table.current_version() == 0
+
+
+@pytest.mark.parametrize("writer", ["arrow", "spark"])
+def test_mor_partitioned_merges_are_one_job_on_both_writers(
+    spark, tmp_path, monkeypatch, writer
+):
+    """The two budget tests above on each staging writer: a bootstrap,
+    merges touching 1, 2 and 5 children and an empty batch are one job
+    each, and each adopted dir is one file. The Spark writer runs under
+    the same pinned small-plan scope, as for a batch whose schema the
+    Arrow writer does not take."""
+    arrow_dirs = []
+    write_arrow = staging._write_arrow
+    monkeypatch.setattr(
+        staging,
+        "_write_arrow",
+        lambda df, path, by: arrow_dirs.append(path)
+        or write_arrow(df, path, by),
+    )
+    if writer == "spark":
+        monkeypatch.setattr(staging, "_arrow_exact", lambda dt: False)
+    table = PartitionedParquetMergeStore(
+        str(tmp_path / "t"),
+        keys=("day", "k"),
+        partition_col="day",
+        version_cols=("v",),
+        num_buckets=2,
+        child_store="mor",
+    )
+    assert _jobs(spark, lambda: table.merge(_batch(spark, DAYS, 1))) == 1
+    assert _adopted_files(table, DAYS) == [1] * len(DAYS)
+    for v, touched in enumerate((1, 2, 5), start=2):
+        days = DAYS[:touched]
+        assert _jobs(spark, lambda: table.merge(_batch(spark, days, v))) == 1
+        assert _adopted_files(table, days) == [1] * touched
+    empty = _batch(spark, DAYS, 9).filter(F.col("k") < 0)
+    assert _jobs(spark, lambda: table.merge(empty)) == 1
+    assert table.current_version() == 3
+    assert len(arrow_dirs) == (5 if writer == "arrow" else 0)
+    got = table.read(spark).groupBy("day").agg(F.max("v").alias("v"))
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (d, 4) for d in DAYS[:5]
+    ] + [("d5", 1)]
+
+
+@pytest.mark.parametrize("touched", [2, 5])
+def test_cow_partitioned_merge_reads_slices_without_footer_jobs(
+    spark, tmp_path, touched
+):
+    """A multi-partition copy-on-write merge is the routing collect, the
+    staged write and two jobs per touched child (the read of its touched
+    buckets and their rewrite). Each child reads its staged slice under
+    the batch's own schema, so the slice costs no footer-inference
+    job."""
+    table = _table(spark, tmp_path / "t")
+    days = DAYS[:touched]
+    assert (
+        _jobs(spark, lambda: table.merge(_batch(spark, days, 2)))
+        == 2 + 2 * touched
+    )
+    got = table.read(spark).filter(F.col("v") == 2)
+    assert sorted((r.day, r.k) for r in got.collect()) == [
+        (d, k) for d in days for k in range(5)
+    ]
+
+
+@pytest.mark.parametrize("child_store", ["mor", "cow"])
+def test_store_op_jobs_carry_its_description(spark, tmp_path, child_store):
+    """Every job of a partitioned merge, those its per-child pool
+    threads launch included, is described ``<Class>.<method>``, and the
+    caller's own description is back afterwards."""
+    table = _table(spark, tmp_path / "t", child_store)
+    sc = spark.sparkContext
+    sched = sc._jsc.sc().dagScheduler()
+    sc.setJobDescription("caller")
+    try:
+        before = int(sched.nextJobId())
+        table.merge(_batch(spark, DAYS[:2], 2))
+        after = int(sched.nextJobId())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    # PySpark's StatusTracker has no job description: read the JVM
+    # status store once its listener has caught up
+    jvm = sc._jsc.sc()
+    jvm.listenerBus().waitUntilEmpty()
+    descs = {
+        jvm.statusStore().job(j).description().getOrElse(None)
+        for j in range(before, after)
+    }
+    assert after > before
+    assert descs == {"PartitionedParquetMergeStore.merge"}
 
 
 @pytest.mark.parametrize("child_store", ["cow", "mor"])
