@@ -28,11 +28,12 @@ staging, and the WRITER of a store operation's staging writes (a batch
 written into a fresh private dir that no reader sees until a commit
 adopts it: ``sources/staging.py``). :func:`scoped_store_op` records its
 own decision for the operation's thread (:func:`small_op`); a staging
-write under a pinned scope is collected once with ``toArrow()`` and
-written from the driver by pyarrow, which skips a Spark file-write
-job's fixed cost, and any other staging write runs as a Spark job.
-Wrong estimates are performance-neutral-to-suboptimal, never
-incorrect: both writers produce files that read back identically.
+write under a pinned scope whose column types read back exactly is
+collected once with ``toArrow()`` and written from the driver by
+pyarrow, which skips a Spark file-write job's fixed cost, and any other
+staging write runs as a Spark job. Wrong estimates are
+performance-neutral-to-suboptimal, never incorrect: both writers
+produce files that read back identically.
 
 Threshold: ``SPARK_GRAFT_SMALL_PLAN_BYTES`` (default 64 MiB, the
 ``autoBroadcastJoinThreshold`` ``session.get_spark`` pins, so by
@@ -205,6 +206,11 @@ def scoped_store_op(batch_arg: str | None, spark_arg: str | None = None):
     the store itself, e.g. compact); ``spark_arg`` names an explicit
     SparkSession parameter when there is no batch to derive it from.
     With neither resolvable the method runs unscoped — never an error.
+
+    A scoped call records its decision for :func:`small_op` and sets the
+    job description ``<Class>.<method>`` on its thread; both are
+    restored on exit, so a nested store op names and sizes only its own
+    jobs.
     """
 
     def deco(fn):

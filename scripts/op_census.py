@@ -40,17 +40,6 @@ KINDS = ("merge_recent", "merge_scatter", "delete_where", "read",
 CDC_SPAN = 3  # changes_between reads the last few versions, as in the benchmark
 
 
-def covered(intervals, lo: float, hi: float) -> float:
-    """Length of the union of ``intervals`` clipped to [lo, hi]."""
-    total, end = 0.0, lo
-    for a, b in sorted(intervals):
-        a, b = max(a, end), min(b, hi)
-        if b > a:
-            total += b - a
-            end = b
-    return total
-
-
 def job_intervals(spark, first: int, last: int) -> dict[int, tuple[float, float]]:
     """{job id: (submit, complete) in epoch seconds} for ids in [first, last)."""
     jsc = spark.sparkContext._jsc.sc()
@@ -78,6 +67,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
     import gen
     import run as bench
+    from census import covered
     from pyspark.sql import functions as F
 
     from parquet_demo_spark.session import get_spark

@@ -16,6 +16,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 import os
+import threading
 from decimal import Decimal
 
 import pytest
@@ -25,7 +26,7 @@ from parquet_demo_spark.sources import staging
 from parquet_demo_spark.sources.partitioned_store import (
     PartitionedParquetMergeStore,
 )
-from parquet_demo_spark.tuning import small_op
+from parquet_demo_spark.tuning import scoped_store_op, small_op
 
 DDL = (
     "day string, k bigint, v bigint, dsmall decimal(9,2), "
@@ -217,8 +218,6 @@ def test_store_ops_give_equal_rows_on_both_writers(
 def test_small_op_is_per_thread(spark, tmp_path):
     """A scoped store op sees its own decision; a thread it starts does
     not inherit it, and outside every op it is False."""
-    import threading
-
     seen = {}
 
     class Probe:
@@ -232,9 +231,8 @@ def test_small_op_is_per_thread(spark, tmp_path):
             seen["op"] = small_op()
             t = threading.Thread(target=self._thread)
             t.start()
-            t.join()
-
-    from parquet_demo_spark.tuning import scoped_store_op
+            t.join(timeout=60)
+            assert not t.is_alive()
 
     Probe.op = scoped_store_op("batch")(Probe.op)
     Probe().op(spark.range(3))
